@@ -118,6 +118,39 @@ def batch_part_stats(
     return {int(r[PART_COL]): r.asDict() for r in rows}
 
 
+def local_part_stats(table: IcehouseTable, rows) -> dict[int, dict] | None:
+    """Driver-side twin of :func:`batch_part_stats` for a change batch the
+    caller already holds: ``rows`` are ``(lsn, op, key)`` tuples, bucketed
+    with the xxhash64 twin (``functions/keys.py:bucket_for_key``) — no
+    Spark job.  Returns ``None`` when a key has no driver-side hash (an
+    unsupported key type, or a NULL key); the caller then falls back to
+    :func:`batch_part_stats`.  Counting follows the Spark aggregate: an
+    ``op`` of ``'D'`` is a delete, any other non-NULL op an upsert."""
+    from ..functions.keys import bucket_for_key
+
+    tname = table.schema[table.key_col].dataType.simpleString()
+    out: dict[int, dict] = {}
+    for lsn, op, key in rows:
+        try:
+            b = bucket_for_key(key, tname, table.n_buckets)
+        except TypeError:
+            return None
+        s = out.get(b)
+        if s is None:
+            s = out[b] = {
+                PART_COL: b, "lsn_min": lsn, "lsn_max": lsn,
+                "events_deleted": 0, "events_upserted": 0,
+            }
+        else:
+            s["lsn_min"] = min(s["lsn_min"], lsn)
+            s["lsn_max"] = max(s["lsn_max"], lsn)
+        if op == "D":
+            s["events_deleted"] += 1
+        elif op is not None:
+            s["events_upserted"] += 1
+    return out
+
+
 def _lineage_of(stats: dict[int, dict]) -> dict:
     """Reshape batch_part_stats output into the per-partition lineage-record
     extras the table commit paths persist (single definition site: the

@@ -252,6 +252,20 @@ def _bpe_apply_arrow_kernel(merges: list[dict], tokens_col: str, schema):
     max_table_id = int(max(new_ids.max(), lefts.max(), rights.max())) if len(merges) else 0
 
     col_idx = [f.name for f in schema.fields].index(tokens_col)
+    # output ids take the tokens column's own element width: input tokens
+    # already fit it, so only a merge's new id can overflow — reject that
+    # up front instead of letting the cast wrap it silently
+    elem = getattr(schema[tokens_col].dataType, "elementType", None)
+    elem_name = elem.simpleString() if elem is not None else "int"
+    out_dtype = {
+        "tinyint": np.int8, "smallint": np.int16, "int": np.int32, "bigint": np.int64,
+    }.get(elem_name, np.int32)
+    if len(merges) and int(new_ids.max()) > np.iinfo(out_dtype).max:
+        raise ValueError(
+            f"bpe_apply: merge new_id {int(new_ids.max())} does not fit the "
+            f"{tokens_col!r} element type {elem_name}; widen the "
+            "tokens column (e.g. array<bigint>) or lower new_id_start"
+        )
 
     def kernel(batches):
         for pdf in batches:
@@ -334,7 +348,7 @@ def _bpe_apply_arrow_kernel(merges: list[dict], tokens_col: str, schema):
                 if a is None:
                     out.append(None)
                 else:
-                    out.append(flat[bounds[i] : seps[i]].astype(np.int32))
+                    out.append(flat[bounds[i] : seps[i]].astype(out_dtype))
             pdf = pdf.copy(deep=False)
             pdf[pdf.columns[col_idx]] = pd.Series(out, index=pdf.index, dtype=object)
             yield pdf

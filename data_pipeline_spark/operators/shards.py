@@ -20,6 +20,7 @@ parallelism level, and the bytes are deterministic for a given order key.
 
 from __future__ import annotations
 
+import decimal
 import json
 import os
 import time
@@ -32,6 +33,7 @@ from pyspark.sql import functions as F
 __all__ = [
     "append_training_shards",
     "assign_training_shards",
+    "last_exported_key",
     "read_shard_manifest",
     "shard_summary",
     "write_training_shards",
@@ -41,14 +43,13 @@ __all__ = [
 def _canon_key(v):
     """Normalize an order-key value to a form that compares consistently
     with itself after a JSON round-trip (the manifest is JSON): ints /
-    floats / strs as-is, temporal values and Decimals as ISO strings /
-    numbers whose order matches the original type's order.  Raises on
+    floats / strs as-is, temporal values as ISO strings, Decimals as
+    ints / floats, or decimal strings when a float would round them.  Raises on
     types with no canonically comparable JSON form — the append-only
     contract check must never fall back to guessing (lexicographic
     ``str()`` comparison would accept '10' <= '9').  Mirrors
     ``icehouse._stat_json``'s normalization rules."""
     import datetime
-    import decimal
 
     if v is None:
         return None
@@ -58,7 +59,14 @@ def _canon_key(v):
         return v.isoformat()  # lexicographic == chronological
     if isinstance(v, decimal.Decimal):
         i = int(v)
-        return i if v == i else float(v)
+        if v == i:
+            return i
+        # a float stands in only when it reads back as the same decimal;
+        # past float precision the key is kept as its exact decimal string
+        # (append reads every stored form back as a Decimal:
+        # :func:`last_exported_key`)
+        f = float(v)
+        return f if decimal.Decimal(repr(f)) == v else str(v)
     if isinstance(v, (int, float, str)):
         return v
     raise TypeError(
@@ -291,6 +299,17 @@ def read_shard_manifest(path: str) -> dict[str, Any]:
         return json.load(f)
 
 
+def last_exported_key(manifest: dict[str, Any], decimal_keys: bool = False):
+    """The largest ``last_key`` of a shard manifest (``None`` when it has no
+    keyed shard).  ``decimal_keys``: the order column is a decimal, whose
+    keys are stored as ints, floats or decimal strings (:func:`_canon_key`)
+    — read them all back as exact ``Decimal`` values before comparing."""
+    keys = [s["last_key"] for s in manifest["shards"] if s["last_key"] is not None]
+    if decimal_keys:
+        keys = [decimal.Decimal(str(k)) for k in keys]
+    return max(keys, default=None)
+
+
 def append_training_shards(
     df_new: DataFrame,
     path: str,
@@ -329,15 +348,23 @@ def append_training_shards(
             + f" n_tokens but tokens_col={tokens_col!r} — appending would "
             "leave the dataset-level totals wrong for integrity checks"
         )
-    prev_shards = manifest["shards"]
-    last_key = max((s["last_key"] for s in prev_shards), default=None)
-
     probe = df_new.agg(
-        F.count(F.lit(1)).alias("n"), F.min(order_col).alias("lo")
+        F.count(F.lit(1)).alias("n"),
+        F.count(order_col).alias("n_keyed"),
+        F.min(order_col).alias("lo"),
     ).collect()[0]
     if probe["n"] == 0:
         return manifest
-    lo = _canon_key(probe["lo"])
+    if probe["n_keyed"] < probe["n"]:
+        raise ValueError(
+            f"append found {probe['n'] - probe['n_keyed']} rows with a NULL "
+            f"{order_col}: the order column must be a non-null unique key"
+        )
+    if isinstance(probe["lo"], decimal.Decimal):
+        # exact: no float rounding on either side
+        lo, last_key = probe["lo"], last_exported_key(manifest, decimal_keys=True)
+    else:
+        lo, last_key = _canon_key(probe["lo"]), last_exported_key(manifest)
     if last_key is not None and isinstance(lo, str) != isinstance(last_key, str):
         # a legacy manifest serialized a non-JSON key type via str() — a
         # lexicographic compare against it can both falsely accept a
@@ -427,7 +454,7 @@ def append_training_shards(
         shutil.rmtree(d, ignore_errors=True)
 
     out = dict(manifest)
-    out["shards"] = prev_shards + summary
+    out["shards"] = manifest["shards"] + summary
     out["n_shards"] = len(out["shards"])
     out["n_rows"] = manifest["n_rows"] + sum(s["n_rows"] for s in summary)
     if tokens_col is not None and "n_tokens" in manifest:

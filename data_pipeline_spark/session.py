@@ -12,6 +12,13 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# Largest change set / key list the engine handles on the driver: literal
+# key lists up to this size become an IN predicate instead of a semi join
+# (read_for_keys), and matview / secondary-index refreshes whose changed rows
+# fit under it collect them and skip the Spark jobs that only re-derive what
+# the driver already holds.  The parquet IN-pushdown threshold below is set
+# to the same value so every inlined list stays an exact pushed filter.
+SMALL_BATCH_ROWS = 1000
 
 
 def _gc_threads(master: str) -> int:
@@ -99,9 +106,10 @@ def get_spark(
         # predicate reaching the parquet reader as exact membership.  Above
         # this threshold Spark degrades IN to a [min,max] range check, which
         # prunes nothing for hash-scattered keys — raise it to the literal
-        # cap used by read_for_keys/matview (1000) so row-group dictionary /
-        # bloom evaluation stays exact for every key set we ever inline.
-        .config("spark.sql.parquet.pushdown.inFilterThreshold", "1000")
+        # cap used by read_for_keys/matview (SMALL_BATCH_ROWS) so row-group
+        # dictionary / bloom evaluation stays exact for every key set we
+        # ever inline.
+        .config("spark.sql.parquet.pushdown.inFilterThreshold", str(SMALL_BATCH_ROWS))
     )
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir:

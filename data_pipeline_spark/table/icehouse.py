@@ -64,6 +64,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import SMALL_BATCH_ROWS
+
 PART_COL = "_part"  # physical bucket-partition column (not part of the logical schema)
 LSN_COL = "_lsn"  # per-row LSN watermark: the change event that produced this row
 DELETED_COL = "_deleted"  # tombstone marker (row filtered out of reads)
@@ -73,6 +75,31 @@ DELETED_COL = "_deleted"  # tombstone marker (row filtered out of reads)
 # LSN order (late replay, out-of-order micro-batch) can never clobber newer
 # table state — the per-key winner is always max(_lsn).  Tombstones are
 # reclaimed by ``vacuum_tombstones`` once every source is past their LSN.
+
+
+def _key_in(spark: SparkSession, col: str, data_type: T.DataType, values: list) -> F.Column:
+    """``col IN (values)`` built in O(1) py4j calls for string keys.
+
+    ``Column.isin`` converts every literal through its own py4j round trips
+    (~3 per value — most of a small point read's planning time at a few
+    hundred keys); one SQL ``IN (...)`` expression parses to the same
+    ``In``/``InSet`` predicate and pushes into the parquet scan as the same
+    ``In`` filter.  String literals are escaped for the default
+    backslash-escaping parser.  Non-string keys, keys containing ``$`` (the
+    SQL parser substitutes ``${var}`` references inside string literals
+    before lexing them), and a session that turned escape processing off
+    (``spark.sql.parser.escapedStringLiterals``) keep ``isin``."""
+    if (
+        not isinstance(data_type, T.StringType)
+        or not all(isinstance(v, str) and "$" not in v for v in values)
+        or spark.conf.get("spark.sql.parser.escapedStringLiterals", "false").lower() == "true"
+    ):
+        return F.col(col).isin(values)
+    lits = ", ".join(
+        "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in values
+    )
+    return F.expr("`" + col.replace("`", "``") + f"` IN ({lits})")
+
 
 # ---------------------------------------------------------------------------
 # schema evolution rules (additive only)
@@ -1018,9 +1045,13 @@ class IcehouseTable:
         pruning a key-value consumer relies on (vs scanning the full table).
 
         ``keys``: a one-column DataFrame or a Python list of key values.
-        The bucket set is computed with a keys-sized Spark job (the bucket
-        hash lives JVM-side), then partitions are pruned driver-side.
+        For a DataFrame the bucket set is computed with a keys-sized Spark
+        job (the bucket hash lives JVM-side).  A list of supported key type
+        is bucketed driver-side by the xxhash64 twin, and up to
+        ``SMALL_BATCH_ROWS`` literals filter through a pushed-down IN
+        instead of a semi join.
         """
+        key_type = self.schema[self.key_col].dataType
         literal_keys: list | None = None
         if not isinstance(keys, DataFrame):
             # None keys can match nothing (the key column is non-null by
@@ -1034,11 +1065,14 @@ class IcehouseTable:
                 literal_keys = list(non_null)
             if not literal_keys:
                 return self.read(spark).limit(0)
-            keys = spark.createDataFrame(
+
+        def keys_df() -> DataFrame:
+            df = keys if literal_keys is None else spark.createDataFrame(
                 [(k,) for k in literal_keys],
-                T.StructType([T.StructField(self.key_col, self.schema[self.key_col].dataType)]),
+                T.StructType([T.StructField(self.key_col, key_type)]),
             )
-        keys = keys.select(F.col(keys.columns[0]).alias(self.key_col)).distinct()
+            return df.select(F.col(df.columns[0]).alias(self.key_col)).distinct()
+
         buckets = None
         if literal_keys is not None:
             # bucket ids driver-side via the bit-equality-tested xxhash64
@@ -1046,7 +1080,7 @@ class IcehouseTable:
             # (the fixed cost that dominated small maintenance refreshes)
             from ..functions.keys import bucket_for_key
 
-            tname = self.schema[self.key_col].dataType.simpleString()
+            tname = key_type.simpleString()
             try:
                 buckets = sorted(
                     {bucket_for_key(k, tname, self.n_buckets) for k in literal_keys}
@@ -1056,9 +1090,9 @@ class IcehouseTable:
         if buckets is None:
             buckets = [
                 r["b"]
-                for r in keys.select(self.bucket_expr().alias("b")).distinct().collect()
+                for r in keys_df().select(self.bucket_expr().alias("b")).distinct().collect()
             ]
-        if literal_keys is not None and len(literal_keys) <= 1000:
+        if literal_keys is not None and len(literal_keys) <= SMALL_BATCH_ROWS:
             # literal IN predicate instead of a semi join: it pushes into the
             # parquet scan, where per-file min/max on the sorted key column,
             # dictionary filtering, and (with write.bloom.columns) row-group
@@ -1069,9 +1103,9 @@ class IcehouseTable:
             # whose key range can hold a requested key (files are
             # key-sorted, so that is ~one file per key per bucket).
             pruned = self.read(spark, partitions=buckets, key_literals=literal_keys)
-            return pruned.where(F.col(self.key_col).isin(literal_keys))
+            return pruned.where(_key_in(spark, self.key_col, key_type, literal_keys))
         pruned = self.read(spark, partitions=buckets)
-        return pruned.join(F.broadcast(keys), self.key_col, "left_semi")
+        return pruned.join(F.broadcast(keys_df()), self.key_col, "left_semi")
 
     def row_count(self) -> int:
         """PHYSICAL row count from metadata (base + delta files).  With

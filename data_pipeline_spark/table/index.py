@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import SMALL_BATCH_ROWS
 from .icehouse import DELETED_COL, LSN_COL, IcehouseTable
 
 __all__ = ["SecondaryIndex", "create_index", "open_index"]
@@ -137,7 +138,7 @@ class SecondaryIndex:
         becomes one bucket-pruned point read of those keys' CURRENT rows
         (present → upsert at lsn=base.version, absent → delete), with no
         dependence on feed ordering at all."""
-        from ..cdc.apply import apply_changes
+        from ..cdc.apply import apply_changes, local_part_stats
 
         self.index = self.index.refresh()
         base = IcehouseTable.load(self.base_root)
@@ -156,6 +157,7 @@ class SecondaryIndex:
         ordinal = (
             max(self._meta_lsn_high(self.index), self._meta_lsn_high(base), wm) + 1
         )
+        part_stats = rescan = None
         if changed_keys is not None:
             keys = changed_keys.select(
                 F.col(changed_keys.columns[0]).alias(base.key_col)
@@ -176,38 +178,59 @@ class SecondaryIndex:
                 F.lit(None).cast(base.schema[self.column].dataType).alias(self.column),
             )
             batch = ups.unionByName(dels)
-            feed = None
+            # Advance ONLY as far as the caller ATTESTS its key set covers
+            # (``covered_lsn_high`` — e.g. the max LSN of the micro-batch
+            # whose keys were passed).  The base's own metadata lsn-high
+            # would be unsafe here: a concurrent writer's commit can land
+            # between the caller computing its key set and this refresh
+            # loading the snapshot, and jumping the watermark past those
+            # UNCOVERED changes would silently desynchronize the index
+            # forever.  With the attested bound, anything above stays
+            # visible to the next feed refresh — the self-healing property
+            # is preserved, while a per-batch maintainer still keeps later
+            # feed refreshes O(delta) instead of O(full history).
+            new_wm = covered_lsn_high
         else:
             feed = base.read_changed_since(spark, wm)
-            batch = feed.select(
-                F.lit(ordinal).cast("long").alias("lsn"),
-                F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit("D"))
-                .otherwise(F.lit("U"))
-                .alias("op"),
-                F.col(base.key_col),
-                F.col(self.column),
-            )
+            # one slim collect: a per-epoch poll's feed fits on the driver,
+            # so the batch, its part stats and the next watermark all come
+            # from the rows in hand instead of two more scans of the feed
+            head = feed.select(
+                base.key_col, self.column, DELETED_COL, LSN_COL
+            ).limit(SMALL_BATCH_ROWS + 1).collect()
+            if len(head) <= SMALL_BATCH_ROWS:
+                rows = [(ordinal, "D" if r[2] else "U", r[0], r[1]) for r in head]
+                batch = spark.createDataFrame(
+                    rows,
+                    T.StructType(
+                        [
+                            T.StructField("lsn", T.LongType()),
+                            T.StructField("op", T.StringType()),
+                            T.StructField(base.key_col, base.schema[base.key_col].dataType),
+                            T.StructField(self.column, base.schema[self.column].dataType),
+                        ]
+                    ),
+                )
+                part_stats = local_part_stats(self.index, [r[:3] for r in rows])
+                new_wm = max((r[3] for r in head), default=None)
+            else:
+                batch = feed.select(
+                    F.lit(ordinal).cast("long").alias("lsn"),
+                    F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit("D"))
+                    .otherwise(F.lit("U"))
+                    .alias("op"),
+                    F.col(base.key_col),
+                    F.col(self.column),
+                )
+                rescan = feed
         stats = apply_changes(
-            self.index, batch, epoch=base.version, epoch_source=ns
+            self.index, batch, epoch=base.version, epoch_source=ns,
+            part_stats=part_stats,
         )
         self.index = self.index.refresh()
         if not stats.result.skipped:
-            if feed is not None:
-                new_wm = feed.agg(F.max(LSN_COL).alias("m")).collect()[0]["m"]
-            else:
-                # Advance ONLY as far as the caller ATTESTS its key set
-                # covers (``covered_lsn_high`` — e.g. the max LSN of the
-                # micro-batch whose keys were passed).  The base's own
-                # metadata lsn-high would be unsafe here: a concurrent
-                # writer's commit can land between the caller computing its
-                # key set and this refresh loading the snapshot, and
-                # jumping the watermark past those UNCOVERED changes would
-                # silently desynchronize the index forever.  With the
-                # attested bound, anything above stays visible to the next
-                # feed refresh — the self-healing property is preserved,
-                # while a per-batch maintainer still keeps later feed
-                # refreshes O(delta) instead of O(full history).
-                new_wm = covered_lsn_high
+            if rescan is not None:
+                new_wm = rescan.agg(F.max(LSN_COL).alias("m")).collect()[0]["m"]
             if new_wm is not None and new_wm > wm:
                 # watermark is a pure scan-cost optimization: a crash before
                 # this commit just re-reads a wider feed next time (the LWW

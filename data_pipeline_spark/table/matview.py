@@ -42,9 +42,11 @@ path.
 
 Scale shape: no global shuffle ever touches the base table.  One changed-
 since scan (file-skipped), two bucket-pruned point reads, one groupBy of
-the (small) changed-row set, one keyed MERGE into the view.  Measures are
-fixed-point BIGINT so increments are exact and order-independent — a float
-sum would drift from a from-scratch recompute and fail the oracle.
+the (small) changed-row set, one keyed MERGE into the view — and when the
+change set and the affected view buckets are small, the MERGE runs on the
+driver.  Measures are fixed-point BIGINT so increments are exact and
+order-independent — a float sum would drift from a from-scratch recompute
+and fail the oracle.
 """
 
 from __future__ import annotations
@@ -56,8 +58,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .icehouse import CommitResult, IcehouseTable
-from ..cdc.apply import ApplyStats, apply_changes
+from .icehouse import (
+    DELETED_COL,
+    LSN_COL,
+    PART_COL,
+    CommitConflictError,
+    CommitResult,
+    ConcurrentCommitError,
+    IcehouseTable,
+)
+from ..cdc.apply import ApplyStats, _lineage_of, apply_changes, local_part_stats
+from ..functions.keys import bucket_for_key
+from ..session import SMALL_BATCH_ROWS
 
 GROUP_KEY_COL = "group_key"
 _REFRESH_NS = "mv-refresh"
@@ -261,26 +273,17 @@ def _apply_view_delta(
     group_cols: list[str],
     base_version: int,
     measures: list[str],
-    candidate_keys: DataFrame | None = None,
 ) -> ApplyStats:
     """MERGE a signed per-group delta into the view: point-read the affected
     groups' current aggregates (bucket-pruned through the view's own key
     addressing), add, and upsert — groups whose row count reaches 0 become
     tombstones, so a fully-retracted group disappears from the view exactly
     as it would from a re-aggregate.  An EMPTY delta commits nothing; the
-    caller advances the refresh floor instead (see
-    :func:`_last_refreshed_version`).
-
-    ``candidate_keys``: an optional cheap-to-evaluate SUPERSET of the
-    delta's group keys (e.g. derived from locally-collected change rows) —
-    point-reading the superset avoids materializing the delta just to
-    learn which buckets to prune (extra groups read a few spare aggregate
-    rows; the left_outer join below ignores them)."""
+    refresh floor advances instead (see :func:`_finish_refresh`)."""
     spark = delta.sparkSession
     delta = delta.persist()
     try:
-        probe = candidate_keys if candidate_keys is not None else delta.select(GROUP_KEY_COL)
-        current = mv.read_for_keys(spark, probe)
+        current = mv.read_for_keys(spark, delta.select(GROUP_KEY_COL))
         cur = current.select(
             GROUP_KEY_COL, *[F.col(m).alias(f"_cur_{m}") for m in measures]
         )
@@ -302,13 +305,138 @@ def _apply_view_delta(
         stats = apply_changes(mv, changes, epoch=base_version, epoch_source=_REFRESH_NS)
     finally:
         delta.unpersist()
+    _finish_refresh(mv, base_version)
+    return stats
+
+
+def _finish_refresh(mv: IcehouseTable, base_version: int) -> None:
+    """Reload the view after a refresh's merge.  When the delta was empty
+    (nothing committed), record the advance as a pure-metadata floor bump
+    so the next refresh's changed-since window starts here."""
     mv.refresh()
     if not mv.epoch_committed(base_version, _REFRESH_NS):
-        # the delta was empty (apply_changes skips a no-row batch without
-        # committing) — record the advance as a pure-metadata floor bump so
-        # the next refresh's changed-since window starts here
         mv.update_properties({"mv.refreshed_floor": base_version})
-    return stats
+
+
+def _held_rows(t: IcehouseTable, buckets: list[int]) -> int:
+    """Physical rows (base + pending deltas) the manifest records for
+    ``buckets`` — metadata only."""
+    parts, deltas = t.meta["partitions"], t.meta.get("deltas", {})
+    return sum(
+        parts.get(str(b), {}).get("rows", 0)
+        + sum(d["rows"] for d in deltas.get(str(b), []))
+        for b in buckets
+    )
+
+
+def _commit_local_delta(
+    spark: SparkSession,
+    mv: IcehouseTable,
+    delta_df: DataFrame | None,
+    group_cols: list[str],
+    measures: list[str],
+    base_version: int,
+) -> CommitResult:
+    """Collect a small signed delta (one row per affected group:
+    ``group_key, *group_cols, *measures``; ``None`` for no change) and fold
+    it into the view — the same merged rows and the same fenced commit as
+    :func:`_apply_view_delta`, built on the driver.  The merge is keyed by
+    the ``group_key`` JSON string, so group columns of any type (arrays,
+    maps) work.  Finishes the refresh (:func:`_finish_refresh`).
+
+    The driver rewrite runs only when the manifest says the affected view
+    buckets hold at most ``SMALL_BATCH_ROWS`` physical rows: those buckets
+    are read whole (with their ``_lsn``/tombstones) in one collect,
+    rewritten with the LWW rule of :func:`apply_changes` and committed by
+    ``overwrite_partitions`` — no batch-stats, merge or join jobs.  A
+    concurrent commit to those buckets rebuilds from a fresh read.  Larger
+    buckets take :func:`_apply_view_delta` on a local frame of the
+    collected delta."""
+    delta = [] if delta_df is None else delta_df.collect()
+    keys = [r[GROUP_KEY_COL] for r in delta]
+    buckets = sorted({bucket_for_key(k, "string", mv.n_buckets) for k in keys})
+    if not delta:
+        # nothing to commit: the refresh floor advances instead
+        _finish_refresh(mv, base_version)
+        return CommitResult(mv.version, mv.meta["snapshot_id"], base_version)
+    if _held_rows(mv, buckets) > SMALL_BATCH_ROWS:
+        return _apply_view_delta(
+            mv, spark.createDataFrame(delta, delta_df.schema), group_cols,
+            base_version, measures,
+        ).result
+    n_group = len(group_cols)
+    schema = T.StructType(
+        [
+            *mv.schema.fields,
+            T.StructField(LSN_COL, T.LongType()),
+            T.StructField(DELETED_COL, T.BooleanType()),
+            T.StructField(PART_COL, T.IntegerType()),
+        ]
+    )
+    for _attempt in range(5):
+        read_version = mv.version
+        held = mv.read(
+            spark, partitions=buckets, with_part_col=True, with_meta=True
+        ).collect()
+        current = {r[GROUP_KEY_COL]: r for r in held if not r[DELETED_COL]}
+        changes = []
+        for d in delta:
+            cur = current.get(d[GROUP_KEY_COL])
+            merged = [
+                (0 if cur is None else cur[m] or 0) + d[m] for m in measures
+            ]
+            changes.append(
+                (
+                    base_version,
+                    "D" if merged[0] <= 0 else "U",
+                    d[GROUP_KEY_COL],
+                    *d[1 : 1 + n_group],
+                    *merged,
+                )
+            )
+        part_stats = local_part_stats(mv, [c[:3] for c in changes])
+        # the rewritten buckets: every held row (survivors keep their
+        # _lsn/_deleted, normalized as apply_changes' base read does),
+        # then each changed group's new row where it wins by _lsn
+        out = {
+            r[GROUP_KEY_COL]: (
+                *r[: len(mv.schema)],
+                -1 if r[LSN_COL] is None else r[LSN_COL],
+                bool(r[DELETED_COL]),
+                r[PART_COL],
+            )
+            for r in held
+        }
+        for c in changes:
+            prev = out.get(c[2])
+            if prev is None or prev[-3] <= base_version:
+                out[c[2]] = (
+                    *c[2:], base_version, c[1] == "D",
+                    bucket_for_key(c[2], "string", mv.n_buckets),
+                )
+        try:
+            result = mv.overwrite_partitions(
+                spark.createDataFrame(list(out.values()), schema),
+                epoch=base_version,
+                epoch_source=_REFRESH_NS,
+                affected_partitions=buckets,
+                read_version=read_version,
+                lineage_extra=_lineage_of(part_stats),
+            )
+            break
+        except CommitConflictError:
+            mv.refresh()
+            if mv.epoch_committed(base_version, _REFRESH_NS):
+                result = CommitResult(
+                    mv.version, mv.meta["snapshot_id"], base_version, skipped=True
+                )
+                break
+    else:
+        raise ConcurrentCommitError(
+            f"view refresh lost 5 consecutive snapshot-conflict races on {mv.root}"
+        )
+    _finish_refresh(mv, base_version)
+    return result
 
 
 def _signed_delta(
@@ -329,14 +457,6 @@ def _signed_delta(
     u = retract_rows.select(*cols).withColumn("_sign", F.lit(-1)).unionByName(
         add_rows.select(*cols).withColumn("_sign", F.lit(1))
     )
-    return _signed_agg(u, group_cols, value_cols, scale)
-
-
-def _signed_agg(
-    u: DataFrame, group_cols: list[str], value_cols: list[str], scale: int
-) -> DataFrame:
-    """The single-shuffle aggregation of a ``_sign``-tagged row union (see
-    :func:`_signed_delta`)."""
     names = _measures(value_cols)
     aggs = [F.sum("_sign").cast("long").alias(names[0])]
     for i, c in enumerate(value_cols):
@@ -407,12 +527,15 @@ def refresh_matview(
     refreshes of the same version are no-ops and the watermark can never
     run ahead of the applied data.
 
-    Small deltas (≤1000 changed rows — the per-epoch poll shape) take a
-    FAST PATH: one slim, file-skipped collect of the changed winners
-    (group/value columns only), the add side built driver-side, the
-    retract side a literal-IN bucket/bloom-pruned point read, and the net
-    delta one single-shuffle signed aggregation — ~2 scheduled jobs of
-    pre-merge overhead instead of the former ~6.
+    Small deltas (≤ ``SMALL_BATCH_ROWS`` changed rows — the per-epoch
+    poll shape) take a FAST PATH that keeps the change set on the driver:
+    one slim, file-skipped collect of the changed winners, one collect of
+    the signed per-group delta (add side a local frame, retract side a
+    literal-IN bucket/bloom-pruned point read), then the view merge and
+    its fenced commit built driver-side (:func:`_commit_local_delta`).  On
+    a MOR base with 8 view buckets that is 8 Spark jobs (AQE runs each
+    shuffle stage as its own job) where the Spark-side merge ran 24
+    (tests/test_small_batch_refresh.py pins the budget).
 
     AUTO-CROSSOVER (``auto_full_ratio``): when the changed-row count
     exceeds ``auto_full_ratio × base physical rows`` (and the delta is
@@ -489,8 +612,8 @@ def refresh_matview(
             F.col(changed_keys.columns[0]).alias(key)
         ).distinct().persist()
         try:
-            lit_keys = [r[0] for r in changed.limit(1001).collect()]
-            point_keys = lit_keys if len(lit_keys) <= 1000 else changed
+            lit_keys = [r[0] for r in changed.limit(SMALL_BATCH_ROWS + 1).collect()]
+            point_keys = lit_keys if len(lit_keys) <= SMALL_BATCH_ROWS else changed
             delta = _signed_delta(
                 prior.read_for_keys(spark, point_keys),
                 base.read_for_keys(spark, point_keys),
@@ -512,53 +635,40 @@ def refresh_matview(
     feed = base.read_changed_since(spark, w0).select(
         key, "_deleted", *[c for c in need_cols if c != key]
     )
-    head = feed.limit(1001).collect()  # one file-skipped, column-pruned job
-    if len(head) <= 1000:
-        # FAST PATH: the whole delta fits in hand.  Collect the retract
-        # side too (a literal-IN bloom/stats-pruned point read of <=1000
-        # keys' prior rows, bucket ids computed driver-side by the xxhash64
-        # twin — no keys-sized Spark job), then the signed union is a LOCAL
-        # frame: the delta aggregation never scans anything, and the
-        # affected-group superset is known up front, so the view merge
-        # point-reads its buckets without first materializing the delta.
-        # Total pre-merge cost: two small collects.
-        lit_keys = sorted({r[key] for r in head})
-        prior_local = (
-            prior.read_for_keys(spark, lit_keys).select(*need_cols).collect()
-        )
-        u_schema = T.StructType(
-            [T.StructField(c, base.schema[c].dataType, True) for c in need_cols]
-            + [T.StructField("_sign", T.IntegerType(), False)]
-        )
-        union_local = spark.createDataFrame(
-            [tuple(r[c] for c in need_cols) + (-1,) for r in prior_local]
-            + [
-                tuple(r[c] for c in need_cols) + (1,)
-                for r in head
-                if not (r["_deleted"] or False)
-            ],
-            u_schema,
-        )
-        delta = _signed_agg(union_local, group_cols, value_cols, scale)
-        cand = {tuple(r[c] for c in group_cols) for r in prior_local}
-        cand |= {tuple(r[c] for c in group_cols) for r in head if not (r["_deleted"] or False)}
-        cand_keys = None
-        if cand:
-            cand_schema = T.StructType(
-                [T.StructField(c, base.schema[c].dataType, True) for c in group_cols]
+    head = feed.limit(SMALL_BATCH_ROWS + 1).collect()
+    if len(head) <= SMALL_BATCH_ROWS:
+        # FAST PATH: the whole change set fits in hand.  The add side is a
+        # local frame of the collected winners, the retract side a
+        # literal-IN bloom/stats-pruned point read of their keys' prior
+        # rows (bucket ids from the driver-side xxhash64 twin), and the
+        # signed delta — at most one row per affected group — comes back
+        # in one collect.  The view merge and its commit then run on the
+        # driver (:func:`_commit_local_delta`).
+        delta = None
+        if head:
+            add_local = spark.createDataFrame(
+                [
+                    tuple(r[c] for c in need_cols)
+                    for r in head
+                    if not (r["_deleted"] or False)
+                ],
+                T.StructType(
+                    [T.StructField(c, base.schema[c].dataType, True) for c in need_cols]
+                ),
             )
-            cand_keys = spark.createDataFrame(
-                sorted(cand, key=lambda t: tuple((v is None, str(v)) for v in t)),
-                cand_schema,
-            ).select(_group_key(group_cols).alias(GROUP_KEY_COL))
-        stats = _apply_view_delta(
-            mv, delta, group_cols, v1, measures, candidate_keys=cand_keys
-        )
-        return RefreshStats("incremental", v0, v1, stats.result)
+            delta = _signed_delta(
+                prior.read_for_keys(spark, [r[key] for r in head]),
+                add_local,
+                group_cols,
+                value_cols,
+                scale,
+            )
+        result = _commit_local_delta(spark, mv, delta, group_cols, measures, v1)
+        return RefreshStats("incremental", v0, v1, result)
 
-    # HEAVY PATH: >1000 changed rows — persist the (already slim) feed,
-    # count it once, and apply the auto-crossover rule before committing
-    # to point reads.
+    # HEAVY PATH: more than SMALL_BATCH_ROWS changed rows — persist the
+    # (already slim) feed, count it once, and apply the auto-crossover rule
+    # before committing to point reads.
     changed = feed.persist()
     try:
         n_changed = changed.count()

@@ -30,6 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def main() -> None:
@@ -49,6 +50,7 @@ def main() -> None:
 
     from data_pipeline_spark.operators.shards import (
         append_training_shards,
+        last_exported_key,
         read_shard_manifest,
         write_training_shards,
     )
@@ -74,7 +76,12 @@ def main() -> None:
                 f"{manifest['shard_rows']} (append always continues the "
                 "published shard size)"
             )
-        last = max((s["last_key"] for s in manifest["shards"]), default=None)
+        last = last_exported_key(
+            manifest,
+            decimal_keys=isinstance(
+                table.schema[args.order_col].dataType, T.DecimalType
+            ),
+        )
         if last is None:
             rows = table.read(spark)
         elif args.order_col in table.stats_columns:

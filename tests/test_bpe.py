@@ -191,3 +191,26 @@ def test_bpe_train_validates_apply_method_before_training(spark):
     df = spark.createDataFrame([("a", [1, 2, 1, 2])], "doc_id string, tokens array<int>")
     with _pytest.raises(ValueError, match="unknown bpe_apply method"):
         bpe_train(df, n_merges=4, apply_method="arrrow")
+
+
+def test_bpe_apply_arrow_keeps_bigint_ids_above_int32(spark):
+    """An array<bigint> tokens column with ids past 2^31-1 round-trips the
+    Arrow kernel exactly (no silent int32 wrap)."""
+    big = 3_000_000_000
+    df = spark.createDataFrame(
+        [("a", [big, big + 1, big + 2, big, big + 1])], "doc_id string, tokens array<bigint>"
+    )
+    m = [{"rank": 0, "left": big, "right": big + 1, "new_id": big + 5, "count": 0}]
+    got = bpe_apply(df, m, method="arrow").collect()[0]["tokens"]
+    assert got == [big + 5, big + 2, big + 5]
+
+
+def test_bpe_apply_arrow_rejects_new_id_past_element_type(spark):
+    """A merge whose new id cannot be stored in an array<int> column raises
+    a typed error instead of wrapping to a negative id."""
+    import pytest as _pytest
+
+    df = spark.createDataFrame([("a", [1, 2, 3])], "doc_id string, tokens array<int>")
+    m = [{"rank": 0, "left": 1, "right": 2, "new_id": 2**31, "count": 0}]
+    with _pytest.raises(ValueError, match="does not fit"):
+        bpe_apply(df, m, method="arrow").collect()

@@ -288,3 +288,57 @@ def test_append_legacy_datetime_manifest_compares_chronologically(spark, tmp_pat
         F.to_timestamp("ts").alias("ts"), "tokens")
     res = append_training_shards(after, out)
     assert res["n_rows"] == 3
+
+
+def test_append_rejects_null_order_key(spark, tmp_path):
+    """A NULL order key in the appended rows is a contract violation with a
+    clear error, not a bare TypeError from comparing None to the last key."""
+    out = str(tmp_path / "ds")
+    schema = "k long, tokens array<int>"
+    write_training_shards(
+        spark.createDataFrame([(i, [1]) for i in range(10)], schema), out, "k", 5
+    )
+    with pytest.raises(ValueError, match="NULL k"):
+        append_training_shards(spark.createDataFrame([(None, [1])], schema), out)
+    with pytest.raises(ValueError, match="NULL k"):
+        append_training_shards(
+            spark.createDataFrame([(None, [1]), (20, [1])], schema), out
+        )
+    assert read_shard_manifest(out)["n_rows"] == 10
+
+
+def test_decimal_order_keys_compare_without_float_rounding(spark, tmp_path):
+    """Non-integral decimal keys are stored and compared exactly: keys that
+    differ only past float precision are neither refused nor compared equal,
+    and a full export of such a column still succeeds."""
+    from decimal import Decimal
+
+    from data_pipeline_spark.operators.shards import _canon_key, last_exported_key
+
+    assert _canon_key(Decimal("2.50")) == 2.5
+    assert _canon_key(Decimal("7")) == 7
+    assert _canon_key(Decimal("1.00000000000000000001")) == "1.00000000000000000001"
+
+    out = str(tmp_path / "ds")
+    schema = "k decimal(30,20), tokens array<int>"
+    third = Decimal(1) / Decimal(3)
+    m = write_training_shards(
+        spark.createDataFrame(
+            [(Decimal("1.5"), [1]), (third, [1]), (Decimal("2.375"), [1])], schema
+        ),
+        out, "k", 2,
+    )
+    assert m["n_rows"] == 3
+    # one shard ends on a float-exact key, the other on 1/3 kept as a string
+    assert last_exported_key(read_shard_manifest(out), decimal_keys=True) == Decimal("2.375")
+    # same float as the last key, but after it: accepted
+    m = append_training_shards(
+        spark.createDataFrame([(Decimal("2.37500000000000000001"), [1])], schema), out
+    )
+    assert m["n_rows"] == 4
+    assert last_exported_key(m, decimal_keys=True) == Decimal("2.37500000000000000001")
+    # same float as the new last key, but not after it: rejected
+    for k in ("2.37500000000000000001", "2.375"):
+        with pytest.raises(ValueError, match="sort after"):
+            append_training_shards(spark.createDataFrame([(Decimal(k), [1])], schema), out)
+    assert read_shard_manifest(out)["n_rows"] == 4
