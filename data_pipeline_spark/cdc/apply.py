@@ -31,11 +31,15 @@ Scale notes (the 100-TB story):
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..session import SMALL_BATCH_ROWS
+from ..table.exprs import col as qcol
+from ..table.exprs import conform, lww_resolve, quote
 from ..table.icehouse import (
     DELETED_COL,
     LSN_COL,
@@ -53,11 +57,26 @@ def lww_latest(changes: DataFrame, key: str = "doc_id", order: str = "lsn") -> D
     Equivalent to ``row_number() OVER (PARTITION BY key ORDER BY order DESC)=1``
     but with map-side combine (see module docstring).
     """
-    payload_cols = [c for c in changes.columns if c != key]
-    latest = changes.groupBy(key).agg(
-        F.max_by(F.struct(*payload_cols), F.col(order)).alias("_latest")
+    return lww_resolve(changes, key, quote(order))
+
+
+def _conform_batch(changes: DataFrame, target_schema: T.StructType) -> DataFrame:
+    """The change batch as ``(lsn, op, *target_schema)``: payload columns
+    cast where their type differs, missing ones NULL."""
+    s = changes.schema
+    return conform(changes, T.StructType([s["lsn"], s["op"], *target_schema.fields]))
+
+
+def _batch_norm(latest: DataFrame, logical_cols: list[str], *extra: str) -> DataFrame:
+    """LWW-reduced batch rows in stored form: the logical columns, the
+    event's LSN as ``_lsn`` and ``op = 'D'`` as ``_deleted``, then the SQL
+    expressions in ``extra``."""
+    return latest.selectExpr(
+        *[quote(c) for c in logical_cols],
+        f"`lsn` AS {quote(LSN_COL)}",
+        f"(`op` = 'D') AS {quote(DELETED_COL)}",
+        *extra,
     )
-    return latest.select(key, *[F.col(f"_latest.{c}").alias(c) for c in payload_cols])
 
 
 def lww_latest_window(changes: DataFrame, key: str = "doc_id", order: str = "lsn") -> DataFrame:
@@ -103,15 +122,16 @@ def batch_part_stats(
     """
     key = table.key_col
     key_type = key_type or table.schema[key].dataType
+    s = changes.schema
     rows = (
-        changes.select("lsn", "op", F.col(key).cast(key_type).alias(key))
+        conform(changes, T.StructType([s["lsn"], s["op"], T.StructField(key, key_type)]))
         .withColumn(PART_COL, table.bucket_expr(n_buckets=n_buckets))
-        .groupBy(PART_COL)
+        .groupBy(qcol(PART_COL))
         .agg(
-            F.min("lsn").alias("lsn_min"),
-            F.max("lsn").alias("lsn_max"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("events_deleted"),
-            F.sum(F.when(F.col("op") != "D", 1).otherwise(0)).alias("events_upserted"),
+            F.expr("min(`lsn`) AS lsn_min"),
+            F.expr("max(`lsn`) AS lsn_max"),
+            F.expr("sum(CASE WHEN `op` = 'D' THEN 1 ELSE 0 END) AS events_deleted"),
+            F.expr("sum(CASE WHEN `op` != 'D' THEN 1 ELSE 0 END) AS events_upserted"),
         )
         .collect()
     )
@@ -225,16 +245,7 @@ def apply_changes(
     logical_cols = target_schema.fieldNames()
 
     # conform the batch payload to the target schema, keeping lsn/op
-    conformed = changes.select(
-        "lsn",
-        "op",
-        *[
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in changes.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in target_schema.fields
-        ],
-    )
+    conformed = _conform_batch(changes, target_schema)
     # per-partition lineage + affected-partition discovery from the RAW
     # batch: a columnar scan with map-side partial aggregation — cheaper
     # than materializing (persisting) the LWW output just for stats
@@ -300,27 +311,22 @@ def apply_changes(
             with_part_col=True,
             with_meta=True,
         )
-        base_norm = base.select(
-            *[
-                F.col(f.name) if f.name in base.columns else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in target_schema.fields
-            ],
-            F.coalesce(F.col(LSN_COL), F.lit(-1)).alias(LSN_COL),
-            F.coalesce(F.col(DELETED_COL), F.lit(False)).alias(DELETED_COL),
-            PART_COL,
+        base_norm = conform(
+            base,
+            target_schema,
+            extra=(
+                f"coalesce({quote(LSN_COL)}, -1) AS {quote(LSN_COL)}",
+                f"coalesce({quote(DELETED_COL)}, false) AS {quote(DELETED_COL)}",
+                quote(PART_COL),
+            ),
         )
-        batch_norm = latest.select(
-            *logical_cols,
-            F.col("lsn").alias(LSN_COL),
-            (F.col("op") == "D").alias(DELETED_COL),
-            PART_COL,
-        )
+        batch_norm = _batch_norm(latest, logical_cols, quote(PART_COL))
         # join strategy is left to AQE: it broadcasts the changed-key set
         # when it is genuinely small and falls back to a shuffled hash join
         # for mega-epochs.  (A forced broadcast of a 1.5M-key epoch measured
         # 20% SLOWER than the AQE plan — driver collect + rebroadcast beats
         # the shuffle only for small key sets, exactly what AQE detects.)
-        changed_keys = latest.select(key).distinct()
+        changed_keys = latest.selectExpr(quote(key)).distinct()
         survivors = base_norm.join(changed_keys, key, "left_anti")
         contested = base_norm.join(changed_keys, key, "left_semi").unionByName(batch_norm)
         winners = lww_latest(contested, key=key, order=LSN_COL)
@@ -353,16 +359,7 @@ def apply_changes(
                 # rebuild so base survivors keep the new columns' values
                 target_schema = refreshed
                 logical_cols = target_schema.fieldNames()
-                conformed = changes.select(
-                    "lsn",
-                    "op",
-                    *[
-                        F.col(f.name).cast(f.dataType).alias(f.name)
-                        if f.name in changes.columns
-                        else F.lit(None).cast(f.dataType).alias(f.name)
-                        for f in target_schema.fields
-                    ],
-                )
+                conformed = _conform_batch(changes, target_schema)
                 latest = lww_latest(conformed, key=key).withColumn(
                     PART_COL, table.bucket_expr(n_buckets=plan_buckets)
                 )
@@ -400,6 +397,142 @@ def apply_changes(
     deletes = sum(int(r["events_deleted"]) for r in part_stats.values())
     events_in = changes.count() if count_input else events_seen
     return ApplyStats(result, events_in, events_seen, deletes)
+
+
+def _held_rows(table: IcehouseTable, bucket: int) -> int:
+    """Physical rows (base + pending deltas) the manifest records for one
+    bucket — metadata only."""
+    b = str(bucket)
+    return table.meta["partitions"].get(b, {}).get("rows", 0) + sum(
+        d["rows"] for d in table.meta.get("deltas", {}).get(b, [])
+    )
+
+
+def _has_local_timestamp(dt: T.DataType) -> bool:
+    if isinstance(dt, T.TimestampType):
+        return True
+    if isinstance(dt, T.StructType):
+        return any(_has_local_timestamp(f.dataType) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return _has_local_timestamp(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _has_local_timestamp(dt.keyType) or _has_local_timestamp(dt.valueType)
+    return False
+
+
+def apply_changes_local(
+    spark: SparkSession,
+    table: IcehouseTable,
+    keys: list,
+    changes_for: Callable[[dict], list[tuple]],
+    epoch: int | None = None,
+    epoch_source: str | None = None,
+) -> ApplyStats | None:
+    """Commit a small change batch from the driver: the result of
+    :func:`apply_changes`, without its batch-stats, merge and join jobs.
+
+    ``keys`` are the batch's keys; their buckets are the rewrite set.
+    ``changes_for(current)`` returns the batch as ``(lsn, op, *table
+    columns)`` tuples, given ``current`` — the live stored rows of those
+    buckets by key — so a caller whose rows depend on the stored state (a
+    view's running aggregates) rebuilds them on every attempt.
+
+    The driver path runs only when the manifest says every affected bucket
+    holds at most ``SMALL_BATCH_ROWS`` physical rows, every key has a
+    driver-side hash and no column holds a local-time timestamp; otherwise
+    this returns ``None`` and the caller takes
+    :func:`apply_changes`.  Those buckets are read whole (``_lsn`` and
+    tombstones included) in one collect and rewritten with the same LWW
+    rule: stored rows keep their ``coalesce(_lsn, -1)`` and
+    ``coalesce(_deleted, false)``, and a batch row replaces a stored row
+    whose ``_lsn`` it reaches.  The commit goes through
+    ``overwrite_partitions`` with the epoch fence, ``read_version`` and
+    driver-side lineage (:func:`local_part_stats`); a concurrent commit to
+    those buckets rebuilds from a fresh read, up to 5 attempts.  A
+    concurrent rebucket or schema change returns ``None`` instead."""
+    from ..functions.keys import bucket_for_key
+
+    if epoch is not None and table.epoch_committed(epoch, epoch_source):
+        return ApplyStats(
+            CommitResult(table.version, table.meta["snapshot_id"], epoch, skipped=True), 0, 0, 0
+        )
+    key, schema, n_buckets = table.key_col, table.schema, table.n_buckets
+    if _has_local_timestamp(schema):
+        # a collected local-time datetime need not survive the trip back
+        # (a DST fall-back hour is ambiguous): keep such tables on Spark
+        return None
+    tname = schema[key].dataType.simpleString()
+    try:
+        buckets = sorted({bucket_for_key(k, tname, n_buckets) for k in keys})
+    except TypeError:
+        return None  # no driver-side hash for this key type, or a NULL key
+    if not buckets:
+        return ApplyStats(
+            CommitResult(table.version, table.meta["snapshot_id"], epoch, skipped=False), 0, 0, 0
+        )
+    n_cols, key_at = len(schema), schema.fieldNames().index(key)
+    # nullable throughout, as apply_changes' merge output is
+    frame = T.StructType(
+        [
+            *[T.StructField(f.name, f.dataType) for f in schema.fields],
+            T.StructField(LSN_COL, T.LongType()),
+            T.StructField(DELETED_COL, T.BooleanType()),
+            T.StructField(PART_COL, T.IntegerType()),
+        ]
+    )
+    for _attempt in range(5):
+        if (
+            table.n_buckets != n_buckets
+            or table.schema != schema
+            or any(_held_rows(table, b) > SMALL_BATCH_ROWS for b in buckets)
+        ):
+            return None
+        read_version = table.version
+        held = table.read(
+            spark, partitions=buckets, with_part_col=True, with_meta=True
+        ).collect()
+        changes = changes_for({r[key]: r for r in held if not r[DELETED_COL]})
+        part_stats = local_part_stats(table, [(c[0], c[1], c[2 + key_at]) for c in changes])
+        if part_stats is None:
+            return None
+        out = {
+            r[key]: (
+                *r[:n_cols],
+                -1 if r[LSN_COL] is None else r[LSN_COL],
+                bool(r[DELETED_COL]),
+                r[PART_COL],
+            )
+            for r in held
+        }
+        for lsn, op, *row in changes:
+            k = row[key_at]
+            prev = out.get(k)
+            if prev is None or prev[n_cols] <= lsn:
+                out[k] = (*row, lsn, op == "D", bucket_for_key(k, tname, n_buckets))
+        try:
+            result = table.overwrite_partitions(
+                spark.createDataFrame(list(out.values()), frame),
+                epoch=epoch,
+                epoch_source=epoch_source,
+                affected_partitions=buckets,
+                read_version=read_version,
+                lineage_extra=_lineage_of(part_stats),
+            )
+            break
+        except CommitConflictError:
+            table.refresh()
+            if epoch is not None and table.epoch_committed(epoch, epoch_source):
+                return ApplyStats(
+                    CommitResult(table.version, table.meta["snapshot_id"], epoch, skipped=True),
+                    0, 0, 0,
+                )
+    else:
+        raise ConcurrentCommitError(
+            f"driver-side commit lost 5 consecutive snapshot-conflict races on {table.root}"
+        )
+    events = sum(r["events_deleted"] + r["events_upserted"] for r in part_stats.values())
+    deletes = sum(r["events_deleted"] for r in part_stats.values())
+    return ApplyStats(result, events, events, deletes)
 
 
 def apply_changes_mor(
@@ -441,16 +574,7 @@ def apply_changes_mor(
     if _rename_guard is not None:  # see apply_changes
         _rename_guard(changes.columns)
     logical_cols = target_schema.fieldNames()
-    conformed = changes.select(
-        "lsn",
-        "op",
-        *[
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in changes.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in target_schema.fields
-        ],
-    )
+    conformed = _conform_batch(changes, target_schema)
     if part_stats is not None and not part_stats:
         return ApplyStats(
             CommitResult(table.version, table.meta["snapshot_id"], epoch, skipped=False), 0, 0, 0
@@ -476,11 +600,9 @@ def apply_changes_mor(
         return stats_holder["value"]
 
     latest = lww_latest(conformed, key=key)
-    batch_norm = latest.select(
-        *logical_cols,
-        F.col("lsn").alias(LSN_COL),
-        (F.col("op") == "D").alias(DELETED_COL),
-    ).withColumn(PART_COL, table.bucket_expr(n_buckets=submit_n_buckets))
+    batch_norm = _batch_norm(latest, logical_cols).withColumn(
+        PART_COL, table.bucket_expr(n_buckets=submit_n_buckets)
+    )
 
     lineage = lambda: _lineage_of(_resolve_stats())  # noqa: E731 — resolved at commit
     for _attempt in range(3):
@@ -505,11 +627,9 @@ def apply_changes_mor(
                 stats_holder["future"] = _submit_stats(
                     table, changes, target_schema[key].dataType, submit_n_buckets
                 )
-            batch_norm = latest.select(
-                *logical_cols,
-                F.col("lsn").alias(LSN_COL),
-                (F.col("op") == "D").alias(DELETED_COL),
-            ).withColumn(PART_COL, table.bucket_expr(n_buckets=submit_n_buckets))
+            batch_norm = _batch_norm(latest, logical_cols).withColumn(
+                PART_COL, table.bucket_expr(n_buckets=submit_n_buckets)
+            )
     else:
         raise ConcurrentCommitError(
             f"MOR append lost 3 consecutive rebucket races on {table.root}"

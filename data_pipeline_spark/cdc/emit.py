@@ -36,7 +36,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..table.exprs import conform, quote, quote_all, str_lit
 from ..table.icehouse import DELETED_COL, LSN_COL, IcehouseTable
 
 
@@ -91,26 +93,32 @@ def snapshot_diff_images(
 
     def _image(t: IcehouseTable, alias: str, with_tombstones: bool):
         # live rows define presence in the FROM snapshot; the TO snapshot
-        # keeps tombstones so a delete's true LSN rides along
+        # keeps tombstones so a delete's true LSN rides along.  A value
+        # column the snapshot lacks reads as a typed NULL.
         df = t.read(spark, with_meta=with_tombstones)
-        have = set(df.columns)
-        cols = [
-            F.col(c) if c in have else F.lit(None).cast(fields[c]).alias(c)
-            for c in value_cols
-        ]
-        out = df.select(
-            F.col(key).alias("_k"),
-            F.struct(*[c.alias(n) for c, n in zip(cols, value_cols)]).alias(alias),
-            *(
+        have = {f.name: f.dataType for f in df.schema.fields}
+        full = conform(
+            df,
+            T.StructType(
                 [
-                    F.coalesce(F.col(DELETED_COL), F.lit(False)).alias("_dead"),
-                    F.col(LSN_COL).alias("_vlsn"),
+                    T.StructField(c, have[c] if c in have else fields[c])
+                    for c in (key, *value_cols)
+                ]
+            ),
+            extra=(
+                [
+                    f"coalesce({quote(DELETED_COL)}, false) AS _dead",
+                    f"{quote(LSN_COL)} AS _vlsn",
                 ]
                 if with_tombstones
                 else []
             ),
         )
-        return out
+        return full.selectExpr(
+            f"{quote(key)} AS _k",
+            f"struct({quote_all(value_cols)}) AS {alias}",
+            *(["_dead", "_vlsn"] if with_tombstones else []),
+        )
 
     new = _image(new_t, "_after_raw", with_tombstones=True)
     old = (
@@ -119,30 +127,20 @@ def snapshot_diff_images(
         else _image(new_t, "_before", with_tombstones=False).limit(0)
     )
     j = old.join(new, "_k", "full_outer")
-    after_live = F.col("_after_raw").isNotNull() & ~F.coalesce(
-        F.col("_dead"), F.lit(False)
-    )
-    after = F.when(after_live, F.col("_after_raw"))
+    after_live = "(_after_raw IS NOT NULL AND NOT coalesce(_dead, false))"
     op = (
-        F.when(F.col("_before").isNull() & after_live, "I")
-        .when(
-            F.col("_before").isNotNull()
-            & after_live
-            & ~F.col("_before").eqNullSafe(F.col("_after_raw")),
-            "U",
-        )
-        .when(F.col("_before").isNotNull() & ~after_live, "D")
+        f"CASE WHEN _before IS NULL AND {after_live} THEN 'I'"
+        f" WHEN _before IS NOT NULL AND {after_live}"
+        " AND NOT (_before <=> _after_raw) THEN 'U'"
+        f" WHEN _before IS NOT NULL AND NOT {after_live} THEN 'D' END"
     )
-    return (
-        j.select(
-            F.col("_k").alias(key),
-            op.alias("op"),
-            F.col("_before").alias("before"),
-            after.alias("after"),
-            F.col("_vlsn").alias("lsn"),
-        )
-        .where(F.col("op").isNotNull())
-    )
+    return j.selectExpr(
+        f"_k AS {quote(key)}",
+        f"{op} AS `op`",
+        "_before AS `before`",
+        f"CASE WHEN {after_live} THEN _after_raw END AS `after`",
+        "_vlsn AS `lsn`",
+    ).where("`op` IS NOT NULL")
 
 
 def emit_debezium_envelopes(
@@ -185,35 +183,29 @@ def emit_debezium_envelopes(
 
     # Debezium image conventions from the two-image diff: the key column
     # rides inside before/after (consumers take deletes' key from `before`)
-    def _with_key(img_col: str, present):
-        return F.when(
-            present,
-            F.struct(F.col(key).alias(key), *[F.col(f"{img_col}.{c}").alias(c) for c in
-                                              diff.schema[img_col].dataType.fieldNames()]),
-        )
+    def _with_key(img_col: str, present: str) -> str:
+        fields = [f"{quote(key)} AS {quote(key)}"] + [
+            f"`{img_col}`.{quote(c)} AS {quote(c)}"
+            for c in diff.schema[img_col].dataType.fieldNames()
+        ]
+        return f"CASE WHEN {present} THEN struct({', '.join(fields)}) END"
 
-    is_i = F.col("op") == "I"
-    is_d = F.col("op") == "D"
-    before = _with_key("before", ~is_i)
-    after = _with_key("after", ~is_d)
-    envelope = F.struct(
-        before.alias("before"),
-        after.alias("after"),
-        F.when(is_i, "c").when(is_d, "d").otherwise("u").alias("op"),
-        F.lit(ts_ms).alias("ts_ms"),
-        F.struct(
-            F.lit(connector).alias("connector"),
-            F.lit(None).cast("string").alias("db"),
-            F.lit(None).cast("string").alias("schema"),
-            F.lit(table_name or os.path.basename(os.path.abspath(root))).alias("table"),
-            F.coalesce(F.col("lsn"), F.lit(lsn_fallback)).alias("lsn"),
-            F.lit(v_to).cast("long").alias("txId"),
-        ).alias("source"),
+    table = table_name or os.path.basename(os.path.abspath(root))
+    before = _with_key("before", "NOT (`op` = 'I')")
+    after = _with_key("after", "NOT (`op` = 'D')")
+    envelope = (
+        f"struct({before} AS `before`, {after} AS `after`,"
+        " CASE WHEN `op` = 'I' THEN 'c' WHEN `op` = 'D' THEN 'd' ELSE 'u' END AS `op`,"
+        f" {int(ts_ms)} AS `ts_ms`,"
+        f" struct({str_lit(connector)} AS `connector`, CAST(NULL AS STRING) AS `db`,"
+        f" CAST(NULL AS STRING) AS `schema`, {str_lit(table)} AS `table`,"
+        f" coalesce(`lsn`, {int(lsn_fallback)}) AS `lsn`,"
+        f" CAST({int(v_to)} AS BIGINT) AS `txId`) AS `source`)"
     )
     # explicit nulls: Debezium serializes "before": null / "after": null
     # (and null payload fields) literally — consumers key on their presence
-    return diff.select(
-        F.to_json(envelope, {"ignoreNullFields": "false"}).alias("value")
+    return diff.selectExpr(
+        f"to_json({envelope}, map('ignoreNullFields', 'false')) AS value"
     )
 
 

@@ -58,10 +58,14 @@ def _adjacent_pairs(col) -> "F.Column":
     )
 
 
-def apply_merge(col, left: int, right: int, new_id: int) -> "F.Column":
+def apply_merge(
+    col, left: int, right: int, new_id: int, elem_type: str = "int"
+) -> "F.Column":
     """Replace every left-to-right occurrence of (left, right) with new_id —
-    a fold with a one-token carry (exact reference-BPE semantics)."""
-    out_t = "array<int>"
+    a fold with a one-token carry (exact reference-BPE semantics).
+    ``elem_type`` is the tokens column's element type (``simpleString``,
+    e.g. ``"bigint"``): the fold's output array and carry take it."""
+    out_t = f"array<{elem_type}>"
     step = lambda acc, x: (
         F.when(
             acc["carry"].isNull(),
@@ -70,8 +74,8 @@ def apply_merge(col, left: int, right: int, new_id: int) -> "F.Column":
         .when(
             (acc["carry"] == left) & (x == right),
             F.struct(
-                F.concat(acc["out"], F.array(F.lit(new_id).cast("int"))).alias("out"),
-                F.lit(None).cast("int").alias("carry"),
+                F.concat(acc["out"], F.array(F.lit(new_id).cast(elem_type))).alias("out"),
+                F.lit(None).cast(elem_type).alias("carry"),
             ),
         )
         .otherwise(
@@ -82,12 +86,17 @@ def apply_merge(col, left: int, right: int, new_id: int) -> "F.Column":
         )
     )
     init = F.struct(
-        F.array().cast(out_t).alias("out"), F.lit(None).cast("int").alias("carry")
+        F.array().cast(out_t).alias("out"), F.lit(None).cast(elem_type).alias("carry")
     )
     finish = lambda acc: F.when(
         acc["carry"].isNull(), acc["out"]
     ).otherwise(F.concat(acc["out"], F.array(acc["carry"])))
     return F.aggregate(col, init, step, finish)
+
+
+def _elem_type(df: DataFrame, tokens_col: str) -> str:
+    """Element type (``simpleString``) of an array tokens column."""
+    return df.schema[tokens_col].dataType.elementType.simpleString()
 
 
 def _train_loop(
@@ -105,6 +114,7 @@ def _train_loop(
     with the unique-dict weights it is the identical number computed over
     O(unique sequences) rows."""
     cur = dict_df
+    elem = _elem_type(dict_df, tokens_col)
     merges: list[dict] = []
     for rank in range(n_merges):
         pairs = (
@@ -124,7 +134,7 @@ def _train_loop(
             {"rank": rank, "left": left, "right": right, "new_id": new_id, "count": cnt}
         )
         cur = cur.withColumn(
-            tokens_col, apply_merge(F.col(tokens_col), left, right, new_id)
+            tokens_col, apply_merge(F.col(tokens_col), left, right, new_id, elem)
         )
         if (rank + 1) % checkpoint_every == 0:
             if reaggregate:
@@ -390,10 +400,11 @@ def bpe_apply(
         kernel = _bpe_apply_arrow_kernel(merges, tokens_col, df.schema)
         return df.mapInPandas(kernel, df.schema)
     cur = df
+    elem = _elem_type(df, tokens_col)
     for i, m in enumerate(merges):
         cur = cur.withColumn(
             tokens_col,
-            apply_merge(F.col(tokens_col), m["left"], m["right"], m["new_id"]),
+            apply_merge(F.col(tokens_col), m["left"], m["right"], m["new_id"], elem),
         )
         if (i + 1) % 4 == 0:
             cur = cur.localCheckpoint()

@@ -27,8 +27,11 @@ import time
 import uuid
 from typing import Any
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..table.exprs import col as qcol
+from ..table.exprs import quote
 
 __all__ = [
     "append_training_shards",
@@ -121,15 +124,15 @@ def assign_training_shards(
         raise ValueError(f"shard_rows must be positive, got {shard_rows}")
     spark = df.sparkSession
     n_parts = num_parts or spark.sparkContext.defaultParallelism
-    d = df.repartitionByRange(n_parts, order_col).withColumn(
-        "_pid", F.spark_partition_id()
+    d = df.repartitionByRange(n_parts, qcol(order_col)).withColumn(
+        "_pid", F.expr("spark_partition_id()")
     )
     # pin partition ids: the counts pass and the rank pass below must see the
     # same pid assignment
     d = d.localCheckpoint()
     totals = {
         r["_pid"]: r["n"]
-        for r in d.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
+        for r in d.groupBy(qcol("_pid")).agg(F.expr("count(1) AS n")).collect()
     }
     if not totals:
         return (
@@ -139,18 +142,21 @@ def assign_training_shards(
         )
     offsets, acc = [], 0
     for pid in sorted(totals):
-        offsets += [F.lit(pid), F.lit(acc)]
+        offsets += [str(int(pid)), str(acc)]
         acc += int(totals[pid])
-    w = Window.partitionBy("_pid").orderBy(order_col)
     rank = (
-        F.row_number().over(w).cast("long")
-        - 1
-        + F.element_at(F.create_map(*offsets), F.col("_pid"))
+        "CAST(row_number() OVER (PARTITION BY `_pid` ORDER BY "
+        f"{quote(order_col)}) AS BIGINT) - 1 + element_at(map({', '.join(offsets)}), `_pid`)"
     )
+    shard_rows = int(shard_rows)
     return (
-        d.withColumn("_rank", rank)
-        .withColumn("shard_id", (F.col("_rank") / shard_rows).cast("long"))
-        .withColumn("shard_pos", F.pmod(F.col("_rank"), F.lit(shard_rows)).cast("long"))
+        d.withColumn("_rank", F.expr(rank))
+        .withColumns(
+            {
+                "shard_id": F.expr(f"CAST(`_rank` / {shard_rows} AS BIGINT)"),
+                "shard_pos": F.expr(f"CAST(pmod(`_rank`, {shard_rows}) AS BIGINT)"),
+            }
+        )
         .drop("_pid", "_rank")
     )
 
@@ -163,25 +169,20 @@ def shard_summary(
     """Per-shard manifest rows from an :func:`assign_training_shards` output:
     (shard_id, n_rows, first_key, last_key[, n_tokens, token_checksum]).
     One combinable groupBy — the manifest costs a scan, never a sort."""
-    aggs = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min(order_col).alias("first_key"),
-        F.max(order_col).alias("last_key"),
-    ]
+    key = quote(order_col)
+    aggs = ["count(1) AS n_rows", f"min({key}) AS first_key", f"max({key}) AS last_key"]
     if tokens_col is not None:
+        toks = quote(tokens_col)
         aggs += [
-            F.sum(F.size(tokens_col)).cast("long").alias("n_tokens"),
-            F.sum(
-                F.aggregate(
-                    tokens_col,
-                    F.lit(0).cast("long"),
-                    lambda a, x: a + x.cast("long"),
-                )
-            )
-            .cast("long")
-            .alias("token_checksum"),
+            f"CAST(sum(size({toks})) AS BIGINT) AS n_tokens",
+            f"CAST(sum(aggregate({toks}, CAST(0 AS BIGINT), (a, x) -> a + CAST(x AS BIGINT)))"
+            " AS BIGINT) AS token_checksum",
         ]
-    return sharded.groupBy("shard_id").agg(*aggs).orderBy("shard_id")
+    return (
+        sharded.groupBy(qcol("shard_id"))
+        .agg(*[F.expr(a) for a in aggs])
+        .orderBy(qcol("shard_id"))
+    )
 
 
 def write_training_shards(
@@ -221,7 +222,7 @@ def write_training_shards(
         raise FileExistsError(f"{path} exists; pass overwrite=True to replace")
     sharded = assign_training_shards(
         df, order_col=order_col, shard_rows=shard_rows, num_parts=num_parts
-    ).withColumn("shard", F.format_string("%06d", F.col("shard_id").cast("int")))
+    ).withColumn("shard", F.expr("format_string('%06d', CAST(`shard_id` AS INT))"))
     summary = [
         _canon_summary(r.asDict())
         for r in shard_summary(sharded, order_col, tokens_col).collect()
@@ -231,8 +232,8 @@ def write_training_shards(
     os.makedirs(parent, exist_ok=True)
     staging = path + f".v-{uuid.uuid4().hex[:8]}"
     (
-        sharded.repartition(max(len(summary), 1), "shard_id")
-        .sortWithinPartitions("shard_id", "shard_pos")
+        sharded.repartition(max(len(summary), 1), qcol("shard_id"))
+        .sortWithinPartitions(qcol("shard_id"), qcol("shard_pos"))
         .drop("shard_id")
         .write.mode("overwrite")
         .partitionBy("shard")
@@ -403,8 +404,8 @@ def append_training_shards(
     target = os.path.realpath(path) if os.path.islink(path) else os.path.abspath(path)
     staging = os.path.abspath(path) + f".append-{uuid.uuid4().hex[:8]}"
     (
-        sharded.repartition(max(len(summary), 1), "shard_id")
-        .sortWithinPartitions("shard_id", "shard_pos")
+        sharded.repartition(max(len(summary), 1), qcol("shard_id"))
+        .sortWithinPartitions(qcol("shard_id"), qcol("shard_pos"))
         .drop("shard_id")
         .write.mode("overwrite")
         .partitionBy("shard")

@@ -1,3 +1,4 @@
+from .exprs import UnsafeIdentifierError
 from .format import TableFormat, create_table, open_table, register_backend
 from .index import SecondaryIndex, create_index, open_index
 from .icehouse import (
@@ -21,6 +22,7 @@ __all__ = [
     "IcehouseTable",
     "SchemaEvolutionError",
     "SecondaryIndex",
+    "UnsafeIdentifierError",
     "create_index",
     "open_index",
     "TableFormat",

@@ -65,6 +65,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import SMALL_BATCH_ROWS
+from .exprs import check_identifiers, conform, in_ints, lww_resolve, quote
+from .exprs import col as qcol
 
 PART_COL = "_part"  # physical bucket-partition column (not part of the logical schema)
 LSN_COL = "_lsn"  # per-row LSN watermark: the change event that produced this row
@@ -98,7 +100,7 @@ def _key_in(spark: SparkSession, col: str, data_type: T.DataType, values: list) 
     lits = ", ".join(
         "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in values
     )
-    return F.expr("`" + col.replace("`", "``") + f"` IN ({lits})")
+    return F.expr(f"{quote(col)} IN ({lits})")
 
 
 # ---------------------------------------------------------------------------
@@ -171,6 +173,7 @@ def evolve_schema(current: T.StructType, incoming: T.StructType) -> tuple[T.Stru
             merged.append(f)  # column absent from incoming: keep (reads as NULL for new data)
     for g in incoming.fields:
         if g.name not in cur:
+            check_identifiers(T.StructType([g]))
             # new columns are stored fully nullable: old rows have no value
             # for them, and future batches may carry nulls this one doesn't
             merged.append(T.StructField(g.name, _deep_nullable(g.dataType), True))
@@ -180,18 +183,18 @@ def evolve_schema(current: T.StructType, incoming: T.StructType) -> tuple[T.Stru
 
 def conform_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Project ``df`` onto ``schema`` — missing columns become NULL, present
-    columns are cast where the cast is a recorded widening."""
-    cols = []
-    have = {f.name: f for f in df.schema.fields}
-    for f in schema.fields:
-        if f.name in have:
-            if have[f.name].dataType == f.dataType:
-                cols.append(F.col(f.name))
-            else:
-                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
+    columns are cast only where their type differs (one ``selectExpr``;
+    see :func:`.exprs.conform`).  The one conform of every write path."""
+    return conform(df, schema)
+
+
+def _meta_fields(names) -> list[T.StructField]:
+    """The CDC meta columns among ``names``, typed as the files store them."""
+    return [
+        T.StructField(n, t, True)
+        for n, t in ((LSN_COL, T.LongType()), (DELETED_COL, T.BooleanType()))
+        if n in names
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -253,6 +256,7 @@ class IcehouseTable:
     ) -> "IcehouseTable":
         if key_col not in schema.fieldNames():
             raise ValueError(f"key column {key_col!r} not in schema")
+        check_identifiers(schema)
         os.makedirs(os.path.join(root, "metadata"), exist_ok=False)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         meta = {
@@ -512,21 +516,21 @@ class IcehouseTable:
                     f"write.sort-order references columns not in the write: {unknown}"
                 )
         if fanout <= 1:
-            laid = out.repartition(n_buckets, F.col(PART_COL)).sortWithinPartitions(
-                PART_COL, *order, self.key_col
+            laid = out.repartition(n_buckets, qcol(PART_COL)).sortWithinPartitions(
+                *[qcol(c) for c in (PART_COL, *order, self.key_col)]
             )
             return laid.drop(*tmp_cols) if tmp_cols else laid
         sub_col = "_sub"  # collision-proof vs logical columns
         while sub_col in out.columns:
             sub_col += "_"
-        sub = F.pmod(
-            F.xxhash64(F.col(self.key_col), F.lit("write.fanout")), F.lit(fanout)
-        ).cast("int")
+        sub = F.expr(
+            f"CAST(pmod(xxhash64({quote(self.key_col)}, 'write.fanout'), {int(fanout)}) AS INT)"
+        )
         laid = (
             out.withColumn(sub_col, sub)
-            .repartition(n_buckets * fanout, F.col(PART_COL), F.col(sub_col))
+            .repartition(n_buckets * fanout, qcol(PART_COL), qcol(sub_col))
             .drop(sub_col)  # only steers the shuffle; projection keeps slots
-            .sortWithinPartitions(PART_COL, *order, self.key_col)
+            .sortWithinPartitions(*[qcol(c) for c in (PART_COL, *order, self.key_col)])
         )
         return laid.drop(*tmp_cols) if tmp_cols else laid
 
@@ -534,7 +538,7 @@ class IcehouseTable:
         """Parquet writer for a snapshot dir, honoring ``write.max-file-rows``
         (caps rows per output file WITHIN a task — the cheap file-size bound
         when re-shuffling for fanout isn't warranted)."""
-        w = laid_out.withColumn("_pw", F.col(PART_COL)).write.mode("overwrite")
+        w = laid_out.withColumn("_pw", qcol(PART_COL)).write.mode("overwrite")
         props = self.meta.get("properties", {})
         cap = props.get("write.max-file-rows")
         if cap:
@@ -733,9 +737,10 @@ class IcehouseTable:
         the formula lives — every writer (merge, rebucket) must route through
         it so the addressing can never silently fork.  ``n_buckets`` overrides
         the modulus for partition-spec evolution (:meth:`rebucket`)."""
-        return F.pmod(
-            F.xxhash64(F.col(col or self.key_col)), F.lit(n_buckets or self.n_buckets)
-        ).cast("int")
+        return F.expr(
+            f"CAST(pmod(xxhash64({quote(col or self.key_col)}), "
+            f"{int(n_buckets or self.n_buckets)}) AS INT)"
+        )
 
     # -- read path ------------------------------------------------------------
 
@@ -858,24 +863,10 @@ class IcehouseTable:
             df = self._scan_paths(spark, base_paths + delta_paths, read_schema)
         if delta_paths:
             # resolve only the delta-bearing buckets; clean buckets pass through
-            dirty = F.col(PART_COL).isin([int(k) for k in delta_keys])
-            key = self.key_col
-            payload = [f.name for f in read_schema.fields if f.name != key]
-            resolved = (
-                df.where(dirty)
-                .groupBy(key)
-                .agg(
-                    F.max_by(
-                        F.struct(*payload), F.coalesce(F.col(LSN_COL), F.lit(-1))
-                    ).alias("_w")
-                )
-                .select(key, *[F.col(f"_w.{c}").alias(c) for c in payload])
-                .select(*[f.name for f in read_schema.fields])
-            )
-            df = df.where(~dirty).unionByName(resolved)
+            df = self._resolve_dirty(df, delta_keys)
         if with_meta:
             return df if with_part_col else df.drop(PART_COL)
-        df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(LSN_COL, DELETED_COL)
+        df = df.where(f"NOT coalesce({quote(DELETED_COL)}, false)").drop(LSN_COL, DELETED_COL)
         if stats_filters:
             # residual predicate: exactness does not depend on which files
             # carried stats, and the same bounds push into the parquet scan
@@ -886,6 +877,17 @@ class IcehouseTable:
                 if hi is not None:
                     df = df.where(F.col(col) <= F.lit(hi))
         return df if with_part_col else df.drop(PART_COL)
+
+    def _resolve_dirty(self, df: DataFrame, buckets) -> DataFrame:
+        """Last-writer-wins per key (``max_by`` on ``coalesce(_lsn, -1)``)
+        over the rows of the delta-bearing ``buckets``; every other bucket
+        passes through unresolved.  The read planner shared by :meth:`read`
+        and :meth:`read_changed_since`."""
+        dirty = in_ints(PART_COL, buckets)
+        resolved = lww_resolve(
+            df.where(dirty), self.key_col, f"coalesce({quote(LSN_COL)}, -1)"
+        )
+        return df.where(f"NOT ({dirty})").unionByName(resolved)
 
     @classmethod
     def _file_may_match(cls, file_stats: dict, stats_filters: dict) -> bool:
@@ -1010,22 +1012,8 @@ class IcehouseTable:
             if any(live(d) for d in ds)
         ]
         if dirty_keys:
-            key = self.key_col
-            payload = [f.name for f in read_schema.fields if f.name != key]
-            dirty = F.col(PART_COL).isin(dirty_keys)
-            resolved = (
-                df.where(dirty)
-                .groupBy(key)
-                .agg(
-                    F.max_by(
-                        F.struct(*payload), F.coalesce(F.col(LSN_COL), F.lit(-1))
-                    ).alias("_w")
-                )
-                .select(key, *[F.col(f"_w.{c}").alias(c) for c in payload])
-                .select(*[f.name for f in read_schema.fields])
-            )
-            df = df.where(~dirty).unionByName(resolved)
-        df = df.where(F.col(LSN_COL) > lsn_watermark)
+            df = self._resolve_dirty(df, dirty_keys)
+        df = df.where(f"{quote(LSN_COL)} > {int(lsn_watermark)}")
         if stats_filters:
             # residual: upserts gated by the range, tombstones always pass
             is_del = F.coalesce(F.col(DELETED_COL), F.lit(False))
@@ -1178,20 +1166,15 @@ class IcehouseTable:
         with_part = df if PART_COL in df.columns else df.withColumn(PART_COL, self.bucket_expr())
         # conform to the (possibly evolved) schema; CDC meta columns
         # (_lsn/_deleted) ride along when the caller provides them
-        meta_cols = []
-        if LSN_COL in with_part.columns:
-            meta_cols.append(F.col(LSN_COL).cast("long").alias(LSN_COL))
-        if DELETED_COL in with_part.columns:
-            meta_cols.append(F.col(DELETED_COL).cast("boolean").alias(DELETED_COL))
-        out = with_part.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in with_part.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in new_schema.fields
-            ],
-            *meta_cols,
-            F.col(PART_COL).cast("int").alias(PART_COL),
+        out = conform_to_schema(
+            with_part,
+            T.StructType(
+                [
+                    *new_schema.fields,
+                    *_meta_fields(with_part.columns),
+                    T.StructField(PART_COL, T.IntegerType(), True),
+                ]
+            ),
         )
         layout_buckets = (meta_updates or {}).get("n_buckets", self.n_buckets)
         laid_out = self._layout(out, layout_buckets, order_override=sort_override)
@@ -1241,16 +1224,15 @@ class IcehouseTable:
             self.ensure_key_type_unchanged(new_schema)
         plan_buckets = self.n_buckets
         with_part = df if PART_COL in df.columns else df.withColumn(PART_COL, self.bucket_expr())
-        out = with_part.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in with_part.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in new_schema.fields
-            ],
-            F.col(LSN_COL).cast("long").alias(LSN_COL),
-            F.col(DELETED_COL).cast("boolean").alias(DELETED_COL),
-            F.col(PART_COL).cast("int").alias(PART_COL),
+        out = conform_to_schema(
+            with_part,
+            T.StructType(
+                [
+                    *new_schema.fields,
+                    *_meta_fields((LSN_COL, DELETED_COL)),
+                    T.StructField(PART_COL, T.IntegerType(), True),
+                ]
+            ),
         )
         laid_out = self._layout(out, plan_buckets, fanout=1)  # see _layout
         sdir_rel = sdir = None

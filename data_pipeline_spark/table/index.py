@@ -9,11 +9,15 @@ table by replaying the base's OWN changed-data feed through the ordinary
 exactly-once merge:
 
 - **refresh** reads ``base.read_changed_since(watermark)`` (O(changed
-  data): LSN file skipping) and applies it with ``apply_changes`` under
-  epoch = the base snapshot version in a per-index namespace — re-running
-  a crashed refresh is a fenced no-op, and because the merge is LWW on the
-  base's own LSNs, overlap from a stale watermark is idempotent (the
-  watermark is an optimization, never a correctness input);
+  data): LSN file skipping) and merges it under epoch = the base snapshot
+  version in a per-index namespace — a per-epoch feed of at most
+  ``SMALL_BATCH_ROWS`` rows is committed from the driver
+  (``cdc.apply.apply_changes_local``: one collect of the affected index
+  buckets, the LWW rewrite, one write), a larger feed or larger index
+  buckets go through the Spark ``apply_changes`` merge.  Re-running a
+  crashed refresh is a fenced no-op, and because both merges are LWW,
+  overlap from a stale watermark is idempotent (the watermark is an
+  optimization, never a correctness input);
 - **lookup** plans O(matching files) of the slim table (stats skipping on
   the value column), then fetches the full rows via bucket-pruned
   ``read_for_keys`` on the base — the wide token arrays are read only for
@@ -40,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import SMALL_BATCH_ROWS
+from .exprs import quote
 from .icehouse import DELETED_COL, LSN_COL, IcehouseTable
 
 __all__ = ["SecondaryIndex", "create_index", "open_index"]
@@ -131,14 +136,19 @@ class SecondaryIndex:
 
         Default path: the base's changed-since feed from the stored LSN
         watermark — correct when LSN progression is (eventually) ascending,
-        which batch replay and epoch-ordered streams guarantee.  When the
-        caller KNOWS the changed key set (a streaming micro-batch whose
+        which batch replay and epoch-ordered streams guarantee.  A feed of
+        at most ``SMALL_BATCH_ROWS`` rows is collected once (rows, part
+        stats and next watermark from the same rows) and committed from the
+        driver by ``apply_changes_local`` when the affected index buckets
+        are small; a larger feed, or larger buckets, go through the Spark
+        ``apply_changes`` merge.  Both give the same rows and lineage.  When
+        the caller KNOWS the changed key set (a streaming micro-batch whose
         boundaries may split epochs out of LSN order — the same caveat
         table/matview.py documents), pass ``changed_keys``: the refresh
         becomes one bucket-pruned point read of those keys' CURRENT rows
         (present → upsert at lsn=base.version, absent → delete), with no
         dependence on feed ordering at all."""
-        from ..cdc.apply import apply_changes, local_part_stats
+        from ..cdc.apply import apply_changes, apply_changes_local, local_part_stats
 
         self.index = self.index.refresh()
         base = IcehouseTable.load(self.base_root)
@@ -157,7 +167,7 @@ class SecondaryIndex:
         ordinal = (
             max(self._meta_lsn_high(self.index), self._meta_lsn_high(base), wm) + 1
         )
-        part_stats = rescan = None
+        stats = part_stats = rescan = None
         if changed_keys is not None:
             keys = changed_keys.select(
                 F.col(changed_keys.columns[0]).alias(base.key_col)
@@ -195,24 +205,31 @@ class SecondaryIndex:
             # one slim collect: a per-epoch poll's feed fits on the driver,
             # so the batch, its part stats and the next watermark all come
             # from the rows in hand instead of two more scans of the feed
-            head = feed.select(
-                base.key_col, self.column, DELETED_COL, LSN_COL
+            head = feed.selectExpr(
+                *[quote(c) for c in (base.key_col, self.column, DELETED_COL, LSN_COL)]
             ).limit(SMALL_BATCH_ROWS + 1).collect()
             if len(head) <= SMALL_BATCH_ROWS:
+                # the index schema is (key, column): rows are already in
+                # table-column order for the driver-side commit
                 rows = [(ordinal, "D" if r[2] else "U", r[0], r[1]) for r in head]
-                batch = spark.createDataFrame(
-                    rows,
-                    T.StructType(
-                        [
-                            T.StructField("lsn", T.LongType()),
-                            T.StructField("op", T.StringType()),
-                            T.StructField(base.key_col, base.schema[base.key_col].dataType),
-                            T.StructField(self.column, base.schema[self.column].dataType),
-                        ]
-                    ),
-                )
-                part_stats = local_part_stats(self.index, [r[:3] for r in rows])
                 new_wm = max((r[3] for r in head), default=None)
+                stats = apply_changes_local(
+                    spark, self.index, [r[2] for r in rows], lambda _current: rows,
+                    epoch=base.version, epoch_source=ns,
+                )
+                if stats is None:  # index buckets too big for the driver
+                    batch = spark.createDataFrame(
+                        rows,
+                        T.StructType(
+                            [
+                                T.StructField("lsn", T.LongType()),
+                                T.StructField("op", T.StringType()),
+                                T.StructField(base.key_col, base.schema[base.key_col].dataType),
+                                T.StructField(self.column, base.schema[self.column].dataType),
+                            ]
+                        ),
+                    )
+                    part_stats = local_part_stats(self.index, [r[:3] for r in rows])
             else:
                 batch = feed.select(
                     F.lit(ordinal).cast("long").alias("lsn"),
@@ -223,10 +240,11 @@ class SecondaryIndex:
                     F.col(self.column),
                 )
                 rescan = feed
-        stats = apply_changes(
-            self.index, batch, epoch=base.version, epoch_source=ns,
-            part_stats=part_stats,
-        )
+        if stats is None:
+            stats = apply_changes(
+                self.index, batch, epoch=base.version, epoch_source=ns,
+                part_stats=part_stats,
+            )
         self.index = self.index.refresh()
         if not stats.result.skipped:
             if rescan is not None:

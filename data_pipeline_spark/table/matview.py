@@ -58,17 +58,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .icehouse import (
-    DELETED_COL,
-    LSN_COL,
-    PART_COL,
-    CommitConflictError,
-    CommitResult,
-    ConcurrentCommitError,
-    IcehouseTable,
-)
-from ..cdc.apply import ApplyStats, _lineage_of, apply_changes, local_part_stats
-from ..functions.keys import bucket_for_key
+from .exprs import col as qcol
+from .exprs import quote, quote_all
+from .icehouse import CommitResult, IcehouseTable
+from ..cdc.apply import ApplyStats, apply_changes, apply_changes_local
 from ..session import SMALL_BATCH_ROWS
 
 GROUP_KEY_COL = "group_key"
@@ -87,14 +80,14 @@ def _measures(value_cols: list[str]) -> list[str]:
     return out
 
 
-def _group_key(group_cols: list[str]) -> F.Column:
+def _group_key(group_cols: list[str]) -> str:
     """Deterministic, injective string key for a group tuple: ``to_json`` of
     the group struct (fixed field order = fixed schema order; a NULL group
     value serializes as an omitted field, which is unambiguous because every
     group row shares the same schema).  The key is the view table's bucket-
     addressing key, so it must be stable across refreshes and sessions —
     ``to_json`` is, being a pure function of the values."""
-    return F.to_json(F.struct(*[F.col(c) for c in group_cols]))
+    return f"to_json(struct({quote_all(group_cols)}))"
 
 
 def _contributions(
@@ -105,15 +98,17 @@ def _contributions(
     SUM/AVG semantics: sum IS NULL iff its count = 0) and a fixed-point sum
     with NULLs contributing 0 — increments stay exact and
     order-independent.  One shuffle covers every measure."""
-    names = _measures(value_cols)
-    aggs = [(F.lit(sign) * F.count(F.lit(1))).alias(names[0])]
+    names = [quote(n) for n in _measures(value_cols)]
+    sign = int(sign)
+    aggs = [f"{sign} * count(1) AS {names[0]}"]
     for i, c in enumerate(value_cols):
-        v = F.round(F.col(c) * scale).cast("long")
-        aggs.append((F.lit(sign) * F.count(F.col(c))).alias(names[1 + 2 * i]))
+        q = quote(c)
+        aggs.append(f"{sign} * count({q}) AS {names[1 + 2 * i]}")
         aggs.append(
-            (F.lit(sign) * F.sum(F.coalesce(v, F.lit(0)))).alias(names[2 + 2 * i])
+            f"{sign} * sum(coalesce(CAST(round({q} * {int(scale)}) AS BIGINT), 0))"
+            f" AS {names[2 + 2 * i]}"
         )
-    return rows.groupBy(*group_cols).agg(*aggs)
+    return rows.groupBy(*[qcol(c) for c in group_cols]).agg(*[F.expr(a) for a in aggs])
 
 
 @dataclass(frozen=True)
@@ -145,10 +140,9 @@ def _aggregate(
     base_rows: DataFrame, group_cols: list[str], value_cols: list[str], scale: int
 ) -> DataFrame:
     """Full aggregate of a base row set in view-row shape (no sign)."""
-    return _contributions(base_rows, group_cols, value_cols, scale, sign=1).select(
-        _group_key(group_cols).alias(GROUP_KEY_COL),
-        *group_cols,
-        *_measures(value_cols),
+    return _contributions(base_rows, group_cols, value_cols, scale, sign=1).selectExpr(
+        f"{_group_key(group_cols)} AS {GROUP_KEY_COL}",
+        *[quote(c) for c in (*group_cols, *_measures(value_cols))],
     )
 
 
@@ -241,11 +235,7 @@ def create_matview(
         }
     )
     agg = _aggregate(base.read(spark), group_cols, value_cols, scale)
-    changes = agg.select(
-        F.lit(0).cast("long").alias("lsn"),
-        F.lit("U").alias("op"),
-        "*",
-    )
+    changes = agg.selectExpr("CAST(0 AS BIGINT) AS lsn", "'U' AS op", "*")
     apply_changes(mv, changes, epoch=base.version, epoch_source=_REFRESH_NS)
     return mv.refresh()
 
@@ -267,6 +257,11 @@ def _view_spec(mv: IcehouseTable) -> tuple[str, list[str], list[str], int]:
         raise ValueError(f"{mv.root} is missing matview property {e}") from e
 
 
+def _current_measures(measures: list[str]) -> list[str]:
+    """The view's stored measures renamed ``_cur_<m>`` for a merge join."""
+    return [f"{quote(m)} AS {quote('_cur_' + m)}" for m in measures]
+
+
 def _apply_view_delta(
     mv: IcehouseTable,
     delta: DataFrame,
@@ -284,23 +279,20 @@ def _apply_view_delta(
     delta = delta.persist()
     try:
         current = mv.read_for_keys(spark, delta.select(GROUP_KEY_COL))
-        cur = current.select(
-            GROUP_KEY_COL, *[F.col(m).alias(f"_cur_{m}") for m in measures]
-        )
-        merged = delta.join(cur, GROUP_KEY_COL, "left_outer").select(
+        cur = current.selectExpr(GROUP_KEY_COL, *_current_measures(measures))
+        merged = delta.join(cur, GROUP_KEY_COL, "left_outer").selectExpr(
             GROUP_KEY_COL,
-            *group_cols,
+            *[quote(c) for c in group_cols],
             *[
-                (F.coalesce(F.col(f"_cur_{m}"), F.lit(0)) + F.col(m)).alias(m)
+                f"coalesce({quote('_cur_' + m)}, 0) + {quote(m)} AS {quote(m)}"
                 for m in measures
             ],
         )
-        changes = merged.select(
-            F.lit(base_version).cast("long").alias("lsn"),
-            F.when(F.col("n_rows") <= 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
+        changes = merged.selectExpr(
+            f"CAST({int(base_version)} AS BIGINT) AS lsn",
+            "CASE WHEN n_rows <= 0 THEN 'D' ELSE 'U' END AS op",
             GROUP_KEY_COL,
-            *group_cols,
-            *measures,
+            *[quote(c) for c in (*group_cols, *measures)],
         )
         stats = apply_changes(mv, changes, epoch=base_version, epoch_source=_REFRESH_NS)
     finally:
@@ -318,17 +310,6 @@ def _finish_refresh(mv: IcehouseTable, base_version: int) -> None:
         mv.update_properties({"mv.refreshed_floor": base_version})
 
 
-def _held_rows(t: IcehouseTable, buckets: list[int]) -> int:
-    """Physical rows (base + pending deltas) the manifest records for
-    ``buckets`` — metadata only."""
-    parts, deltas = t.meta["partitions"], t.meta.get("deltas", {})
-    return sum(
-        parts.get(str(b), {}).get("rows", 0)
-        + sum(d["rows"] for d in deltas.get(str(b), []))
-        for b in buckets
-    )
-
-
 def _commit_local_delta(
     spark: SparkSession,
     mv: IcehouseTable,
@@ -340,52 +321,26 @@ def _commit_local_delta(
     """Collect a small signed delta (one row per affected group:
     ``group_key, *group_cols, *measures``; ``None`` for no change) and fold
     it into the view — the same merged rows and the same fenced commit as
-    :func:`_apply_view_delta`, built on the driver.  The merge is keyed by
-    the ``group_key`` JSON string, so group columns of any type (arrays,
-    maps) work.  Finishes the refresh (:func:`_finish_refresh`).
-
-    The driver rewrite runs only when the manifest says the affected view
-    buckets hold at most ``SMALL_BATCH_ROWS`` physical rows: those buckets
-    are read whole (with their ``_lsn``/tombstones) in one collect,
-    rewritten with the LWW rule of :func:`apply_changes` and committed by
-    ``overwrite_partitions`` — no batch-stats, merge or join jobs.  A
-    concurrent commit to those buckets rebuilds from a fresh read.  Larger
-    buckets take :func:`_apply_view_delta` on a local frame of the
-    collected delta."""
+    :func:`_apply_view_delta`, built on the driver by
+    :func:`~..cdc.apply.apply_changes_local` (which re-merges against a
+    fresh read of the view after a conflict).  The merge is keyed by the
+    ``group_key`` JSON string, so group columns of any type (arrays, maps)
+    work.  View buckets too big for the driver take
+    :func:`_apply_view_delta` on a local frame of the collected delta.
+    Finishes the refresh (:func:`_finish_refresh`)."""
     delta = [] if delta_df is None else delta_df.collect()
-    keys = [r[GROUP_KEY_COL] for r in delta]
-    buckets = sorted({bucket_for_key(k, "string", mv.n_buckets) for k in keys})
     if not delta:
         # nothing to commit: the refresh floor advances instead
         _finish_refresh(mv, base_version)
         return CommitResult(mv.version, mv.meta["snapshot_id"], base_version)
-    if _held_rows(mv, buckets) > SMALL_BATCH_ROWS:
-        return _apply_view_delta(
-            mv, spark.createDataFrame(delta, delta_df.schema), group_cols,
-            base_version, measures,
-        ).result
     n_group = len(group_cols)
-    schema = T.StructType(
-        [
-            *mv.schema.fields,
-            T.StructField(LSN_COL, T.LongType()),
-            T.StructField(DELETED_COL, T.BooleanType()),
-            T.StructField(PART_COL, T.IntegerType()),
-        ]
-    )
-    for _attempt in range(5):
-        read_version = mv.version
-        held = mv.read(
-            spark, partitions=buckets, with_part_col=True, with_meta=True
-        ).collect()
-        current = {r[GROUP_KEY_COL]: r for r in held if not r[DELETED_COL]}
-        changes = []
+
+    def changes_for(current: dict) -> list[tuple]:
+        out = []
         for d in delta:
             cur = current.get(d[GROUP_KEY_COL])
-            merged = [
-                (0 if cur is None else cur[m] or 0) + d[m] for m in measures
-            ]
-            changes.append(
+            merged = [(0 if cur is None else cur[m] or 0) + d[m] for m in measures]
+            out.append(
                 (
                     base_version,
                     "D" if merged[0] <= 0 else "U",
@@ -394,49 +349,19 @@ def _commit_local_delta(
                     *merged,
                 )
             )
-        part_stats = local_part_stats(mv, [c[:3] for c in changes])
-        # the rewritten buckets: every held row (survivors keep their
-        # _lsn/_deleted, normalized as apply_changes' base read does),
-        # then each changed group's new row where it wins by _lsn
-        out = {
-            r[GROUP_KEY_COL]: (
-                *r[: len(mv.schema)],
-                -1 if r[LSN_COL] is None else r[LSN_COL],
-                bool(r[DELETED_COL]),
-                r[PART_COL],
-            )
-            for r in held
-        }
-        for c in changes:
-            prev = out.get(c[2])
-            if prev is None or prev[-3] <= base_version:
-                out[c[2]] = (
-                    *c[2:], base_version, c[1] == "D",
-                    bucket_for_key(c[2], "string", mv.n_buckets),
-                )
-        try:
-            result = mv.overwrite_partitions(
-                spark.createDataFrame(list(out.values()), schema),
-                epoch=base_version,
-                epoch_source=_REFRESH_NS,
-                affected_partitions=buckets,
-                read_version=read_version,
-                lineage_extra=_lineage_of(part_stats),
-            )
-            break
-        except CommitConflictError:
-            mv.refresh()
-            if mv.epoch_committed(base_version, _REFRESH_NS):
-                result = CommitResult(
-                    mv.version, mv.meta["snapshot_id"], base_version, skipped=True
-                )
-                break
-    else:
-        raise ConcurrentCommitError(
-            f"view refresh lost 5 consecutive snapshot-conflict races on {mv.root}"
-        )
+        return out
+
+    stats = apply_changes_local(
+        spark, mv, [d[GROUP_KEY_COL] for d in delta], changes_for,
+        epoch=base_version, epoch_source=_REFRESH_NS,
+    )
+    if stats is None:
+        return _apply_view_delta(
+            mv, spark.createDataFrame(delta, delta_df.schema), group_cols,
+            base_version, measures,
+        ).result
     _finish_refresh(mv, base_version)
-    return result
+    return stats.result
 
 
 def _signed_delta(
@@ -453,29 +378,30 @@ def _signed_delta(
     overhead.  Sums/counts match :func:`_contributions` exactly: ``n_rows``
     = Σsign, per-measure non-NULL count = Σsign over non-NULL rows,
     fixed-point sum = Σ sign·round(value·scale) with NULLs contributing 0."""
-    cols = list(dict.fromkeys(group_cols + value_cols))
-    u = retract_rows.select(*cols).withColumn("_sign", F.lit(-1)).unionByName(
-        add_rows.select(*cols).withColumn("_sign", F.lit(1))
+    cols = [quote(c) for c in dict.fromkeys(group_cols + value_cols)]
+    u = retract_rows.selectExpr(*cols, "-1 AS _sign").unionByName(
+        add_rows.selectExpr(*cols, "1 AS _sign")
     )
     names = _measures(value_cols)
-    aggs = [F.sum("_sign").cast("long").alias(names[0])]
+    aggs = [f"CAST(sum(_sign) AS BIGINT) AS {quote(names[0])}"]
     for i, c in enumerate(value_cols):
-        v = F.round(F.col(c) * scale).cast("long")
+        q = quote(c)
         aggs.append(
-            F.sum(F.when(F.col(c).isNotNull(), F.col("_sign")).otherwise(F.lit(0)))
-            .cast("long")
-            .alias(names[1 + 2 * i])
+            f"CAST(sum(CASE WHEN {q} IS NOT NULL THEN _sign ELSE 0 END) AS BIGINT)"
+            f" AS {quote(names[1 + 2 * i])}"
         )
         aggs.append(
-            F.sum(F.col("_sign") * F.coalesce(v, F.lit(0)))
-            .cast("long")
-            .alias(names[2 + 2 * i])
+            f"CAST(sum(_sign * coalesce(CAST(round({q} * {int(scale)}) AS BIGINT), 0))"
+            f" AS BIGINT) AS {quote(names[2 + 2 * i])}"
         )
     return (
-        u.groupBy(*group_cols)
-        .agg(*aggs)
-        .where(" OR ".join(f"{m} != 0" for m in names))
-        .select(_group_key(group_cols).alias(GROUP_KEY_COL), *group_cols, *names)
+        u.groupBy(*[qcol(c) for c in group_cols])
+        .agg(*[F.expr(a) for a in aggs])
+        .where(" OR ".join(f"{quote(m)} != 0" for m in names))
+        .selectExpr(
+            f"{_group_key(group_cols)} AS {GROUP_KEY_COL}",
+            *[quote(c) for c in (*group_cols, *names)],
+        )
     )
 
 
@@ -491,21 +417,19 @@ def _full_refresh(
     v1: int,
 ) -> RefreshStats:
     agg = _aggregate(base.read(spark), group_cols, value_cols, scale)
-    cur = mv.read(spark).select(
-        GROUP_KEY_COL, *[F.col(m).alias(f"_cur_{m}") for m in measures]
-    )
+    cur = mv.read(spark).selectExpr(GROUP_KEY_COL, *_current_measures(measures))
     # diff against the current view so untouched groups write nothing
     # and vanished groups tombstone; the delta form reuses the same
     # fenced merge as the incremental path (one commit, one epoch).
     joined = agg.join(cur, GROUP_KEY_COL, "full_outer")
-    delta = joined.select(
+    delta = joined.selectExpr(
         GROUP_KEY_COL,
-        *group_cols,
+        *[quote(c) for c in group_cols],
         *[
-            (F.coalesce(F.col(m), F.lit(0)) - F.coalesce(F.col(f"_cur_{m}"), F.lit(0))).alias(m)
+            f"coalesce({quote(m)}, 0) - coalesce({quote('_cur_' + m)}, 0) AS {quote(m)}"
             for m in measures
         ],
-    ).where(" OR ".join(f"{m} != 0" for m in measures))
+    ).where(" OR ".join(f"{quote(m)} != 0" for m in measures))
     stats = _apply_view_delta(mv, delta, group_cols, v1, measures)
     return RefreshStats("full", v0, v1, stats.result)
 
@@ -608,8 +532,8 @@ def refresh_matview(
 
     if changed_keys is not None:
         # caller-supplied change set: both legs are point reads, no feed
-        changed = changed_keys.select(
-            F.col(changed_keys.columns[0]).alias(key)
+        changed = changed_keys.selectExpr(
+            f"{quote(changed_keys.columns[0])} AS {quote(key)}"
         ).distinct().persist()
         try:
             lit_keys = [r[0] for r in changed.limit(SMALL_BATCH_ROWS + 1).collect()]
@@ -632,8 +556,8 @@ def refresh_matview(
     # the exact delta.  Real apply paths always record LSN stats.
     w0 = _lsn_high(prior)
     w0 = -1 if w0 is None else w0
-    feed = base.read_changed_since(spark, w0).select(
-        key, "_deleted", *[c for c in need_cols if c != key]
+    feed = base.read_changed_since(spark, w0).selectExpr(
+        quote(key), "_deleted", *[quote(c) for c in need_cols if c != key]
     )
     head = feed.limit(SMALL_BATCH_ROWS + 1).collect()
     if len(head) <= SMALL_BATCH_ROWS:
@@ -677,13 +601,12 @@ def refresh_matview(
             return _full_refresh(
                 spark, mv, base, group_cols, value_cols, scale, measures, v0, v1
             )
-        keys_df = changed.select(key).distinct()
-        live_changed = changed.where(
-            ~F.coalesce(F.col("_deleted"), F.lit(False))
-        ).select(*need_cols)
+        keys_df = changed.selectExpr(quote(key)).distinct()
+        need = [quote(c) for c in need_cols]
+        live_changed = changed.where("NOT coalesce(_deleted, false)").selectExpr(*need)
         # large key sets keep the broadcast-semi-join plan (a driver-side
         # collect would be the real scale hazard there)
-        prior_rows = prior.read_for_keys(spark, keys_df).select(*need_cols)
+        prior_rows = prior.read_for_keys(spark, keys_df).selectExpr(*need)
         delta = _signed_delta(
             prior_rows, live_changed, group_cols, value_cols, scale
         )
@@ -698,10 +621,10 @@ def read_matview(spark: SparkSession, mv: IcehouseTable) -> DataFrame:
     semantics restored per measure (a sum reads NULL when every value in
     the group was NULL — its non-NULL count is 0)."""
     _, group_cols, value_cols, _ = _view_spec(mv)
-    cols: list = [*group_cols, "n_rows"]
-    names = _measures(value_cols)
+    cols = [quote(c) for c in (*group_cols, "n_rows")]
+    names = [quote(n) for n in _measures(value_cols)]
     for i in range(len(value_cols)):
         n_vals, total = names[1 + 2 * i], names[2 + 2 * i]
         cols.append(n_vals)
-        cols.append(F.when(F.col(n_vals) > 0, F.col(total)).alias(total))
-    return mv.read(spark).select(*cols)
+        cols.append(f"CASE WHEN {n_vals} > 0 THEN {total} END AS {total}")
+    return mv.read(spark).selectExpr(*cols)

@@ -214,3 +214,33 @@ def test_bpe_apply_arrow_rejects_new_id_past_element_type(spark):
     m = [{"rank": 0, "left": 1, "right": 2, "new_id": 2**31, "count": 0}]
     with _pytest.raises(ValueError, match="does not fit"):
         bpe_apply(df, m, method="arrow").collect()
+
+
+def test_bpe_apply_fold_matches_arrow_on_bigint_tokens(spark):
+    """The Catalyst fold takes the tokens column's element type: on an
+    array<bigint> column (ids past 2^31-1, chained and equal-token merges,
+    empty and NULL rows) it equals the Arrow kernel, and a non-causal
+    table's fold fallback runs on bigint tokens too."""
+    big = 3_000_000_000
+    df = spark.createDataFrame(
+        [
+            ("a", [big, big + 1, big + 2, big, big + 1]),
+            ("b", [1, 1, 1, 2, 1, 1]),
+            ("empty", []),
+            ("nul", None),
+        ],
+        "doc_id string, tokens array<bigint>",
+    )
+    m = [
+        {"rank": 0, "left": big, "right": big + 1, "new_id": big + 5, "count": 0},
+        {"rank": 1, "left": 1, "right": 1, "new_id": big + 6, "count": 0},
+        {"rank": 2, "left": big + 5, "right": big + 2, "new_id": big + 7, "count": 0},
+    ]
+    fold = {r["doc_id"]: r["tokens"] for r in bpe_apply(df, m, method="fold").collect()}
+    arrow = {r["doc_id"]: r["tokens"] for r in bpe_apply(df, m, method="arrow").collect()}
+    assert fold == arrow
+    assert fold["a"] == [big + 7, big + 5] and fold["b"] == [big + 6, 1, 2, big + 6]
+    assert fold["empty"] == [] and fold["nul"] is None
+    non_causal = [{"rank": 0, "left": big + 9, "right": big + 2, "new_id": big + 8, "count": 0}]
+    got = bpe_apply(df, non_causal, method="arrow").collect()
+    assert {r["doc_id"]: r["tokens"] for r in got}["a"] == [big, big + 1, big + 2, big, big + 1]

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_pipeline_spark.cdc import apply as apply_mod
 from data_pipeline_spark.cdc.apply import (
     apply_changes,
     apply_changes_mor,
@@ -79,9 +80,12 @@ def _recompute(spark, base):
 
 def _lineage(spark, t):
     return sorted(
-        (r["epoch"], r["partition"], r["rows_after"], r.get("lsn_min"), r.get("lsn_max"),
-         r.get("rows_upserted"), r.get("rows_deleted"))
-        for r in t.refresh().meta["lineage"]
+        (
+            (r["epoch"], r["partition"], r["rows_after"], r.get("lsn_min"), r.get("lsn_max"),
+             r.get("rows_upserted"), r.get("rows_deleted"))
+            for r in t.refresh().meta["lineage"]
+        ),
+        key=repr,
     )
 
 
@@ -130,7 +134,7 @@ def test_driver_view_merge_matches_spark_merge(spark, monkeypatch):
                 refresh_matview(spark, views["spark"].refresh(), auto_full_ratio=0)
         refresh_matview(spark, multi["keyed"].refresh(), changed_keys=batch.select("doc_id"))
         with monkeypatch.context() as m:
-            m.setattr(mv_mod, "_held_rows", lambda t, buckets: 10**9)
+            m.setattr(apply_mod, "_held_rows", lambda t, bucket: 10**9)
             refresh_matview(spark, multi["over_cap"].refresh())
         for views in (single, multi):
             want = _physical(spark, views["spark"])
@@ -225,6 +229,100 @@ def test_collected_index_refresh_matches_spark_path(spark, tmp_path):
     assert rows(big) == want
     wm = lambda idx: idx.index.refresh().meta["properties"]["index.lsn-watermark"]  # noqa: E731
     assert wm(small) == wm(big) == str(lsn)
+
+
+def test_index_driver_commit_matches_spark_merge(spark, tmp_path, monkeypatch):
+    """Two indexes follow one base: one commits each small refresh from the
+    driver (``apply_changes_local``), the other is forced through the
+    Spark ``apply_changes`` merge.  After a NULL indexed value, a
+    delete→reinsert, a commit that loses a race and rebuilds, and a
+    >1000-row catch-up (Spark path for both), their stored rows, lineage
+    and watermarks are identical."""
+    base = _table(n_buckets=4)
+    apply_changes(
+        base,
+        spark.createDataFrame(
+            [(i, "U", f"k{i:03d}", f"s{i % 5}", i, None) for i in range(60)], DDL
+        ),
+        epoch=0,
+    )
+    base = base.refresh()
+    driver = SecondaryIndex.create(spark, base, str(tmp_path / "driver"), "source")
+    merge = SecondaryIndex.create(spark, base, str(tmp_path / "merge"), "source")
+    local_calls = []
+    real_local = apply_mod.apply_changes_local
+
+    def counted_local(*a, **kw):
+        out = real_local(*a, **kw)
+        local_calls.append(out is not None)
+        return out
+
+    monkeypatch.setattr(apply_mod, "apply_changes_local", counted_local)
+
+    def refresh_both():
+        local_calls.clear()
+        driver.refresh(spark)
+        took_driver = list(local_calls)
+        with monkeypatch.context() as m:
+            m.setattr(apply_mod, "_held_rows", lambda t, bucket: 10**9)
+            merge.refresh(spark)
+        return took_driver
+
+    epochs = [
+        # a NULL indexed value, a delete, an update
+        [(100, "U", "k001", None, 1, None), (101, "D", "k002", None, None, None),
+         (102, "U", "k003", "s9", 3, None)],
+        # delete→reinsert within one epoch and across epochs
+        [(110, "D", "k004", None, None, None), (111, "U", "k004", "s7", 4, None),
+         (112, "U", "k002", "s8", 2, None), (113, "D", "k001", None, None, None)],
+    ]
+    for ep, rows in enumerate(epochs, start=1):
+        apply_changes_mor(base.refresh(), spark.createDataFrame(rows, DDL), epoch=ep)
+        assert refresh_both() == [True]
+
+    # a commit that loses a race: another writer rewrites the index
+    # buckets first, so each path rebuilds from a fresh read
+    real_overwrite = IcehouseTable.overwrite_partitions
+    raced = set()
+
+    def racing(self, df, **kw):
+        if self.root not in raced and kw.get("read_version") is not None:
+            raced.add(self.root)
+            other = IcehouseTable.load(self.root)
+            real_overwrite(other, other.read(spark, with_part_col=True, with_meta=True))
+        return real_overwrite(self, df, **kw)
+
+    apply_changes_mor(
+        base.refresh(),
+        spark.createDataFrame([(120, "U", "k005", "s6", 5, None), (121, "U", "k001", "s1", 1, None)], DDL),
+        epoch=3,
+    )
+    with monkeypatch.context() as m:
+        m.setattr(IcehouseTable, "overwrite_partitions", racing)
+        assert refresh_both() == [True]
+    assert raced == {driver.index.root, merge.index.root}
+
+    # a catch-up past SMALL_BATCH_ROWS stays on the Spark merge
+    apply_changes_mor(
+        base.refresh(),
+        spark.createDataFrame(
+            [(1000 + i, "U", f"n{i:04d}", None if i % 50 == 0 else f"s{i % 4}", i, None)
+             for i in range(1100)],
+            DDL,
+        ),
+        epoch=4,
+    )
+    assert refresh_both() == []
+
+    want = sorted(
+        tuple(r) for r in base.refresh().read(spark).select("doc_id", "source").collect()
+    )
+    for idx in (driver, merge):
+        assert sorted(tuple(r) for r in idx.index.refresh().read(spark).collect()) == want
+    assert _physical(spark, driver.index) == _physical(spark, merge.index)
+    assert _lineage(spark, driver.index) == _lineage(spark, merge.index)
+    wm = lambda idx: idx.index.refresh().meta["properties"]["index.lsn-watermark"]  # noqa: E731
+    assert wm(driver) == wm(merge) == "2099"
 
 
 @pytest.mark.parametrize("key_type", ["string", "bigint", "int"])
@@ -341,9 +439,10 @@ def mor_epoch(spark, tmp_path_factory):
 
 # Spark jobs of one ≤1000-row refresh on the fixture above, as measured
 # (local[4], AQE on: every shuffle stage of a plan runs as its own job).
-# Before the driver-side paths the same refreshes ran 24 and 14 jobs.
+# Before the driver-side paths the same refreshes ran 24 and 14 jobs; the
+# index ran 10 while its small batch still went through apply_changes.
 MATVIEW_SMALL_REFRESH_JOBS = 8
-INDEX_SMALL_REFRESH_JOBS = 10
+INDEX_SMALL_REFRESH_JOBS = 6
 
 
 def test_small_matview_refresh_job_budget(spark, mor_epoch):
