@@ -234,8 +234,9 @@ def run_stats_skipping() -> dict:
     (`write.stats-columns` manifest ranges + `read(stats_filters=)`): build
     a sorted, stats-bearing table of 2M rows split into ~25k-row files and
     compare a day-slice scan with reader-side pruning only vs driver-side
-    file skipping.  The full sweep lives in tools/bench_stats_skipping.py;
-    this inline version pins the skip ratio into every BENCH_r{N}.json."""
+    file skipping.  The full sweep's numbers are in BENCH.md ("Manifest
+    data skipping"); this inline version pins the skip ratio into every
+    BENCH_r{N}.json."""
     import shutil as _shutil
 
     from pyspark.sql import functions as F

@@ -12,7 +12,7 @@ from .changelog import (
     materialize_change_log,
     read_change_log,
 )
-from .cdf import diff_between_refs, snapshot_diff
+from .cdf import diff_between_refs, snapshot_diff, snapshot_diff_images
 from .emit import (
     changed_since_events,
     emit_changed_since,
@@ -20,7 +20,6 @@ from .emit import (
     emit_published_feed,
     emit_to_files,
     kafka_sink_frame,
-    snapshot_diff_images,
 )
 from .quarantine import drain_dlq
 from .quarantine import (

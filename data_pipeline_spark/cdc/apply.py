@@ -103,7 +103,7 @@ class ApplyStats:
     def cas_retries(self) -> int:
         """CAS races this apply's commit lost before landing (0 = first
         try) — the contention counter a multi-writer deployment aggregates
-        (see tools/bench_concurrent.py)."""
+        (BENCH.md, "Concurrent-ingest throughput vs single writer")."""
         return self.result.cas_retries
 
 

@@ -45,18 +45,6 @@ from .apply import ApplyStats, apply_changes
 from .cdf import snapshot_diff
 
 
-def _lsn_high(table: IcehouseTable) -> int:
-    highs = [
-        e.get("lsn_max") for e in table.meta["partitions"].values()
-    ] + [
-        d.get("lsn_max")
-        for ds in table.meta.get("deltas", {}).values()
-        for d in ds
-    ]
-    known = [h for h in highs if h is not None]
-    return max(known) if known else 0
-
-
 @dataclass(frozen=True)
 class CherryPickStats:
     branch: str
@@ -127,7 +115,7 @@ def cherry_pick(
     delta = snapshot_diff(spark, target.root, v_from, v_to)
     head = IcehouseTable.load(target.root, version=v_to)
     delta = _remap_renamed_columns(delta, target, head, branch)
-    lsn0 = _lsn_high(target) + 1
+    lsn0 = target.lsn_high(default=0) + 1
     key = target.key_col
     if lsn == "preserve":
         # per-key true LSNs from the branch head snapshot (with_meta keeps

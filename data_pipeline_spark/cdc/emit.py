@@ -25,9 +25,9 @@ Design points:
   ``snapshot_diff``'s single-image feed flattens; consumers that want the
   old value of an update need the two-image form).
 - **Scale shape**: two bucket-pruned snapshot scans + one co-partitioned
-  full-outer join on the immutable key-hash layout (same cost model as
-  ``cdc/cdf.py``), then a pure ``to_json`` projection — whole-stage
-  codegen, zero Python, output size O(changed rows).
+  full-outer join on the immutable key-hash layout
+  (:func:`.cdf.snapshot_diff_images`), then a pure ``to_json`` projection —
+  whole-stage codegen, zero Python, output size O(changed rows).
 """
 
 from __future__ import annotations
@@ -36,111 +36,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..table.exprs import conform, quote, quote_all, str_lit
+from ..table.exprs import quote, str_lit
 from ..table.icehouse import DELETED_COL, LSN_COL, IcehouseTable
-
-
-def _resolve_ref(root: str, ref: "int | str") -> int:
-    if isinstance(ref, str):
-        tags = IcehouseTable.load(root).meta.get("tags", {})
-        if ref not in tags:
-            raise KeyError(f"no tag {ref!r} on table {root}")
-        return int(tags[ref])
-    return int(ref)
-
-
-def snapshot_diff_images(
-    spark: SparkSession,
-    root: str,
-    v_from: "int | str",
-    v_to: "int | str",
-) -> DataFrame:
-    """Two-image row-level delta between two committed versions:
-    ``(key, op I/U/D, before struct|null, after struct|null, lsn)``.
-
-    ``before`` is the row's value struct in ``v_from`` (null for inserts),
-    ``after`` its value struct in ``v_to`` (null for deletes) — the
-    two-image generalization of ``cdf.snapshot_diff`` (which keeps one
-    image per row).  ``lsn`` is the TRUE LSN of the ``v_to`` row that won
-    the key — for deletes, the retained tombstone's LSN; if a tombstone was
-    compacted away between the versions the lsn is null and the emitter
-    substitutes the snapshot watermark.
-
-    Value columns are the union of both schemas, so additive evolution
-    between the versions surfaces as ``before.<new_col> = null`` — exactly
-    how the table itself reads pre-evolution files.
-    """
-    vf = _resolve_ref(root, v_from)
-    try:
-        old_t = IcehouseTable.load(root, version=vf)
-    except FileNotFoundError:
-        if vf != 0:
-            raise
-        # v0 is BY CONSTRUCTION the empty table; if snapshot retention has
-        # expired its metadata, a bootstrap diff (0 -> head) still has a
-        # well-defined answer — every live head row as an insert
-        old_t = None
-    new_t = IcehouseTable.load(root, version=_resolve_ref(root, v_to))
-    key = new_t.key_col
-    fields: dict[str, object] = {}
-    old_fields = list(old_t.schema.fields) if old_t is not None else []
-    for f in old_fields + list(new_t.schema.fields):
-        if f.name != key and f.name not in fields:
-            fields[f.name] = f.dataType
-    value_cols = list(fields)
-
-    def _image(t: IcehouseTable, alias: str, with_tombstones: bool):
-        # live rows define presence in the FROM snapshot; the TO snapshot
-        # keeps tombstones so a delete's true LSN rides along.  A value
-        # column the snapshot lacks reads as a typed NULL.
-        df = t.read(spark, with_meta=with_tombstones)
-        have = {f.name: f.dataType for f in df.schema.fields}
-        full = conform(
-            df,
-            T.StructType(
-                [
-                    T.StructField(c, have[c] if c in have else fields[c])
-                    for c in (key, *value_cols)
-                ]
-            ),
-            extra=(
-                [
-                    f"coalesce({quote(DELETED_COL)}, false) AS _dead",
-                    f"{quote(LSN_COL)} AS _vlsn",
-                ]
-                if with_tombstones
-                else []
-            ),
-        )
-        return full.selectExpr(
-            f"{quote(key)} AS _k",
-            f"struct({quote_all(value_cols)}) AS {alias}",
-            *(["_dead", "_vlsn"] if with_tombstones else []),
-        )
-
-    new = _image(new_t, "_after_raw", with_tombstones=True)
-    old = (
-        _image(old_t, "_before", with_tombstones=False)
-        if old_t is not None
-        else _image(new_t, "_before", with_tombstones=False).limit(0)
-    )
-    j = old.join(new, "_k", "full_outer")
-    after_live = "(_after_raw IS NOT NULL AND NOT coalesce(_dead, false))"
-    op = (
-        f"CASE WHEN _before IS NULL AND {after_live} THEN 'I'"
-        f" WHEN _before IS NOT NULL AND {after_live}"
-        " AND NOT (_before <=> _after_raw) THEN 'U'"
-        f" WHEN _before IS NOT NULL AND NOT {after_live} THEN 'D' END"
-    )
-    return j.selectExpr(
-        f"_k AS {quote(key)}",
-        f"{op} AS `op`",
-        "_before AS `before`",
-        f"CASE WHEN {after_live} THEN _after_raw END AS `after`",
-        "_vlsn AS `lsn`",
-    ).where("`op` IS NOT NULL")
+from .cdf import resolve_ref, snapshot_diff_images
 
 
 def emit_debezium_envelopes(
@@ -168,15 +67,10 @@ def emit_debezium_envelopes(
       same feed is byte-identical (modulo the commit timestamp, which is
       pinned in the metadata, hence byte-identical too).
     """
-    v_to = _resolve_ref(root, ref_to)
+    v_to = resolve_ref(root, ref_to)
     new_t = IcehouseTable.load(root, version=v_to)
     if lsn_fallback is None:
-        highs = [
-            e.get("lsn_max")
-            for e in list(new_t.meta["partitions"].values())
-            + [d for ds in new_t.meta.get("deltas", {}).values() for d in ds]
-        ]
-        lsn_fallback = max((h for h in highs if h is not None), default=0)
+        lsn_fallback = new_t.lsn_high(default=0)
     ts_ms = int((new_t.meta.get("committed_at") or 0) * 1000)
     diff = snapshot_diff_images(spark, root, ref_from, v_to)
     key = new_t.key_col
@@ -375,7 +269,7 @@ def emit_to_files(
     if os.path.exists(checkpoint):
         with open(checkpoint) as fh:
             last = int(_json.load(fh)["last_emitted_version"])
-    head = _resolve_ref(root, ref_to) if ref_to is not None else IcehouseTable.load(root).version
+    head = resolve_ref(root, ref_to) if ref_to is not None else IcehouseTable.load(root).version
     empty: dict = {"emitted_versions": None, "files": 0, "rows": 0}
     if head <= last:
         return empty

@@ -110,13 +110,12 @@ class ReplayRunner:
         change_log: DataFrame,
         epochs: list[int] | None = None,
         fail_after_commit_of: int | None = None,
-        prefetch_stats: bool = True,
     ) -> ReplayReport:
         """Replay epochs (ascending).  ``fail_after_commit_of`` simulates a
         crash between table commit and checkpoint write (resume-safety tests).
 
-        ``prefetch_stats``: overlap the NEXT epoch's lineage/affected-
-        partition stats scan with the current epoch's merge+write.  The
+        The NEXT epoch's lineage/affected-partition stats scan runs in a
+        background thread, overlapping the current epoch's merge+write.  The
         stats read only the change log (never table state), so prefetching
         is side-effect-free: the exactly-once fence still runs at apply
         time, and a prefetched result for a fenced epoch is just discarded.
@@ -135,7 +134,7 @@ class ReplayRunner:
         batches = {
             ep: change_log.where(F.col("epoch") == ep).drop("epoch") for ep in epochs
         }
-        pool = ThreadPoolExecutor(max_workers=1) if prefetch_stats else None
+        pool = ThreadPoolExecutor(max_workers=1)
         futures: dict[int, object] = {}
         try:
             for i, ep in enumerate(epochs):
@@ -149,7 +148,7 @@ class ReplayRunner:
                     )
                     continue
                 batch = batches[ep]
-                if pool is not None and i + 1 < len(epochs):
+                if i + 1 < len(epochs):
                     nxt = epochs[i + 1]
                     # pin the bucket modulus AND key type at submit: the
                     # worker must not read either from the shared handle,
@@ -205,6 +204,5 @@ class ReplayRunner:
                 report.total_events += stats.events_in
                 report.total_seconds += dt
         finally:
-            if pool is not None:
-                pool.shutdown(wait=False, cancel_futures=True)
+            pool.shutdown(wait=False, cancel_futures=True)
         return report

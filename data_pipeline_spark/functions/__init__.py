@@ -5,7 +5,7 @@ whole-stage codegen) or an Arrow-batched pandas UDF — zero per-row Python,
 per the engine contract.
 """
 
-from .keys import date_id, md5_key, surrogate_key, surrogate_key32
+from .keys import date_id, md5_key, surrogate_key
 from .parsing import (
     clean_html,
     normalize_phone,
@@ -34,7 +34,7 @@ from .sketches import (
 )
 
 __all__ = [
-    "date_id", "md5_key", "surrogate_key", "surrogate_key32",
+    "date_id", "md5_key", "surrogate_key",
     "clean_html", "normalize_phone", "normalize_url", "parse_availability",
     "parse_price", "source_slug", "truncate_text",
     "avg_word_len", "doc_fingerprint", "lang_id", "punct_ratio",

@@ -30,11 +30,6 @@ def surrogate_key(*cols: Column | str) -> Column:
     return F.xxhash64(F.concat_ws(KEY_SEP, *[F.col(c) if isinstance(c, str) else c for c in cols]))
 
 
-def surrogate_key32(*cols: Column | str) -> Column:
-    """32-bit variant (reference-width): xxhash64 folded into int32 range."""
-    return F.pmod(surrogate_key(*cols), F.lit(2**31)).cast("int")
-
-
 def md5_key(*cols: Column | str) -> Column:
     """MD5-hex surrogate (cross-engine portable: identical in DuckDB/BigQuery).
 

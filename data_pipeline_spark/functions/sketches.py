@@ -9,8 +9,7 @@ Design for 100 TB:
   correctness oracle can recompute signatures exactly.
 - SimHash uses Spark's builtin xxhash64 bit-sliced JVM-side (Spark-only; its
   oracle check is rows-only).
-- Cosine is zip_with + aggregate in double precision (codegen'd); the Pandas
-  UDF variant exists for wide embeddings where Arrow-batch numpy beats codegen.
+- Cosine is zip_with + aggregate in double precision (codegen'd).
 
 Reference parity: the reference's only similarity machinery is a FAISS L2
 index over title embeddings (``product_matching/prediction_pipeline/
@@ -19,10 +18,8 @@ product_matcher.py:50-142``); these sketches are its scale-out generalization.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 
 def _c(col: Column | str) -> Column:
@@ -175,21 +172,6 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     na = F.sqrt(F.aggregate(av, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
     nb = F.sqrt(F.aggregate(bv, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
     return F.when((na > 0) & (nb > 0), dot / (na * nb))
-
-
-def l2_norm_udf():
-    """Arrow-batched L2 norm: one numpy matrix op per batch (embeddings are
-    uniform-length, so the batch stacks into a dense 2-D array — no per-row
-    Python).  Returned lazily (pandas_udf type parsing needs a session)."""
-
-    @pandas_udf("double")
-    def _norm(v: pd.Series) -> pd.Series:
-        import numpy as np
-
-        mat = np.stack(v.to_numpy()).astype("float64")
-        return pd.Series(np.sqrt((mat * mat).sum(axis=1)))
-
-    return _norm
 
 
 def simhash64_sketch_frame(

@@ -8,7 +8,6 @@ from .icehouse import (
     ConcurrentCommitError,
     IcehouseTable,
     SchemaEvolutionError,
-    conform_to_schema,
     evolve_schema,
 )
 
@@ -26,7 +25,6 @@ __all__ = [
     "create_index",
     "open_index",
     "TableFormat",
-    "conform_to_schema",
     "create_table",
     "evolve_schema",
     "open_table",

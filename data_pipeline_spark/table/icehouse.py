@@ -181,13 +181,6 @@ def evolve_schema(current: T.StructType, incoming: T.StructType) -> tuple[T.Stru
     return T.StructType(merged), changed
 
 
-def conform_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Project ``df`` onto ``schema`` — missing columns become NULL, present
-    columns are cast only where their type differs (one ``selectExpr``;
-    see :func:`.exprs.conform`).  The one conform of every write path."""
-    return conform(df, schema)
-
-
 def _meta_fields(names) -> list[T.StructField]:
     """The CDC meta columns among ``names``, typed as the files store them."""
     return [
@@ -1104,6 +1097,20 @@ class IcehouseTable:
             d["rows"] for ds in self.meta.get("deltas", {}).values() for d in ds
         )
 
+    def lsn_high(self, *, default: int | None = None, strict: bool = False) -> int | None:
+        """Snapshot LSN high-water mark: the highest ``lsn_max`` any live base
+        or delta file records (manifest metadata only, no scan).  ``default``
+        when no file records one, and with ``strict`` also when any live file
+        lacks one (a mark that could sit below that file's changes)."""
+        highs = [e.get("lsn_max") for e in self.meta["partitions"].values()]
+        highs += [
+            d.get("lsn_max") for ds in self.meta.get("deltas", {}).values() for d in ds
+        ]
+        known = [h for h in highs if h is not None]
+        if not known or (strict and len(known) != len(highs)):
+            return default
+        return max(known)
+
     # -- write path -----------------------------------------------------------
 
     def overwrite_partitions(
@@ -1166,7 +1173,7 @@ class IcehouseTable:
         with_part = df if PART_COL in df.columns else df.withColumn(PART_COL, self.bucket_expr())
         # conform to the (possibly evolved) schema; CDC meta columns
         # (_lsn/_deleted) ride along when the caller provides them
-        out = conform_to_schema(
+        out = conform(
             with_part,
             T.StructType(
                 [
@@ -1224,7 +1231,7 @@ class IcehouseTable:
             self.ensure_key_type_unchanged(new_schema)
         plan_buckets = self.n_buckets
         with_part = df if PART_COL in df.columns else df.withColumn(PART_COL, self.bucket_expr())
-        out = conform_to_schema(
+        out = conform(
             with_part,
             T.StructType(
                 [

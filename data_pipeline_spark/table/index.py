@@ -110,18 +110,6 @@ class SecondaryIndex:
 
     # -- maintenance -------------------------------------------------------
 
-    @staticmethod
-    def _meta_lsn_high(t: IcehouseTable) -> int:
-        """Highest lsn_max any live file of ``t`` records (driver-side
-        metadata only); -1 when nothing is recorded."""
-        vals = [e.get("lsn_max") for e in t.meta["partitions"].values()]
-        vals += [
-            d.get("lsn_max")
-            for ds in t.meta.get("deltas", {}).values()
-            for d in ds
-        ]
-        return max((v for v in vals if v is not None), default=-1)
-
     def refresh(
         self,
         spark: SparkSession,
@@ -165,7 +153,7 @@ class SecondaryIndex:
         # freely interleavable (real feed LSNs from one path can never
         # out-rank a LATER point-read refresh).
         ordinal = (
-            max(self._meta_lsn_high(self.index), self._meta_lsn_high(base), wm) + 1
+            max(self.index.lsn_high(default=-1), base.lsn_high(default=-1), wm) + 1
         )
         stats = part_stats = rescan = None
         if changed_keys is not None:

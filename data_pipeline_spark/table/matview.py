@@ -174,24 +174,6 @@ def _last_refreshed_version(mv: IcehouseTable) -> int:
     return high
 
 
-def _lsn_high(table: IcehouseTable) -> int | None:
-    """Snapshot LSN high-water mark from per-file footer stats in metadata
-    (no scan).  ``None`` when the snapshot has no stats-bearing files —
-    callers must then take the full-recompute path (conservative)."""
-    highs = [
-        e.get("lsn_max")
-        for e in table.meta["partitions"].values()
-    ] + [
-        d.get("lsn_max")
-        for ds in table.meta.get("deltas", {}).values()
-        for d in ds
-    ]
-    known = [h for h in highs if h is not None]
-    if len(known) != len(highs) or not highs:
-        return None
-    return max(known)
-
-
 def create_matview(
     spark: SparkSession,
     mv_root: str,
@@ -498,8 +480,8 @@ def refresh_matview(
         except FileNotFoundError:
             full = True  # snapshot expired — incremental retract impossible
         else:
-            w0 = _lsn_high(prior)
-            w1 = _lsn_high(base)
+            w0 = prior.lsn_high(strict=True)
+            w1 = base.lsn_high(strict=True)
             # LSN moving backwards = the base was rolled back; forward-only
             # changed-since cannot see the reversal.  A head snapshot with
             # files missing LSN stats (w1 None on non-empty) defeats the
@@ -554,8 +536,7 @@ def refresh_matview(
     # since then returns every live key, and the retract side reads every
     # prior row of those keys — O(table) instead of O(changed), but still
     # the exact delta.  Real apply paths always record LSN stats.
-    w0 = _lsn_high(prior)
-    w0 = -1 if w0 is None else w0
+    w0 = prior.lsn_high(default=-1, strict=True)
     feed = base.read_changed_since(spark, w0).selectExpr(
         quote(key), "_deleted", *[quote(c) for c in need_cols if c != key]
     )
