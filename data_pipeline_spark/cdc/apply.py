@@ -408,15 +408,16 @@ def _held_rows(table: IcehouseTable, bucket: int) -> int:
     )
 
 
-def _has_local_timestamp(dt: T.DataType) -> bool:
-    if isinstance(dt, T.TimestampType):
+def holds_type(dt: T.DataType, kinds) -> bool:
+    """Is ``dt``, or any type nested in it, an instance of ``kinds``?"""
+    if isinstance(dt, kinds):
         return True
     if isinstance(dt, T.StructType):
-        return any(_has_local_timestamp(f.dataType) for f in dt.fields)
+        return any(holds_type(f.dataType, kinds) for f in dt.fields)
     if isinstance(dt, T.ArrayType):
-        return _has_local_timestamp(dt.elementType)
+        return holds_type(dt.elementType, kinds)
     if isinstance(dt, T.MapType):
-        return _has_local_timestamp(dt.keyType) or _has_local_timestamp(dt.valueType)
+        return holds_type(dt.keyType, kinds) or holds_type(dt.valueType, kinds)
     return False
 
 
@@ -457,7 +458,7 @@ def apply_changes_local(
             CommitResult(table.version, table.meta["snapshot_id"], epoch, skipped=True), 0, 0, 0
         )
     key, schema, n_buckets = table.key_col, table.schema, table.n_buckets
-    if _has_local_timestamp(schema):
+    if holds_type(schema, T.TimestampType):
         # a collected local-time datetime need not survive the trip back
         # (a DST fall-back hour is ambiguous): keep such tables on Spark
         return None

@@ -14,13 +14,16 @@ key-wise full-outer join of two snapshots.
 Debezium emitter's input, ``cdc/emit.py``); :func:`snapshot_diff` flattens
 it to one image per row.
 
-Scale: both snapshot scans prune to the SAME bucket layout (the key hash
-spec is immutable per table), so Spark co-partitions the join on the key
-with no residual skew surprises; unchanged rows are dropped by a struct
-null-safe compare — at typical epoch deltas the output is a small fraction
-of the table.  Cost is two table scans — the trade for not persisting
-per-commit change files (the write path stays one pass; see
-``BENCH.md`` on why the write path refuses extra materializations).
+Scale: when both snapshots share a bucket count and a column mapping,
+only the buckets whose manifest entries differ are read — a bucket whose
+base file and delta list are the same files in both snapshots holds the
+same rows in both, so an epoch's diff costs O(changed buckets), not
+O(table).  Otherwise (a rebucket, a rename or drop in between) both whole
+snapshots are read.  Both scans prune to the same bucket layout, so Spark
+co-partitions the join on the key; unchanged rows are dropped by a struct
+null-safe compare.  The trade for not persisting per-commit change files
+(the write path stays one pass; see ``BENCH.md`` on why the write path
+refuses extra materializations).
 """
 
 from __future__ import annotations
@@ -40,6 +43,54 @@ def resolve_ref(root: str, ref: "int | str") -> int:
             raise KeyError(f"no tag {ref!r} on table {root}")
         return int(tags[ref])
     return int(ref)
+
+
+def file_refs(meta: dict) -> dict[str, tuple]:
+    """Per bucket: its base file path and delta file paths."""
+    parts, deltas = meta["partitions"], meta.get("deltas", {})
+    return {
+        b: (parts.get(b, {}).get("path"), tuple(d["path"] for d in deltas.get(b, [])))
+        for b in set(parts) | {b for b, ds in deltas.items() if ds}
+    }
+
+
+def changed_buckets(old_meta: dict, new_meta: dict) -> "list[int] | None":
+    """Buckets whose rows can differ between two snapshots of one table: the
+    ones whose base file or delta list differ.  ``None`` when that cannot be
+    told from file references — a different bucket count, or a different
+    rename / drop log (the same file then reads as other columns)."""
+    if (
+        old_meta["n_buckets"] != new_meta["n_buckets"]
+        or old_meta.get("column_renames", []) != new_meta.get("column_renames", [])
+        or old_meta.get("dropped_columns", []) != new_meta.get("dropped_columns", [])
+    ):
+        return None
+    old, new = file_refs(old_meta), file_refs(new_meta)
+    return sorted(int(b) for b in set(old) | set(new) if old.get(b) != new.get(b))
+
+
+def diff_rows(joined: DataFrame, key: str) -> DataFrame:
+    """The two-image delta rows of a key-wise join of two snapshots.
+
+    ``joined`` holds ``_k`` (the key), ``_before`` (the FROM row's value
+    struct, null when the key was not live there), ``_after_raw`` (the TO
+    row's value struct, tombstones included), ``_dead`` and ``_vlsn``
+    (the TO row's tombstone flag and LSN).  Unchanged keys, no-op updates
+    and deletes of keys that were never live drop out."""
+    after_live = "(_after_raw IS NOT NULL AND NOT coalesce(_dead, false))"
+    op = (
+        f"CASE WHEN _before IS NULL AND {after_live} THEN 'I'"
+        f" WHEN _before IS NOT NULL AND {after_live}"
+        " AND NOT (_before <=> _after_raw) THEN 'U'"
+        f" WHEN _before IS NOT NULL AND NOT {after_live} THEN 'D' END"
+    )
+    return joined.selectExpr(
+        f"_k AS {quote(key)}",
+        f"{op} AS `op`",
+        "_before AS `before`",
+        f"CASE WHEN {after_live} THEN _after_raw END AS `after`",
+        "_vlsn AS `lsn`",
+    ).where("`op` IS NOT NULL")
 
 
 def snapshot_diff_images(
@@ -82,11 +133,15 @@ def snapshot_diff_images(
             fields[f.name] = f.dataType
     value_cols = list(fields)
 
+    buckets = (
+        changed_buckets(old_t.meta, new_t.meta) if old_t is not None else None
+    )
+
     def _image(t: IcehouseTable, alias: str, with_tombstones: bool):
         # live rows define presence in the FROM snapshot; the TO snapshot
         # keeps tombstones so a delete's true LSN rides along.  A value
         # column the snapshot lacks reads as a typed NULL.
-        df = t.read(spark, with_meta=with_tombstones)
+        df = t.read(spark, partitions=buckets, with_meta=with_tombstones)
         have = {f.name: f.dataType for f in df.schema.fields}
         full = conform(
             df,
@@ -117,21 +172,7 @@ def snapshot_diff_images(
         if old_t is not None
         else _image(new_t, "_before", with_tombstones=False).limit(0)
     )
-    j = old.join(new, "_k", "full_outer")
-    after_live = "(_after_raw IS NOT NULL AND NOT coalesce(_dead, false))"
-    op = (
-        f"CASE WHEN _before IS NULL AND {after_live} THEN 'I'"
-        f" WHEN _before IS NOT NULL AND {after_live}"
-        " AND NOT (_before <=> _after_raw) THEN 'U'"
-        f" WHEN _before IS NOT NULL AND NOT {after_live} THEN 'D' END"
-    )
-    return j.selectExpr(
-        f"_k AS {quote(key)}",
-        f"{op} AS `op`",
-        "_before AS `before`",
-        f"CASE WHEN {after_live} THEN _after_raw END AS `after`",
-        "_vlsn AS `lsn`",
-    ).where("`op` IS NOT NULL")
+    return diff_rows(old.join(new, "_k", "full_outer"), key)
 
 
 def snapshot_diff(

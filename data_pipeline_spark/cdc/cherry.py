@@ -99,15 +99,8 @@ def cherry_pick(
     # Expiry note: branch heads and fork anchors are pinned against
     # expire_snapshots, but a superseded picked head is not — run picks
     # more often than snapshot expiry or the anchor load fails loudly.
-    ns = f"cherry:{branch}"
-    last_picked = -1
-    for k in target.meta.get("committed_epochs", {}):
-        k_ns, _, ep = k.rpartition(":")
-        if k_ns == ns:
-            last_picked = max(last_picked, int(ep))
-    for lo, hi in target.meta.get("committed_epoch_ranges", {}).get(ns, []):
-        last_picked = max(last_picked, hi)
-    v_from = max(int(fork["at_version"]), last_picked)
+    last_picked = target.last_epoch(f"cherry:{branch}")
+    v_from = max(int(fork["at_version"]), -1 if last_picked is None else last_picked)
     v_to = int(heads[branch])
     if v_to <= v_from:
         # no branch commits since the fork (or since the last publish)

@@ -24,10 +24,17 @@ Design points:
   ``before`` AND ``after``, ``d`` carries ``before`` only (the convention
   ``snapshot_diff``'s single-image feed flattens; consumers that want the
   old value of an update need the two-image form).
-- **Scale shape**: two bucket-pruned snapshot scans + one co-partitioned
-  full-outer join on the immutable key-hash layout
+- **Scale shape**: two snapshot scans of the changed buckets + one
+  co-partitioned full-outer join on the immutable key-hash layout
   (:func:`.cdf.snapshot_diff_images`), then a pure ``to_json`` projection —
   whole-stage codegen, zero Python, output size O(changed rows).
+- **Small epochs** (:func:`emit_to_files`): when the window is one exact
+  change set of at most ``SMALL_BATCH_ROWS`` rows
+  (:mod:`.changeset` — usually already collected by the matview or index
+  refresh of the same epoch), the same diff rows and the same envelope
+  expression run over a local frame, the envelopes are collected and
+  written as one JSON-lines file by the driver: no scan, no join, no write
+  or count job.
 """
 
 from __future__ import annotations
@@ -39,7 +46,7 @@ from pyspark.sql import functions as F
 
 from ..table.exprs import quote, str_lit
 from ..table.icehouse import DELETED_COL, LSN_COL, IcehouseTable
-from .cdf import resolve_ref, snapshot_diff_images
+from .cdf import file_refs, resolve_ref, snapshot_diff_images
 
 
 def emit_debezium_envelopes(
@@ -68,12 +75,27 @@ def emit_debezium_envelopes(
       pinned in the metadata, hence byte-identical too).
     """
     v_to = resolve_ref(root, ref_to)
-    new_t = IcehouseTable.load(root, version=v_to)
+    return _envelopes(
+        snapshot_diff_images(spark, root, ref_from, v_to),
+        IcehouseTable.load(root, version=v_to),
+        connector, table_name, lsn_fallback,
+    )
+
+
+def _envelopes(
+    diff: DataFrame,
+    new_t: IcehouseTable,
+    connector: str = "icehouse",
+    table_name: str | None = None,
+    lsn_fallback: int | None = None,
+) -> DataFrame:
+    """Debezium envelopes (one string column ``value``) of a two-image
+    delta ``(key, op, before, after, lsn)`` whose TO snapshot is ``new_t``
+    — see :func:`emit_debezium_envelopes`."""
     if lsn_fallback is None:
         lsn_fallback = new_t.lsn_high(default=0)
     ts_ms = int((new_t.meta.get("committed_at") or 0) * 1000)
-    diff = snapshot_diff_images(spark, root, ref_from, v_to)
-    key = new_t.key_col
+    key, v_to, root = new_t.key_col, new_t.version, new_t.root
 
     # Debezium image conventions from the two-image diff: the key column
     # rides inside before/after (consumers take deletes' key from `before`)
@@ -255,11 +277,21 @@ def emit_to_files(
     including this publisher's own pin, GC bookkeeping), no row can have
     changed, so the run returns empty without a Spark job and without
     advancing checkpoint or tag.
+
+    Small epochs: when ``(last, head]`` is one exact change set of at most
+    ``SMALL_BATCH_ROWS`` rows (:func:`.changeset.change_set`), its
+    envelopes are built over a local frame, collected, and written by the
+    driver as one ``part-`` file through the same scratch → rename
+    publish, and rows are counted in hand.  Any other window takes the
+    snapshot diff, Spark's text writer and a line count.
     """
     import hashlib
     import json as _json
     import shutil
     import tempfile
+    import uuid
+
+    from .changeset import change_set, collectable, is_exact
 
     pin_tag = kwargs.pop(
         "pin_tag",
@@ -287,16 +319,8 @@ def emit_to_files(
             "snapshot from version 0."
         ) from None
 
-    def _data_refs(meta: "dict | None"):
-        if meta is None:  # v0: the empty table
-            return ({}, {})
-        return (
-            {p: r["path"] for p, r in meta["partitions"].items()},
-            {p: [d["path"] for d in ds] for p, ds in meta.get("deltas", {}).items()},
-        )
-
-    head_meta = IcehouseTable.load(root, version=head).meta
-    if _data_refs(last_meta) == _data_refs(head_meta):
+    head_t = IcehouseTable.load(root, version=head)
+    if file_refs(last_meta or {"partitions": {}}) == file_refs(head_t.meta):
         # only pure-metadata commits since the baseline (tags — including
         # this publisher's OWN pin —, GC bookkeeping): no row can have
         # changed, so emit nothing and leave checkpoint+tag in place.
@@ -304,7 +328,11 @@ def emit_to_files(
         # metadata loads, zero Spark jobs) and prevents the pin commit
         # from turning every idle run into a fresh "new version".
         return empty
-    feed = emit_debezium_envelopes(spark, root, last, head, **kwargs)
+    cs = None
+    if last_meta is not None and collectable(head_t.schema):
+        last_t = IcehouseTable(root, last_meta)
+        if is_exact(last_t, head_t):
+            cs = change_set(spark, last_t, head_t)
     os.makedirs(out_dir, exist_ok=True)
     # scratch lives INSIDE out_dir so the renames below stay same-filesystem
     # (atomic); the leading underscore keeps it invisible to any file-stream
@@ -312,10 +340,22 @@ def emit_to_files(
     scratch = tempfile.mkdtemp(prefix="_emit_tmp_", dir=out_dir)
     try:
         data_dir = os.path.join(scratch, "data")
-        feed.write.mode("overwrite").text(data_dir)
-        # distributed line count over the just-written files — never pull
-        # the feed's bytes through the driver (a big delta is GBs)
-        rows = spark.read.text(data_dir).count()
+        if cs is not None:
+            lines = [r[0] for r in _envelopes(cs.images(spark), head_t, **kwargs).collect()]
+            rows = len(lines)
+            os.makedirs(data_dir)
+            with open(
+                os.path.join(data_dir, f"part-00000-{uuid.uuid4()}-c000.txt"),
+                "w", encoding="utf-8",
+            ) as fh:
+                fh.writelines(line + "\n" for line in lines)
+        else:
+            emit_debezium_envelopes(spark, root, last, head, **kwargs).write.mode(
+                "overwrite"
+            ).text(data_dir)
+            # distributed line count over the just-written files — never
+            # pull a big feed's bytes through the driver (a delta can be GBs)
+            rows = spark.read.text(data_dir).count()
         moved = 0
         for name in sorted(os.listdir(data_dir)):
             if not name.startswith("part-"):

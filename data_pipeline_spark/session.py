@@ -21,6 +21,17 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 SMALL_BATCH_ROWS = 1000
 
 
+def _default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half the host's
+    physical RAM, at most 48g (a local-mode driver is the whole engine, and
+    the other half stays for Python, off-heap buffers and the page cache)."""
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{max(1024, min(48 << 10, ram_mb // 2))}m"
+
+
 def _gc_threads(master: str) -> int:
     """GC threads sized to the local[N] task-core budget (min 2, max 16)."""
     import re
@@ -84,7 +95,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         # GC: tuned G1 (big young gen + relaxed pause target, see
         # _gc_jvm_opts) — measured faster than ParallelGC at EVERY batch
         # volume on the replay path (BENCH.md "GC at volume": 16M-event MOR

@@ -49,6 +49,7 @@ identical).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -116,6 +117,30 @@ _WIDENINGS: dict[tuple[str, str], bool] = {
     ("byte", "long"): True,
     ("float", "double"): True,
 }
+
+
+@functools.lru_cache(maxsize=4)
+def _jvm_path_helpers(jvm):
+    """The two JVM classes :func:`_parquet` calls, resolved once per gateway
+    (each dotted package step of a lookup is a py4j round trip)."""
+    return (
+        jvm.org.apache.commons.lang3.StringUtils,
+        jvm.scala.collection.immutable.ArraySeq,
+    )
+
+
+def _parquet(spark: SparkSession, schema: T.StructType, paths: list[str]) -> DataFrame:
+    """``spark.read.schema(schema).parquet(*paths)`` with the path list sent
+    to the JVM in one call: py4j converts a Python list one element per
+    round trip, so the paths travel as one newline-joined string that the
+    JVM splits into a ``Seq``.  A path holding a newline keeps the list
+    conversion."""
+    reader = spark.read.schema(schema)
+    if any("\n" in p for p in paths):
+        return reader.parquet(*paths)
+    split, seq = _jvm_path_helpers(spark._jvm)
+    jpaths = split.splitByWholeSeparatorPreserveAllTokens("\n".join(paths), "\n")
+    return DataFrame(reader._jreader.parquet(seq.unsafeWrapArray(jpaths)), spark)
 
 
 class SchemaEvolutionError(ValueError):
@@ -600,6 +625,18 @@ class IcehouseTable:
             if lo <= epoch <= hi:
                 return True
         return False
+
+    def last_epoch(self, source: str | None = None) -> int | None:
+        """Highest committed epoch in ``source``'s namespace (compacted
+        ranges included), or ``None`` when the namespace has none."""
+        ns = source or ""
+        eps = [
+            int(ep)
+            for k_ns, _, ep in (k.rpartition(":") for k in self.meta["committed_epochs"])
+            if k_ns == ns
+        ]
+        eps += [hi for _, hi in self.meta.get("committed_epoch_ranges", {}).get(ns, [])]
+        return max(eps, default=None)
 
     def _pure_metadata_commit(
         self,
@@ -2531,7 +2568,7 @@ class IcehouseTable:
         many files) and the groups union."""
         renames = self.meta.get("column_renames", [])
         if not renames:
-            return spark.read.schema(read_schema).parquet(*paths)
+            return _parquet(spark, read_schema, paths)
         groups: dict[tuple, list[str]] = {}
         for p in paths:
             v = self._data_path_version(p)
@@ -2546,8 +2583,7 @@ class IcehouseTable:
                 ]
             )
             parts.append(
-                spark.read.schema(phys)
-                .parquet(*grp)
+                _parquet(spark, phys, grp)
                 .select(
                     *[
                         F.col(pn).alias(f.name)
@@ -2710,13 +2746,25 @@ class IcehouseTable:
         no longer arrive).  The full set of partitions read is passed as the
         explicit affected-set, so a partition left 100%-tombstone is dropped
         from metadata (files reclaimed at expire_snapshots) instead of
-        lingering with a stale pre-vacuum row count."""
+        lingering with a stale pre-vacuum row count.
+
+        The snapshot doc records the highest LSN any vacuum may have removed
+        a tombstone at (``vacuumed_lsn``: the watermark, capped at the
+        snapshot's LSN high-water mark).  A consumer whose LSN watermark
+        is below it cannot trust the changed-since feed to carry every
+        delete: the matview then recomputes and the secondary index re-reads
+        its own keys (``refresh_matview``, ``SecondaryIndex.refresh``)."""
         for _ in range(5):
             read_version = self.version
             read_parts = sorted(
                 {int(k) for k in self.meta["partitions"]}
                 | {int(k) for k, ds in self.meta.get("deltas", {}).items() if ds}
             )
+            high = self.lsn_high(strict=True)
+            if high is not None:
+                cut = min(int(lsn_watermark), high)
+            else:  # no stats to cap with: every tombstone may be gone
+                cut = int(lsn_watermark) if read_parts else -1
             df = self.read(spark, with_part_col=True, with_meta=True)
             keep = df.where(
                 ~(
@@ -2726,7 +2774,10 @@ class IcehouseTable:
             )
             try:
                 return self.overwrite_partitions(
-                    keep, affected_partitions=read_parts, read_version=read_version
+                    keep, affected_partitions=read_parts, read_version=read_version,
+                    meta_updates={
+                        "vacuumed_lsn": max(self.meta.get("vacuumed_lsn", -1), cut)
+                    },
                 )
             except CommitConflictError:
                 self.refresh()

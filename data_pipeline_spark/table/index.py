@@ -13,11 +13,16 @@ exactly-once merge:
   version in a per-index namespace — a per-epoch feed of at most
   ``SMALL_BATCH_ROWS`` rows is committed from the driver
   (``cdc.apply.apply_changes_local``: one collect of the affected index
-  buckets, the LWW rewrite, one write), a larger feed or larger index
-  buckets go through the Spark ``apply_changes`` merge.  Re-running a
-  crashed refresh is a fenced no-op, and because both merges are LWW,
-  overlap from a stale watermark is idempotent (the watermark is an
-  optimization, never a correctness input);
+  buckets, the LWW rewrite, one write; 3 Spark jobs), a larger feed or
+  larger index buckets go through the Spark ``apply_changes`` merge.
+  When that feed starts at the LSN high-water mark of the last applied
+  base version, it is the ``after`` side of the window's collected change
+  set (``cdc/changeset.py``) — usually already collected by the matview
+  refresh of the same epoch, so the refresh runs no feed job.  Re-running a crashed refresh is
+  a fenced no-op, and because both merges are LWW, overlap from a stale
+  watermark is idempotent (the watermark is an optimization, never a
+  correctness input) — except across a tombstone vacuum, which takes the
+  keyed path below;
 - **lookup** plans O(matching files) of the slim table (stats skipping on
   the value column), then fetches the full rows via bucket-pruned
   ``read_for_keys`` on the base — the wide token arrays are read only for
@@ -43,8 +48,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import SMALL_BATCH_ROWS
-from .exprs import quote
 from .icehouse import DELETED_COL, LSN_COL, IcehouseTable
 
 __all__ = ["SecondaryIndex", "create_index", "open_index"]
@@ -129,13 +132,20 @@ class SecondaryIndex:
         stats and next watermark from the same rows) and committed from the
         driver by ``apply_changes_local`` when the affected index buckets
         are small; a larger feed, or larger buckets, go through the Spark
-        ``apply_changes`` merge.  Both give the same rows and lineage.  When
-        the caller KNOWS the changed key set (a streaming micro-batch whose
-        boundaries may split epochs out of LSN order — the same caveat
-        table/matview.py documents), pass ``changed_keys``: the refresh
-        becomes one bucket-pruned point read of those keys' CURRENT rows
-        (present → upsert at lsn=base.version, absent → delete), with no
-        dependence on feed ordering at all."""
+        ``apply_changes`` merge.  Both give the same rows and lineage.  The
+        collected feed is the memoized change set's ``after`` side when the
+        watermark is the LSN high-water mark of the last applied base
+        version (the same rows), so a refresh after the matview's of the
+        same epoch reads no feed.
+        When the caller KNOWS the changed key set (a streaming micro-batch
+        whose boundaries may split epochs out of LSN order — the same
+        caveat table/matview.py documents), pass ``changed_keys``: the
+        refresh becomes one bucket-pruned point read of those keys' CURRENT
+        rows (present → upsert at lsn=base.version, absent → delete), with
+        no dependence on feed ordering at all.  A tombstone vacuum above
+        the watermark (``vacuumed_lsn`` in the base's snapshot doc) takes
+        that path too, keyed by the index's own keys plus the feed's, so a
+        key whose tombstone was vacuumed away becomes a delete."""
         from ..cdc.apply import apply_changes, apply_changes_local, local_part_stats
 
         self.index = self.index.refresh()
@@ -156,6 +166,14 @@ class SecondaryIndex:
             max(self.index.lsn_high(default=-1), base.lsn_high(default=-1), wm) + 1
         )
         stats = part_stats = rescan = None
+        if changed_keys is None and base.meta.get("vacuumed_lsn", -1) > wm:
+            # a vacuum removed tombstones the feed from wm would carry:
+            # re-read every key the index holds plus every changed key,
+            # which covers the whole snapshot
+            changed_keys = self.index.read(spark).select(base.key_col).unionByName(
+                base.read_changed_since(spark, wm).select(base.key_col)
+            )
+            covered_lsn_high = base.lsn_high()
         if changed_keys is not None:
             keys = changed_keys.select(
                 F.col(changed_keys.columns[0]).alias(base.key_col)
@@ -189,14 +207,11 @@ class SecondaryIndex:
             # feed refreshes O(delta) instead of O(full history).
             new_wm = covered_lsn_high
         else:
-            feed = base.read_changed_since(spark, wm)
-            # one slim collect: a per-epoch poll's feed fits on the driver,
-            # so the batch, its part stats and the next watermark all come
+            # one collect: a per-epoch poll's feed fits on the driver, so
+            # the batch, its part stats and the next watermark all come
             # from the rows in hand instead of two more scans of the feed
-            head = feed.selectExpr(
-                *[quote(c) for c in (base.key_col, self.column, DELETED_COL, LSN_COL)]
-            ).limit(SMALL_BATCH_ROWS + 1).collect()
-            if len(head) <= SMALL_BATCH_ROWS:
+            head = self._collected_feed(spark, base, wm, ns)
+            if head is not None:
                 # the index schema is (key, column): rows are already in
                 # table-column order for the driver-side commit
                 rows = [(ordinal, "D" if r[2] else "U", r[0], r[1]) for r in head]
@@ -219,6 +234,7 @@ class SecondaryIndex:
                     )
                     part_stats = local_part_stats(self.index, [r[:3] for r in rows])
             else:
+                feed = base.read_changed_since(spark, wm)
                 batch = feed.select(
                     F.lit(ordinal).cast("long").alias("lsn"),
                     F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit("D"))
@@ -250,6 +266,26 @@ class SecondaryIndex:
             "skipped": stats.result.skipped,
             "base_version": base.version,
         }
+
+    def _collected_feed(
+        self, spark: SparkSession, base: IcehouseTable, wm: int, ns: str
+    ) -> list | None:
+        """``(key, value, _deleted, _lsn)`` of every base winner above
+        ``wm``, or ``None`` over ``SMALL_BATCH_ROWS`` rows.  Taken from the
+        memoized change set of (last applied base version, ``base``] when
+        that window's feed starts at ``wm``, else collected."""
+        from ..cdc.changeset import change_set, collect_changed, feed_watermark
+
+        cols = [base.key_col, self.column, DELETED_COL, LSN_COL]
+        v_from = self.index.last_epoch(ns)
+        try:
+            prior = None if v_from is None else IcehouseTable.load(self.base_root, version=v_from)
+        except FileNotFoundError:
+            prior = None
+        if prior is None or feed_watermark(prior) != wm:
+            return collect_changed(spark, base, wm, cols)
+        cs = change_set(spark, prior, base)
+        return None if cs is None else [tuple(r[c] for c in cols) for r in cs.after]
 
     # -- queries -----------------------------------------------------------
 

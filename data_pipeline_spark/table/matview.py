@@ -42,11 +42,13 @@ path.
 
 Scale shape: no global shuffle ever touches the base table.  One changed-
 since scan (file-skipped), two bucket-pruned point reads, one groupBy of
-the (small) changed-row set, one keyed MERGE into the view — and when the
-change set and the affected view buckets are small, the MERGE runs on the
-driver.  Measures are fixed-point BIGINT so increments are exact and
-order-independent — a float sum would drift from a from-scratch recompute
-and fail the oracle.
+the changed-row set, one keyed MERGE into the view.  A small epoch's window
+is one collected change set (``cdc/changeset.py``, shared with the index
+refresh and the emitter): its signed delta is summed on the driver and the
+MERGE of small view buckets runs on the driver, 6–7 Spark jobs in all on
+the per-epoch MOR poll.  Measures are fixed-point BIGINT so increments are
+exact and order-independent — a float sum would drift from a from-scratch
+recompute and fail the oracle.
 """
 
 from __future__ import annotations
@@ -60,12 +62,14 @@ from pyspark.sql import types as T
 
 from .exprs import col as qcol
 from .exprs import quote, quote_all
-from .icehouse import CommitResult, IcehouseTable
-from ..cdc.apply import ApplyStats, apply_changes, apply_changes_local
+from .icehouse import DELETED_COL, CommitResult, IcehouseTable
+from ..cdc.apply import ApplyStats, apply_changes, apply_changes_local, holds_type
+from ..cdc.changeset import ChangeSet, change_set, collectable, local_frame
 from ..session import SMALL_BATCH_ROWS
 
 GROUP_KEY_COL = "group_key"
 _REFRESH_NS = "mv-refresh"
+_FLOATS = (T.FloatType, T.DoubleType)
 
 
 def _measures(value_cols: list[str]) -> list[str]:
@@ -156,13 +160,8 @@ def _last_refreshed_version(mv: IcehouseTable) -> int:
     advances the ``mv.refreshed_floor`` property instead (safe: there is no
     data whose application the floor could outrun), so repeated no-op
     refreshes don't re-walk ever-longer changed-since windows."""
-    high = -1
-    for k in mv.meta["committed_epochs"]:
-        ns, _, ep = k.rpartition(":")
-        if ns == _REFRESH_NS:
-            high = max(high, int(ep))
-    for lo, hi in mv.meta.get("committed_epoch_ranges", {}).get(_REFRESH_NS, []):
-        high = max(high, hi)
+    last = mv.last_epoch(_REFRESH_NS)
+    high = -1 if last is None else last
     floor = mv.meta.get("properties", {}).get("mv.refreshed_floor")
     if floor is not None:
         high = max(high, int(floor))
@@ -295,55 +294,116 @@ def _finish_refresh(mv: IcehouseTable, base_version: int) -> None:
 def _commit_local_delta(
     spark: SparkSession,
     mv: IcehouseTable,
-    delta_df: DataFrame | None,
+    delta: list[tuple],
     group_cols: list[str],
     measures: list[str],
     base_version: int,
 ) -> CommitResult:
-    """Collect a small signed delta (one row per affected group:
-    ``group_key, *group_cols, *measures``; ``None`` for no change) and fold
-    it into the view — the same merged rows and the same fenced commit as
+    """Fold a small signed delta held on the driver (one tuple per affected
+    group, in view-column order: ``group_key, *group_cols, *measures``)
+    into the view — the same merged rows and the same fenced commit as
     :func:`_apply_view_delta`, built on the driver by
     :func:`~..cdc.apply.apply_changes_local` (which re-merges against a
     fresh read of the view after a conflict).  The merge is keyed by the
     ``group_key`` JSON string, so group columns of any type (arrays, maps)
     work.  View buckets too big for the driver take
-    :func:`_apply_view_delta` on a local frame of the collected delta.
-    Finishes the refresh (:func:`_finish_refresh`)."""
-    delta = [] if delta_df is None else delta_df.collect()
+    :func:`_apply_view_delta` on a local frame of the delta.  Finishes the
+    refresh (:func:`_finish_refresh`)."""
     if not delta:
         # nothing to commit: the refresh floor advances instead
         _finish_refresh(mv, base_version)
         return CommitResult(mv.version, mv.meta["snapshot_id"], base_version)
-    n_group = len(group_cols)
+    fixed = 1 + len(group_cols)
 
     def changes_for(current: dict) -> list[tuple]:
         out = []
         for d in delta:
-            cur = current.get(d[GROUP_KEY_COL])
-            merged = [(0 if cur is None else cur[m] or 0) + d[m] for m in measures]
-            out.append(
-                (
-                    base_version,
-                    "D" if merged[0] <= 0 else "U",
-                    d[GROUP_KEY_COL],
-                    *d[1 : 1 + n_group],
-                    *merged,
-                )
-            )
+            cur = current.get(d[0])
+            merged = [
+                (0 if cur is None else cur[m] or 0) + v for m, v in zip(measures, d[fixed:])
+            ]
+            out.append((base_version, "D" if merged[0] <= 0 else "U", *d[:fixed], *merged))
         return out
 
     stats = apply_changes_local(
-        spark, mv, [d[GROUP_KEY_COL] for d in delta], changes_for,
+        spark, mv, [d[0] for d in delta], changes_for,
         epoch=base_version, epoch_source=_REFRESH_NS,
     )
     if stats is None:
         return _apply_view_delta(
-            mv, spark.createDataFrame(delta, delta_df.schema), group_cols,
-            base_version, measures,
+            mv, spark.createDataFrame(delta, mv.schema), group_cols, base_version, measures,
         ).result
     _finish_refresh(mv, base_version)
     return stats.result
+
+
+def _need_frame(schema: T.StructType, need: list[str]) -> T.StructType:
+    """The local frame :func:`_change_set_delta` projects over: the group
+    and value columns, then the row's sign."""
+    return T.StructType(
+        [T.StructField(c, schema[c].dataType) for c in need]
+        + [T.StructField("_sign", T.IntegerType())]
+    )
+
+
+def _change_set_delta(
+    spark: SparkSession,
+    cs: ChangeSet,
+    group_cols: list[str],
+    value_cols: list[str],
+    scale: int,
+) -> list[tuple]:
+    """The signed per-group delta of a collected change set, as
+    :func:`_signed_delta` computes it: the before side retracts (−1), the
+    live after rows add (+1).  Spark computes each row's group key and
+    fixed-point values (``to_json(struct(...))``, ``CAST(round(v * scale) AS
+    BIGINT)``) in one projection over a local frame, which runs no job; the
+    sums are exact Python integers.  Returns ``(group_key, *group_cols,
+    *measures)`` tuples for the groups whose measures moved."""
+    need = list(dict.fromkeys(group_cols + value_cols))
+    at = [cs.head.schema.fieldNames().index(c) for c in need]
+    # before rows are read at the prior snapshot: address them by name
+    rows = [(*[r[c] for c in need], -1) for r in cs.before(spark).values()]
+    rows += [(*[r[i] for i in at], 1) for r in cs.after if not r[DELETED_COL]]
+    if not rows:
+        return []
+    frame = _need_frame(cs.head.schema, need)
+    values = []
+    for c in value_cols:
+        q = quote(c)
+        values += [
+            f"CAST({q} IS NOT NULL AS INT)",
+            f"coalesce(CAST(round({q} * {int(scale)}) AS BIGINT), 0)",
+        ]
+    local = local_frame(spark, rows, frame)
+    zeros = {
+        c: f"{quote(c)} + CAST(0 AS {frame[c].dataType.simpleString()})"
+        for c in group_cols
+        if isinstance(frame[c].dataType, _FLOATS)
+    }
+    if zeros:
+        # Spark's grouping folds -0.0 into 0.0; adding a zero of the
+        # column's own type does the same before the key is built
+        local = local.selectExpr(
+            *[f"{zeros[c]} AS {quote(c)}" if c in zeros else quote(c) for c in frame.names]
+        )
+    projected = local.selectExpr(
+        f"{_group_key(group_cols)} AS {GROUP_KEY_COL}",
+        *[quote(c) for c in group_cols],
+        "_sign",
+        *values,
+    ).collect()
+    fixed = 1 + len(group_cols)
+    sums: dict[str, tuple[tuple, list[int]]] = {}
+    for r in projected:
+        g = sums.get(r[0])
+        if g is None:
+            g = sums[r[0]] = (tuple(r[1:fixed]), [0] * (1 + len(values)))
+        sign, acc = r[fixed], g[1]
+        acc[0] += sign
+        for j, v in enumerate(r[fixed + 1:], start=1):
+            acc[j] += sign * v
+    return [(k, *grp, *acc) for k, (grp, acc) in sums.items() if any(acc)]
 
 
 def _signed_delta(
@@ -433,15 +493,22 @@ def refresh_matview(
     refreshes of the same version are no-ops and the watermark can never
     run ahead of the applied data.
 
-    Small deltas (≤ ``SMALL_BATCH_ROWS`` changed rows — the per-epoch
-    poll shape) take a FAST PATH that keeps the change set on the driver:
-    one slim, file-skipped collect of the changed winners, one collect of
-    the signed per-group delta (add side a local frame, retract side a
-    literal-IN bucket/bloom-pruned point read), then the view merge and
-    its fenced commit built driver-side (:func:`_commit_local_delta`).  On
-    a MOR base with 8 view buckets that is 8 Spark jobs (AQE runs each
-    shuffle stage as its own job) where the Spark-side merge ran 24
-    (tests/test_small_batch_refresh.py pins the budget).
+    Small windows take the CHANGE-SET PATH: when at most
+    ``SMALL_BATCH_ROWS`` keys changed in ``(refreshed version, current
+    version]``, the window is one collected change set
+    (:func:`~..cdc.changeset.change_set`: the changed winners and their
+    prior rows, memoized for the index and emit refreshes of the same
+    epoch).  The signed per-group delta is summed on the driver over its
+    two sides — a projection over a local frame gives Spark's group key
+    and fixed-point values without a job — and the view merge and its
+    fenced commit are built driver-side (:func:`_commit_local_delta`).
+    On a MOR base with 8 view buckets that is 6–7 Spark jobs (the change
+    set's feed collect and point read; the view's collect and write)
+    where the Spark-side merge ran 24 and the Spark signed delta 8
+    (tests/test_small_batch_refresh.py pins the budget).  Larger windows
+    take the Spark path below, as do views whose group columns nest
+    floats inside arrays or structs (Spark's grouping folds -0.0 into 0.0
+    there too) or hold types that cannot round-trip through the driver.
 
     AUTO-CROSSOVER (``auto_full_ratio``): when the changed-row count
     exceeds ``auto_full_ratio × base physical rows`` (and the delta is
@@ -458,11 +525,17 @@ def refresh_matview(
     same contribution, a no-op).  A caller applying the very change batch
     (the streaming per-micro-batch hook) passes the batch's keys; both
     sides then become bucket-pruned point reads and the refresh never
-    consults the changed-since feed.  Without it, the changed set is
-    derived from LSN file stats, which assumes changes are applied in
-    ascending-LSN order across refreshes (true for the epoch replayer;
+    consults the changed-since feed.  Without it, the Spark path derives
+    the changed set from LSN file stats, which assumes changes are applied
+    in ascending-LSN order across refreshes (true for the epoch replayer;
     NOT guaranteed for arbitrary out-of-order appliers — pass the keys
-    explicitly there).
+    explicitly there).  The change-set path reads the same feed, so the
+    same caveat holds there.
+
+    A tombstone vacuum newer than the refreshed LSN high-water mark
+    (``vacuumed_lsn`` in the base's snapshot doc, see
+    :meth:`IcehouseTable.vacuum_tombstones`) forces the full recompute:
+    the vacuumed deletes are gone from the changed-since feed.
     """
     mv.refresh()
     base_root, group_cols, value_cols, scale = _view_spec(mv)
@@ -486,11 +559,14 @@ def refresh_matview(
             # changed-since cannot see the reversal.  A head snapshot with
             # files missing LSN stats (w1 None on non-empty) defeats the
             # detection, so it recomputes too — conservative, never wrong.
+            # A vacuum above w0 removed tombstones the feed would carry.
             base_nonempty = base.meta["partitions"] or any(
                 base.meta.get("deltas", {}).values()
             )
-            if (w1 is not None and w0 is not None and w1 < w0) or (
-                w1 is None and base_nonempty
+            if (
+                (w1 is not None and w0 is not None and w1 < w0)
+                or (w1 is None and base_nonempty)
+                or base.meta.get("vacuumed_lsn", -1) > (-1 if w0 is None else w0)
             ):
                 full = True
 
@@ -532,6 +608,20 @@ def refresh_matview(
             changed.unpersist()
         return RefreshStats("incremental", v0, v1, stats.result)
 
+    cs = None
+    if collectable(_need_frame(base.schema, need_cols)) and not any(
+        not isinstance(dt, _FLOATS) and holds_type(dt, _FLOATS)
+        for dt in (base.schema[c].dataType for c in group_cols)
+    ):
+        cs = change_set(spark, prior, base)
+    if cs is not None:
+        delta = _change_set_delta(spark, cs, group_cols, value_cols, scale)
+        result = _commit_local_delta(spark, mv, delta, group_cols, measures, v1)
+        return RefreshStats("incremental", v0, v1, result)
+
+    # SPARK PATH: more than SMALL_BATCH_ROWS changed rows — persist the
+    # slim feed, count it once, and apply the auto-crossover rule before
+    # committing to point reads.
     # None w0 (no stats / empty prior) degrades to watermark -1: changed-
     # since then returns every live key, and the retract side reads every
     # prior row of those keys — O(table) instead of O(changed), but still
@@ -540,40 +630,6 @@ def refresh_matview(
     feed = base.read_changed_since(spark, w0).selectExpr(
         quote(key), "_deleted", *[quote(c) for c in need_cols if c != key]
     )
-    head = feed.limit(SMALL_BATCH_ROWS + 1).collect()
-    if len(head) <= SMALL_BATCH_ROWS:
-        # FAST PATH: the whole change set fits in hand.  The add side is a
-        # local frame of the collected winners, the retract side a
-        # literal-IN bloom/stats-pruned point read of their keys' prior
-        # rows (bucket ids from the driver-side xxhash64 twin), and the
-        # signed delta — at most one row per affected group — comes back
-        # in one collect.  The view merge and its commit then run on the
-        # driver (:func:`_commit_local_delta`).
-        delta = None
-        if head:
-            add_local = spark.createDataFrame(
-                [
-                    tuple(r[c] for c in need_cols)
-                    for r in head
-                    if not (r["_deleted"] or False)
-                ],
-                T.StructType(
-                    [T.StructField(c, base.schema[c].dataType, True) for c in need_cols]
-                ),
-            )
-            delta = _signed_delta(
-                prior.read_for_keys(spark, [r[key] for r in head]),
-                add_local,
-                group_cols,
-                value_cols,
-                scale,
-            )
-        result = _commit_local_delta(spark, mv, delta, group_cols, measures, v1)
-        return RefreshStats("incremental", v0, v1, result)
-
-    # HEAVY PATH: more than SMALL_BATCH_ROWS changed rows — persist the
-    # (already slim) feed, count it once, and apply the auto-crossover rule
-    # before committing to point reads.
     changed = feed.persist()
     try:
         n_changed = changed.count()

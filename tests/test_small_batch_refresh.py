@@ -1,6 +1,7 @@
 """Small-batch consumer paths: a change set of at most ``SMALL_BATCH_ROWS``
-rows is collected once and the matview / secondary-index refresh commits
-from the driver.  Every driver-side shortcut here is checked against the
+rows is collected once (``cdc/changeset.py``), the matview / secondary-index
+refresh commits from the driver, and emit writes its envelopes from the
+driver.  Every driver-side shortcut here is checked against the
 Spark path it replaces (same table state, same watermark, same stats), and
 the Spark-job budget of each small refresh is pinned so added jobs show up
 as a test failure."""
@@ -13,12 +14,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_pipeline_spark.cdc import apply as apply_mod
+from data_pipeline_spark.cdc import changeset
 from data_pipeline_spark.cdc.apply import (
     apply_changes,
     apply_changes_mor,
     batch_part_stats,
     local_part_stats,
 )
+from data_pipeline_spark.cdc.emit import emit_to_files
 from data_pipeline_spark.table import matview as mv_mod
 from data_pipeline_spark.table.icehouse import (
     DELETED_COL,
@@ -130,7 +133,7 @@ def test_driver_view_merge_matches_spark_merge(spark, monkeypatch):
         for views in (single, multi):
             assert refresh_matview(spark, views["fast"].refresh()).mode == "incremental"
             with monkeypatch.context() as m:
-                m.setattr(mv_mod, "SMALL_BATCH_ROWS", 0)
+                m.setattr(mv_mod, "change_set", lambda *a, **k: None)
                 refresh_matview(spark, views["spark"].refresh(), auto_full_ratio=0)
         refresh_matview(spark, multi["keyed"].refresh(), changed_keys=batch.select("doc_id"))
         with monkeypatch.context() as m:
@@ -411,9 +414,10 @@ def _jobs(spark, name, fn):
 
 @pytest.fixture(scope="module")
 def mor_epoch(spark, tmp_path_factory):
-    """A MOR base (the per-epoch poll shape) with a matview and an index
-    current at its base load, then one ≤1000-row epoch appended.  Shared:
-    each budget test refreshes a different consumer of it."""
+    """A MOR base (the per-epoch poll shape) with a matview, an index and
+    an emit checkpoint current at its base load, then one ≤1000-row epoch
+    appended.  Shared: each budget test refreshes a different consumer of
+    it."""
     tmp_path = tmp_path_factory.mktemp("sbr_budget")
     base = IcehouseTable.create(
         str(tmp_path / "base"), SCHEMA, key_col="doc_id", n_buckets=8,
@@ -429,24 +433,33 @@ def mor_epoch(spark, tmp_path_factory):
     base = base.refresh()
     view = create_matview(spark, str(tmp_path / "mv"), base, ["source"], "n_tok", scale=1)
     idx = SecondaryIndex.create(spark, base, str(tmp_path / "idx"), "source")
+    emit = (str(tmp_path / "feed"), str(tmp_path / "emit_ck.json"))
+    emit_to_files(spark, base.root, *emit)
     rows = [
         (5000 + i, "D" if i % 11 == 0 else "U", f"k{(i * 3) % 2500:05d}", f"s{i % 7}", i % 40, None)
         for i in range(800)
     ]
-    apply_changes_mor(base, spark.createDataFrame(rows, DDL), epoch=1)
-    return base.refresh(), view, idx
+    apply_changes_mor(base.refresh(), spark.createDataFrame(rows, DDL), epoch=1)
+    return base.refresh(), view, idx, emit
 
 
-# Spark jobs of one ≤1000-row refresh on the fixture above, as measured
-# (local[4], AQE on: every shuffle stage of a plan runs as its own job).
-# Before the driver-side paths the same refreshes ran 24 and 14 jobs; the
-# index ran 10 while its small batch still went through apply_changes.
-MATVIEW_SMALL_REFRESH_JOBS = 8
-INDEX_SMALL_REFRESH_JOBS = 6
+# Spark jobs of one ≤1000-row refresh on the fixture above with no change
+# set in memo, as measured (local[4], AQE on: every shuffle stage of a plan
+# runs as its own job).  Before the driver-side paths the matview and index
+# refreshes ran 24 and 14 jobs; before the shared change set they ran 8 and
+# 6, and emit ran 6 (a two-snapshot diff, a text write and a line count).
+MATVIEW_SMALL_REFRESH_JOBS = 6
+INDEX_SMALL_REFRESH_JOBS = 5
+EMIT_SMALL_JOBS = 3
+# matview, index and emit of one epoch in a row: the index and emit reuse
+# the matview's change set, so they run only their own commits (7 + 3 + 0
+# on a second appended epoch; 8 + 6 + 6 before the shared change set)
+CONSUMER_TRIO_JOBS = 10
 
 
 def test_small_matview_refresh_job_budget(spark, mor_epoch):
-    base, view, _ = mor_epoch
+    base, view, _, _ = mor_epoch
+    changeset._memo.clear()
     n = _jobs(spark, "mv-budget", lambda: refresh_matview(spark, view.refresh()))
     assert n <= MATVIEW_SMALL_REFRESH_JOBS, f"small matview refresh ran {n} Spark jobs"
     got = sorted(
@@ -463,9 +476,58 @@ def test_small_matview_refresh_job_budget(spark, mor_epoch):
 
 
 def test_small_index_refresh_job_budget(spark, mor_epoch):
-    base, _, idx = mor_epoch
+    base, _, idx, _ = mor_epoch
+    changeset._memo.clear()
     n = _jobs(spark, "idx-budget", lambda: idx.refresh(spark))
     assert n <= INDEX_SMALL_REFRESH_JOBS, f"small index refresh ran {n} Spark jobs"
     got = sorted(tuple(r) for r in idx.index.refresh().read(spark).collect())
     want = sorted(tuple(r) for r in base.read(spark).select("doc_id", "source").collect())
+    assert got == want
+
+
+def test_small_emit_job_budget(spark, mor_epoch):
+    base, _, _, (out_dir, ck) = mor_epoch
+    changeset._memo.clear()
+    out = {}
+    n = _jobs(spark, "emit-budget", lambda: out.update(emit_to_files(spark, base.root, out_dir, ck)))
+    assert n <= EMIT_SMALL_JOBS, f"small emit ran {n} Spark jobs"
+    assert out["files"] == 1 and out["rows"] > 0
+
+
+def test_consumer_trio_shares_one_change_set(spark, mor_epoch, monkeypatch):
+    """Matview, index and emit of one new epoch, in that order: the index
+    and emit refreshes run no feed or point read (the matview's change set
+    serves them), and the three together stay within the trio budget."""
+    base, view, idx, (out_dir, ck) = mor_epoch
+    # bring every consumer to the head, whichever budget tests ran
+    refresh_matview(spark, view.refresh())
+    idx.refresh(spark)
+    emit_to_files(spark, base.root, out_dir, ck)
+    rows = [
+        (9000 + i, "D" if i % 13 == 0 else "U", f"k{(i * 7) % 2600:05d}", f"s{i % 5}", i % 30, None)
+        for i in range(600)
+    ]
+    apply_changes_mor(base.refresh(), spark.createDataFrame(rows, DDL), epoch=2)
+    changeset._memo.clear()
+    n_mv = _jobs(spark, "trio-mv", lambda: refresh_matview(spark, view.refresh()))
+    reads = []
+    for name in ("read_changed_since", "read_for_keys"):
+        real = getattr(IcehouseTable, name)
+        monkeypatch.setattr(
+            IcehouseTable, name,
+            lambda self, *a, _real=real, _name=name, **k: (
+                reads.append((_name, self.root)) or _real(self, *a, **k)
+            ),
+        )
+    n_idx = _jobs(spark, "trio-idx", lambda: idx.refresh(spark))
+    out = {}
+    n_emit = _jobs(
+        spark, "trio-emit", lambda: out.update(emit_to_files(spark, base.root, out_dir, ck))
+    )
+    monkeypatch.undo()
+    assert [r for r in reads if r[1] == base.root] == []
+    assert n_mv + n_idx + n_emit <= CONSUMER_TRIO_JOBS, (n_mv, n_idx, n_emit)
+    assert out["rows"] > 0
+    got = sorted(tuple(r) for r in idx.index.refresh().read(spark).collect())
+    want = sorted(tuple(r) for r in base.refresh().read(spark).select("doc_id", "source").collect())
     assert got == want

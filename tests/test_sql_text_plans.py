@@ -50,10 +50,11 @@ def _py4j_calls(fn) -> int:
 
 # py4j calls to build each plan on the table below, as measured (PySpark
 # 4.1).  With per-column Column builders the same plans took 432, 403 and
-# 425 calls.
-READ_PLAN_CALLS = 71
-CHANGED_SINCE_PLAN_CALLS = 56
-POINT_READ_PLAN_CALLS = 72
+# 425 calls; with the scan's path list sent one element per call, 71, 56
+# and 72.
+READ_PLAN_CALLS = 55
+CHANGED_SINCE_PLAN_CALLS = 48
+POINT_READ_PLAN_CALLS = 60
 
 
 def test_mor_read_plans_stay_within_py4j_budget(spark):
