@@ -1,42 +1,56 @@
-"""One collected change set per base-table window, shared by the consumers.
+"""One exact, collected change set per base-table window, shared by the
+consumers.
 
 After an epoch the matview refresh, the secondary-index refresh and the
 Debezium emitter all need the same thing: the keys that changed between two
-snapshots of the base table, with their rows before and after.  For a small
-window (at most ``SMALL_BATCH_ROWS`` changed rows) this module collects that
-change set to the driver once and memoizes it, so the second and third
-consumer of the same window run no feed or point-read job.
+snapshots of the base table, with their rows before and after.  For a window
+of at most ``SMALL_BATCH_ROWS`` changed keys this module collects that change
+set to the driver once and memoizes it, so the second and third consumer of
+the same window run no job to get it.  Over the cap :func:`change_set`
+returns ``None`` and each consumer reads the window's
+:func:`.cdf.snapshot_diff_images` as a Spark frame: that diff is the one
+general source, this module its collected small-input form.
 
-A :class:`ChangeSet` over ``(v_from, v_to]`` has two sides:
+A :class:`ChangeSet` over ``(v_from, v_to]`` holds every key whose live row
+differs between the two snapshots, in two sides:
 
-- ``after``: ``read_changed_since(lsn_high(v_from))`` at ``v_to`` — each
-  changed key's winning row, tombstones included, every column plus
-  ``_lsn`` and ``_deleted``;
-- ``before`` (read on first use): those keys' live rows at ``v_from``, one
-  point read (``read_for_keys``) of the time-travelled snapshot.
+- ``after``: each changed key's row at ``v_to`` — every column, then
+  ``_lsn`` and ``_deleted`` (a delete is a tombstone row, payload null);
+- ``before`` (:meth:`ChangeSet.before`): those keys' live rows at
+  ``v_from``, by key.
 
-**Exactness guard** (:func:`is_exact`).  The LSN feed is
-exactly the window's changed key set when the manifests prove it: ``v_from``
-and ``v_to`` have the same schema, rename log and bucket count; every
-bucket's base entry has the same path in both; every bucket's ``v_from``
-delta list is a prefix of its ``v_to`` list; and every appended delta
-records ``lsn_min > lsn_high(v_from, strict=True)``.  Data files are
-immutable, so a key absent from the appended deltas cannot have changed, and
-an appended row above every old LSN is that key's true winner.  Compaction,
-copy-on-write epochs, vacuum, rollback, rebucket, schema evolution and late
-(out-of-order) events all fail the guard.  The emitter, which must diff two
-snapshots exactly, uses only exact change sets and otherwise diffs the
-snapshots.  The matview and index refreshes already trusted the LSN feed
-(the ascending-LSN caveat their docstrings state, and their own rollback and
-vacuum checks), so they use the collected sides of any window that fits.
+It is built one of two ways, with the same answer:
+
+- **LSN feed**, when :func:`is_exact` proves from the two manifests that
+  ``read_changed_since(lsn_high(v_from))`` at ``v_to`` is exactly the
+  window's changed keys: ``v_from`` and ``v_to`` have the same schema,
+  rename log and bucket count; every bucket's base entry has the same path
+  in both; every bucket's ``v_from`` delta list is a prefix of its ``v_to``
+  list; and every appended delta records ``lsn_min > lsn_high(v_from,
+  strict=True)``.  Data files are immutable, so a key absent from the
+  appended deltas cannot have changed, and an appended row above every old
+  LSN is that key's true winner.  ``before`` is then one point read
+  (``read_for_keys``) of the time-travelled ``v_from``, on first use.  This
+  is the per-epoch merge-on-read poll.  The feed may also carry keys
+  rewritten to the row they held (a no-op update, a delete of a key that
+  was never live); every consumer treats those as no change.
+- **Snapshot diff**, for every other window — compaction, copy-on-write
+  epochs, vacuum, rollback, rebucket, schema evolution, late (out-of-order)
+  events: the changed-bucket ``snapshot_diff_images`` is collected and both
+  sides are filled from it.
 
 **Memo.**  The last answer — a ChangeSet, or ``None`` for "over the cap" —
 is kept per process, keyed by the real root, the table uuid and the data
 state of ``v_from`` and ``v_to`` (bucket count, schema, rename log and every
 bucket's file references).  Two snapshots with the same data state hold the
 same rows, so consumers whose last versions differ only by metadata commits
-(a tag, an idle poll's floor bump) share one change set.  Snapshots are
+(a tag, an empty window's floor bump) share one change set.  Snapshots are
 immutable, so the memo cannot go stale, and the cap bounds its size.
+
+**Consumer windows.**  A consumer table records the base version it
+reflects in its own exactly-once registry (:func:`applied_version`, written
+atomically with its data) and, for a window that changed nothing, in a floor
+property (:func:`finish_window`).  Its next window starts there.
 
 Grounding: *Evolution of a Compiling Query Engine* (VLDB 2021) — small
 inputs should not pay the planning and scheduling cost that only large
@@ -51,42 +65,44 @@ import json
 import os
 import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
 from ..session import SMALL_BATCH_ROWS
-from ..table.exprs import quote
 from ..table.icehouse import DELETED_COL, LSN_COL, IcehouseTable
 from .apply import holds_type
-from .cdf import file_refs, diff_rows
+from .cdf import changed_buckets, diff_rows, file_refs, snapshot_diff_images
 
 __all__ = [
-    "ChangeSet", "change_set", "collect_changed", "collectable", "feed_watermark",
+    "ChangeSet", "applied_version", "change_set", "collectable", "finish_window",
     "is_exact", "local_frame",
 ]
 
 
-def collect_changed(
-    spark: SparkSession, table: IcehouseTable, lsn_watermark: int, cols: list[str] | None = None
-) -> list | None:
-    """The collected feed: ``read_changed_since(lsn_watermark)`` (projected
-    to ``cols`` when given) in one capped collect, or ``None`` when it holds
-    more than ``SMALL_BATCH_ROWS`` rows.  When the files the feed scans hold
-    at most that many rows (manifest counts), the collect needs no limit,
-    whose incremental partition-by-partition take costs an extra job."""
-    feed = table.read_changed_since(spark, lsn_watermark)
-    if cols is not None:
-        feed = feed.selectExpr(*[quote(c) for c in cols])
-    m = table.meta
-    scanned = sum(
-        e["rows"]
-        for e in [*m["partitions"].values(), *(d for ds in m.get("deltas", {}).values() for d in ds)]
-        if e.get("lsn_max") is None or e["lsn_max"] > lsn_watermark
-    )
-    if scanned <= SMALL_BATCH_ROWS:
-        return feed.collect()
-    rows = feed.limit(SMALL_BATCH_ROWS + 1).collect()
-    return rows if len(rows) <= SMALL_BATCH_ROWS else None
+def applied_version(consumer: IcehouseTable, ns: str, floor_prop: str) -> int | None:
+    """The base version a consumer table reflects: the highest epoch its
+    own registry committed in ``ns`` (epoch = base version, written
+    atomically with the data, so it cannot run ahead of the data), or the
+    ``floor_prop`` property an empty window advanced, whichever is higher.
+    ``None`` when the consumer has neither."""
+    last = consumer.last_epoch(ns)
+    floor = consumer.meta.get("properties", {}).get(floor_prop)
+    found = [v for v in (last, None if floor is None else int(floor)) if v is not None]
+    return max(found, default=None)
+
+
+def finish_window(
+    consumer: IcehouseTable, ns: str, floor_prop: str, base_version: int
+) -> None:
+    """Close a consumer's window at ``base_version`` and reload the
+    consumer.  A window that committed no data registered no epoch, so the
+    floor advances instead (a pure-metadata commit: there is no data whose
+    application it could outrun), and the next window starts here rather
+    than re-walking an ever longer one."""
+    consumer.refresh()
+    if not consumer.epoch_committed(base_version, ns):
+        consumer.update_properties({floor_prop: base_version})
+        consumer.refresh()
 
 
 def collectable(schema: T.StructType) -> bool:
@@ -134,13 +150,6 @@ def is_exact(prior: IcehouseTable, head: IcehouseTable) -> bool:
     return True
 
 
-def feed_watermark(prior: IcehouseTable) -> int:
-    """The LSN the window's feed starts above: ``prior``'s high-water
-    mark, or -1 when a file lacks LSN stats (every live key is then read —
-    O(table), but never short)."""
-    return prior.lsn_high(default=-1, strict=True)
-
-
 def _arrow_value(v, dt: T.DataType):
     """A collected value in the shape ``pyarrow.array`` takes for ``dt``."""
     if v is None:
@@ -176,18 +185,27 @@ def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFr
 
 class ChangeSet:
     """The collected change set of the window ``(prior, head]`` — see the
-    module docstring.  ``after`` holds the winning rows at ``head`` (every
-    column, then ``_lsn`` and ``_deleted``) of the keys changed above
-    :func:`feed_watermark` of ``prior``."""
+    module docstring.  ``after`` holds the changed keys' rows at ``head``
+    (every column, then ``_lsn`` and ``_deleted``).  A change set built
+    from the snapshot diff keeps the collected diff rows (``diff``: rows
+    and schema), and its ``before`` side is filled from them."""
 
-    def __init__(self, prior: IcehouseTable, head: IcehouseTable, after: list):
+    def __init__(
+        self,
+        prior: IcehouseTable,
+        head: IcehouseTable,
+        after: list,
+        before: dict | None = None,
+        diff: tuple[list, T.StructType] | None = None,
+    ):
         self.prior, self.head, self.after = prior, head, after
         self.key = head.key_col
-        self._before: dict | None = None
+        self._before = before
+        self._diff = diff
 
     def before(self, spark: SparkSession) -> dict:
-        """The changed keys' live rows at ``prior``, by key (one point read,
-        on first use)."""
+        """The changed keys' live rows at ``prior``, by key (on the feed
+        path one point read, on first use)."""
         if self._before is None:
             keys = [r[self.key] for r in self.after]
             rows = self.prior.read_for_keys(spark, keys).collect() if keys else []
@@ -196,8 +214,10 @@ class ChangeSet:
 
     def images(self, spark: SparkSession) -> DataFrame:
         """The window as :func:`.cdf.snapshot_diff_images` gives it —
-        ``(key, op, before, after, lsn)`` — through the same
-        :func:`.cdf.diff_rows`, over a local frame: no Spark job."""
+        ``(key, op, before, after, lsn)`` — over a local frame: no Spark
+        job.  The feed path builds it through the same :func:`.cdf.diff_rows`."""
+        if self._diff is not None:
+            return local_frame(spark, *self._diff)
         schema, key = self.head.schema, self.key
         names = schema.fieldNames()
         k = names.index(key)
@@ -230,6 +250,66 @@ class ChangeSet:
         return diff_rows(local_frame(spark, rows, frame), key)
 
 
+def _entries(meta: dict):
+    """``(bucket, manifest entry)`` of every live base and delta file."""
+    yield from meta["partitions"].items()
+    for b, ds in meta.get("deltas", {}).items():
+        for d in ds:
+            yield b, d
+
+
+def _capped_collect(df: DataFrame, scanned: int) -> list | None:
+    """``df`` collected, or ``None`` over ``SMALL_BATCH_ROWS`` rows.  When
+    the files it scans hold at most that many rows (manifest counts), the
+    collect needs no limit, whose incremental partition-by-partition take
+    costs extra jobs."""
+    if scanned <= SMALL_BATCH_ROWS:
+        return df.collect()
+    rows = df.limit(SMALL_BATCH_ROWS + 1).collect()
+    return rows if len(rows) <= SMALL_BATCH_ROWS else None
+
+
+def _from_feed(spark: SparkSession, prior: IcehouseTable, head: IcehouseTable) -> ChangeSet | None:
+    """The feed build of an :func:`is_exact` window."""
+    w0 = prior.lsn_high(default=-1, strict=True)
+    scanned = sum(
+        e["rows"]
+        for _, e in _entries(head.meta)
+        if e.get("lsn_max") is None or e["lsn_max"] > w0
+    )
+    after = _capped_collect(head.read_changed_since(spark, w0), scanned)
+    return None if after is None else ChangeSet(prior, head, after)
+
+
+def _from_diff(spark: SparkSession, prior: IcehouseTable, head: IcehouseTable) -> ChangeSet | None:
+    """The snapshot-diff build: the collected changed-bucket diff, turned
+    into the two sides."""
+    diff = snapshot_diff_images(spark, head.root, prior.version, head.version)
+    buckets = changed_buckets(prior.meta, head.meta)
+    scanned = sum(
+        e["rows"]
+        for t in (prior, head)
+        for b, e in _entries(t.meta)
+        if buckets is None or int(b) in buckets
+    )
+    rows = _capped_collect(diff, scanned)
+    if rows is None:
+        return None
+    key, names = head.key_col, head.schema.fieldNames()
+    value_names = diff.schema["before"].dataType.fieldNames()
+    after_row = Row(*names, LSN_COL, DELETED_COL)
+    before_row = Row(key, *value_names)
+    after, before = [], {}
+    for k, op, b, a, lsn in rows:
+        after.append(
+            after_row(*[k if n == key else None if a is None else a[n] for n in names],
+                      lsn, op == "D")
+        )
+        if b is not None:
+            before[k] = before_row(k, *b)
+    return ChangeSet(prior, head, after, before, (rows, diff.schema))
+
+
 def _data_state(meta: dict) -> str:
     """What a snapshot's rows depend on, as one string: bucket count,
     schema, rename log and each bucket's file references."""
@@ -251,9 +331,10 @@ _memo_lock = threading.Lock()
 def change_set(
     spark: SparkSession, prior: IcehouseTable, head: IcehouseTable
 ) -> ChangeSet | None:
-    """The change set of ``(prior, head]`` — two snapshots of one table —
-    or ``None`` when more than ``SMALL_BATCH_ROWS`` keys changed above
-    ``lsn_high(prior)``.  Memoized (module docstring)."""
+    """The exact change set of ``(prior, head]`` — two snapshots of one
+    table — or ``None`` when more than ``SMALL_BATCH_ROWS`` keys changed.
+    Built from the LSN feed when :func:`is_exact` holds, else from the
+    snapshot diff; memoized (module docstring)."""
     memo_key = (
         os.path.realpath(head.root),
         head.meta.get("table_uuid"),
@@ -263,8 +344,8 @@ def change_set(
     with _memo_lock:
         if memo_key in _memo:
             return _memo[memo_key]
-    after = collect_changed(spark, head, feed_watermark(prior))
-    cs = None if after is None else ChangeSet(prior, head, after)
+    build = _from_feed if is_exact(prior, head) else _from_diff
+    cs = build(spark, prior, head)
     with _memo_lock:
         _memo.clear()
         _memo[memo_key] = cs

@@ -28,13 +28,12 @@ Design points:
   co-partitioned full-outer join on the immutable key-hash layout
   (:func:`.cdf.snapshot_diff_images`), then a pure ``to_json`` projection —
   whole-stage codegen, zero Python, output size O(changed rows).
-- **Small epochs** (:func:`emit_to_files`): when the window is one exact
-  change set of at most ``SMALL_BATCH_ROWS`` rows
-  (:mod:`.changeset` — usually already collected by the matview or index
-  refresh of the same epoch), the same diff rows and the same envelope
-  expression run over a local frame, the envelopes are collected and
-  written as one JSON-lines file by the driver: no scan, no join, no write
-  or count job.
+- **Small epochs** (:func:`emit_to_files`): when the window's change set
+  holds at most ``SMALL_BATCH_ROWS`` rows (:mod:`.changeset` — usually
+  already collected by the matview or index refresh of the same epoch),
+  the same diff rows and the same envelope expression run over a local
+  frame, the envelopes are collected and written as one JSON-lines file by
+  the driver: no write or count job.
 """
 
 from __future__ import annotations
@@ -278,11 +277,11 @@ def emit_to_files(
     changed, so the run returns empty without a Spark job and without
     advancing checkpoint or tag.
 
-    Small epochs: when ``(last, head]`` is one exact change set of at most
+    Small epochs: when the change set of ``(last, head]`` holds at most
     ``SMALL_BATCH_ROWS`` rows (:func:`.changeset.change_set`), its
     envelopes are built over a local frame, collected, and written by the
     driver as one ``part-`` file through the same scratch → rename
-    publish, and rows are counted in hand.  Any other window takes the
+    publish, and rows are counted in hand.  A larger window takes the
     snapshot diff, Spark's text writer and a line count.
     """
     import hashlib
@@ -291,7 +290,7 @@ def emit_to_files(
     import tempfile
     import uuid
 
-    from .changeset import change_set, collectable, is_exact
+    from .changeset import change_set, collectable
 
     pin_tag = kwargs.pop(
         "pin_tag",
@@ -329,9 +328,9 @@ def emit_to_files(
         # from turning every idle run into a fresh "new version".
         return empty
     cs = None
-    if last_meta is not None and collectable(head_t.schema):
+    if last_meta is not None:
         last_t = IcehouseTable(root, last_meta)
-        if is_exact(last_t, head_t):
+        if collectable(last_t.schema) and collectable(head_t.schema):
             cs = change_set(spark, last_t, head_t)
     os.makedirs(out_dir, exist_ok=True)
     # scratch lives INSIDE out_dir so the renames below stay same-filesystem

@@ -107,18 +107,17 @@ class StreamingIngest:
     #: INCREMENTALLY (O(changed keys + affected groups) — never a base
     #: rescan; see table/matview.py), so grouped aggregates trail the stream
     #: without the reference's scheduled full-table GROUP BYs
-    #: (notification_service/bigquery_queries.py).  Refreshes are fenced on
-    #: the base snapshot version, so stream restarts / redeliveries re-run
-    #: them as no-ops.
+    #: (notification_service/bigquery_queries.py).  Each refresh reads its
+    #: window as one exact change set (cdc/changeset.py), so micro-batch
+    #: boundaries that apply lower LSNs after higher ones need no special
+    #: handling.  Refreshes are fenced on the base snapshot version, so
+    #: stream restarts / redeliveries re-run them as no-ops.
     matviews: "list[str] | None" = None
     matview_every: int = 1
     matview_results: list = field(default_factory=list)
     #: secondary indexes over this table (roots created by
     #: ``table/index.SecondaryIndex.create``): refreshed after EVERY applied
-    #: micro-batch via the point-read path (the batch's keys are the change
-    #: set), so attribute lookups trail the stream with no dependence on
-    #: LSN ordering across batch boundaries — same reasoning as the
-    #: per-batch matview refresh below.
+    #: micro-batch, from the same exact change set as the views.
     indexes: "list[str] | None" = None
     index_results: list = field(default_factory=list)
 
@@ -255,44 +254,18 @@ class StreamingIngest:
         self.batches_applied += 1
         self.events_applied += stats.events_in
         if self.matviews and self.batches_applied % max(self.matview_every, 1) == 0:
-            from ..table.icehouse import IcehouseTable
             from ..table.matview import refresh_matview
 
-            # with per-batch refreshes the batch IS the change set — pass its
-            # keys so the refresh is two point reads and never depends on the
-            # changed-since feed's ascending-LSN assumption (micro-batch
-            # boundaries may split epochs out of LSN order).  With
-            # matview_every > 1 the skipped batches' keys aren't retained,
-            # so the refresh falls back to the feed: only use that cadence
-            # when the source delivers in ascending LSN order.
-            batch_keys = (
-                batch.select(self.table.key_col).distinct()
-                if self.matview_every <= 1
-                else None
-            )
             for mv_root in self.matviews:
-                st = refresh_matview(
-                    batch_df.sparkSession,
-                    IcehouseTable.load(mv_root),
-                    changed_keys=batch_keys,
-                )
+                st = refresh_matview(batch_df.sparkSession, IcehouseTable.load(mv_root))
                 self.matview_results.append((mv_root, st))
             if len(self.matview_results) > self.applied_cap:
                 del self.matview_results[: len(self.matview_results) - self.applied_cap]
         if self.indexes:
             from ..table.index import open_index
 
-            batch_keys = batch.select(self.table.key_col).distinct()
-            # attest how far this batch's key set covers the base's LSN
-            # line, so the index watermark can advance without risking a
-            # concurrent writer's uncovered changes (table/index.py)
-            batch_hi = batch.agg(F.max("lsn").alias("m")).collect()[0]["m"]
             for idx_root in self.indexes:
-                res = open_index(idx_root).refresh(
-                    batch_df.sparkSession,
-                    changed_keys=batch_keys,
-                    covered_lsn_high=None if batch_hi is None else int(batch_hi),
-                )
+                res = open_index(idx_root).refresh(batch_df.sparkSession)
                 self.index_results.append((idx_root, res))
             if len(self.index_results) > self.applied_cap:
                 del self.index_results[: len(self.index_results) - self.applied_cap]

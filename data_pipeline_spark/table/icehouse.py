@@ -2750,10 +2750,11 @@ class IcehouseTable:
 
         The snapshot doc records the highest LSN any vacuum may have removed
         a tombstone at (``vacuumed_lsn``: the watermark, capped at the
-        snapshot's LSN high-water mark).  A consumer whose LSN watermark
-        is below it cannot trust the changed-since feed to carry every
-        delete: the matview then recomputes and the secondary index re-reads
-        its own keys (``refresh_matview``, ``SecondaryIndex.refresh``)."""
+        snapshot's LSN high-water mark).  A ``read_changed_since`` poller
+        whose LSN watermark is below it cannot trust the feed to carry every
+        delete.  The matview, index and emit consumers need no such check:
+        each reads its window as one exact change set
+        (``cdc/changeset.py``), which diffs snapshots for a vacuum window."""
         for _ in range(5):
             read_version = self.version
             read_parts = sorted(

@@ -5,34 +5,33 @@ an equality/range lookup on an arbitrary payload attribute of a WIDE table
 — at the design scale every such query re-reads multi-KB token rows.  A
 ``SecondaryIndex`` is a slim two-column icehouse table ``(key, value)``
 value-sorted with per-file manifest stats, kept consistent with its base
-table by replaying the base's OWN changed-data feed through the ordinary
+table by merging each window of the base's OWN changes through the ordinary
 exactly-once merge:
 
-- **refresh** reads ``base.read_changed_since(watermark)`` (O(changed
-  data): LSN file skipping) and merges it under epoch = the base snapshot
-  version in a per-index namespace — a per-epoch feed of at most
-  ``SMALL_BATCH_ROWS`` rows is committed from the driver
+- **refresh** merges the window (last applied base version, current
+  version] under epoch = the base snapshot version in a per-index
+  namespace.  The window is one exact change set (``cdc/changeset.py``,
+  shared with the matview refresh and the emitter, so after the matview's
+  refresh of the same epoch it is already collected): a change set of at
+  most ``SMALL_BATCH_ROWS`` keys is committed from the driver
   (``cdc.apply.apply_changes_local``: one collect of the affected index
-  buckets, the LWW rewrite, one write; 3 Spark jobs), a larger feed or
-  larger index buckets go through the Spark ``apply_changes`` merge.
-  When that feed starts at the LSN high-water mark of the last applied
-  base version, it is the ``after`` side of the window's collected change
-  set (``cdc/changeset.py``) — usually already collected by the matview
-  refresh of the same epoch, so the refresh runs no feed job.  Re-running a crashed refresh is
-  a fenced no-op, and because both merges are LWW, overlap from a stale
-  watermark is idempotent (the watermark is an optimization, never a
-  correctness input) — except across a tombstone vacuum, which takes the
-  keyed path below;
+  buckets, the LWW rewrite, one write; 3 Spark jobs), a larger window — the
+  base's ``snapshot_diff_images`` — or larger index buckets go through the
+  Spark ``apply_changes`` merge.  With no applied version (the initial
+  build) or an expired one, the refresh is one full pass instead: live
+  base rows become upserts, index keys absent from the base deletes.  The
+  last applied version lives in the index's own exactly-once registry,
+  written with its data; re-running a crashed refresh is a fenced no-op;
 - **lookup** plans O(matching files) of the slim table (stats skipping on
   the value column), then fetches the full rows via bucket-pruned
   ``read_for_keys`` on the base — the wide token arrays are read only for
   the hits.
 
 This is the record-level-index capability Hudi ships and Iceberg lacks,
-built from parts this engine already proves: feed → merge → stats skip →
-point read.  Updates need no old-image handling at all: the index row is
-keyed by the BASE key, so an upsert whose value changed simply overwrites
-the index row (LWW), and a delete tombstones it.
+built from parts this engine already proves: change set → merge → stats
+skip → point read.  Updates need no old-image handling at all: the index
+row is keyed by the BASE key, so an upsert whose value changed simply
+overwrites the index row (LWW), and a delete tombstones it.
 
 Reference analog: the reference leans on its warehouse's implicit indexing
 for attribute probes (notification_service/bigquery_queries.py WHERE
@@ -48,17 +47,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .icehouse import DELETED_COL, LSN_COL, IcehouseTable
+from .exprs import col as qcol
+from .exprs import quote
+from .icehouse import DELETED_COL, IcehouseTable
 
 __all__ = ["SecondaryIndex", "create_index", "open_index"]
 
 
 class SecondaryIndex:
     """Handle pairing a base table with its index table.  State lives in
-    the INDEX table's properties (base root, indexed column, LSN
-    watermark) — the base table needs no knowledge of its indexes."""
+    the INDEX table: its properties (base root, indexed column) and its
+    exactly-once registry (the last applied base version) — the base table
+    needs no knowledge of its indexes."""
 
     NAMESPACE = "secidx"
+    #: the base version an empty window advanced to (it commits no epoch)
+    FLOOR = "index.refreshed-floor"
 
     def __init__(self, index: IcehouseTable):
         props = index.meta.get("properties", {})
@@ -99,7 +103,6 @@ class SecondaryIndex:
             properties={
                 "index.base-root": base.root,
                 "index.column": column,
-                "index.lsn-watermark": "-1",
                 # the whole point: value-clustered slim files with manifest
                 # ranges, so a value probe plans O(matching files)
                 "write.sort-order": column,
@@ -108,184 +111,111 @@ class SecondaryIndex:
             },
         )
         idx = cls(index)
-        idx.refresh(spark)  # initial build = refresh from watermark -1
+        idx.refresh(spark)  # initial build = the full pass
         return idx
 
     # -- maintenance -------------------------------------------------------
 
-    def refresh(
-        self,
-        spark: SparkSession,
-        changed_keys: DataFrame | None = None,
-        covered_lsn_high: int | None = None,
-    ) -> dict[str, Any]:
+    @property
+    def _ns(self) -> str:
+        return f"{self.NAMESPACE}:{self.column}"
+
+    def applied_version(self) -> int | None:
+        """The base version the index reflects (``None`` before its first
+        build)."""
+        from ..cdc.changeset import applied_version
+
+        return applied_version(self.index.refresh(), self._ns, self.FLOOR)
+
+    def refresh(self, spark: SparkSession) -> dict[str, Any]:
         """Bring the index up to the base's current snapshot.  O(changed
         data); exactly-once per base version; safe to re-run or cron
         (sequentially — run ONE maintainer per index, like any CDC
         consumer; the fence serializes same-version retries, not two
         maintainers chasing different base versions).
 
-        Default path: the base's changed-since feed from the stored LSN
-        watermark — correct when LSN progression is (eventually) ascending,
-        which batch replay and epoch-ordered streams guarantee.  A feed of
-        at most ``SMALL_BATCH_ROWS`` rows is collected once (rows, part
-        stats and next watermark from the same rows) and committed from the
-        driver by ``apply_changes_local`` when the affected index buckets
-        are small; a larger feed, or larger buckets, go through the Spark
-        ``apply_changes`` merge.  Both give the same rows and lineage.  The
-        collected feed is the memoized change set's ``after`` side when the
-        watermark is the LSN high-water mark of the last applied base
-        version (the same rows), so a refresh after the matview's of the
-        same epoch reads no feed.
-        When the caller KNOWS the changed key set (a streaming micro-batch
-        whose boundaries may split epochs out of LSN order — the same
-        caveat table/matview.py documents), pass ``changed_keys``: the
-        refresh becomes one bucket-pruned point read of those keys' CURRENT
-        rows (present → upsert at lsn=base.version, absent → delete), with
-        no dependence on feed ordering at all.  A tombstone vacuum above
-        the watermark (``vacuumed_lsn`` in the base's snapshot doc) takes
-        that path too, keyed by the index's own keys plus the feed's, so a
-        key whose tombstone was vacuumed away becomes a delete."""
+        The window is (:meth:`applied_version`, current version], read as
+        one exact change set whatever happened in between — rollback,
+        vacuum, compaction or out-of-order LSNs.  A change set of at most
+        ``SMALL_BATCH_ROWS`` keys is committed from the driver by
+        ``apply_changes_local`` when the affected index buckets are small;
+        a larger one (the window's ``snapshot_diff_images``), or larger
+        buckets, go through the Spark ``apply_changes`` merge.  Both give
+        the same rows and lineage, in one index commit.  Without a readable
+        applied version the refresh is the full pass (module docstring)."""
         from ..cdc.apply import apply_changes, apply_changes_local, local_part_stats
+        from ..cdc.cdf import snapshot_diff_images
+        from ..cdc.changeset import applied_version, change_set, finish_window
 
         self.index = self.index.refresh()
         base = IcehouseTable.load(self.base_root)
-        wm = int(self.index.meta["properties"].get("index.lsn-watermark", -1))
-        ns = f"{self.NAMESPACE}:{self.column}"
-        if self.index.epoch_committed(base.version, ns):
+        ns, key, col = self._ns, base.key_col, self.column
+        v0 = applied_version(self.index, ns, self.FLOOR)
+        if v0 is not None and v0 >= base.version:
             return {"applied": 0, "skipped": True, "base_version": base.version}
 
         # every row any refresh applies is the key's CURRENT value as of
-        # that refresh (the feed emits winners; the point read IS the
-        # current row), so the correct LWW ordinal is "which refresh saw it
+        # that refresh, so the correct LWW ordinal is "which refresh saw it
         # last" — a driver-side monotone counter above every lsn either
-        # table has ever recorded.  Stamping both paths with it keeps them
-        # freely interleavable (real feed LSNs from one path can never
-        # out-rank a LATER point-read refresh).
-        ordinal = (
-            max(self.index.lsn_high(default=-1), base.lsn_high(default=-1), wm) + 1
-        )
-        stats = part_stats = rescan = None
-        if changed_keys is None and base.meta.get("vacuumed_lsn", -1) > wm:
-            # a vacuum removed tombstones the feed from wm would carry:
-            # re-read every key the index holds plus every changed key,
-            # which covers the whole snapshot
-            changed_keys = self.index.read(spark).select(base.key_col).unionByName(
-                base.read_changed_since(spark, wm).select(base.key_col)
+        # table has ever recorded.
+        ordinal = max(self.index.lsn_high(default=-1), base.lsn_high(default=-1)) + 1
+        stamp = f"CAST({ordinal} AS BIGINT) AS lsn"
+        try:
+            prior = None if v0 is None else IcehouseTable.load(self.base_root, version=v0)
+        except FileNotFoundError:
+            prior = None  # expired: the full pass
+        cs = None if prior is None else change_set(spark, prior, base)
+        stats = part_stats = None
+        if cs is not None:
+            # the index schema is (key, column): rows are already in
+            # table-column order for the driver-side commit
+            rows = [(ordinal, "D" if r[DELETED_COL] else "U", r[key], r[col]) for r in cs.after]
+            stats = apply_changes_local(
+                spark, self.index, [r[2] for r in rows], lambda _current: rows,
+                epoch=base.version, epoch_source=ns,
             )
-            covered_lsn_high = base.lsn_high()
-        if changed_keys is not None:
-            keys = changed_keys.select(
-                F.col(changed_keys.columns[0]).alias(base.key_col)
-            ).distinct()
-            live = base.read_for_keys(spark, keys).select(
-                base.key_col, self.column
+            if stats is None:  # index buckets too big for the driver
+                batch = spark.createDataFrame(
+                    rows,
+                    T.StructType(
+                        [
+                            T.StructField("lsn", T.LongType()),
+                            T.StructField("op", T.StringType()),
+                            T.StructField(key, base.schema[key].dataType),
+                            T.StructField(col, base.schema[col].dataType),
+                        ]
+                    ),
+                )
+                part_stats = local_part_stats(self.index, [r[:3] for r in rows])
+        elif prior is not None:
+            batch = snapshot_diff_images(spark, self.base_root, v0, base.version).selectExpr(
+                stamp,
+                "CASE WHEN `op` = 'D' THEN 'D' ELSE 'U' END AS op",
+                quote(key),
+                f"`after`.{quote(col)} AS {quote(col)}",
             )
-            ups = live.select(
-                F.lit(ordinal).cast("long").alias("lsn"),
-                F.lit("U").alias("op"),
-                F.col(base.key_col),
-                F.col(self.column),
-            )
-            dels = keys.join(live, base.key_col, "left_anti").select(
-                F.lit(ordinal).cast("long").alias("lsn"),
-                F.lit("D").alias("op"),
-                F.col(base.key_col),
-                F.lit(None).cast(base.schema[self.column].dataType).alias(self.column),
-            )
-            batch = ups.unionByName(dels)
-            # Advance ONLY as far as the caller ATTESTS its key set covers
-            # (``covered_lsn_high`` — e.g. the max LSN of the micro-batch
-            # whose keys were passed).  The base's own metadata lsn-high
-            # would be unsafe here: a concurrent writer's commit can land
-            # between the caller computing its key set and this refresh
-            # loading the snapshot, and jumping the watermark past those
-            # UNCOVERED changes would silently desynchronize the index
-            # forever.  With the attested bound, anything above stays
-            # visible to the next feed refresh — the self-healing property
-            # is preserved, while a per-batch maintainer still keeps later
-            # feed refreshes O(delta) instead of O(full history).
-            new_wm = covered_lsn_high
         else:
-            # one collect: a per-epoch poll's feed fits on the driver, so
-            # the batch, its part stats and the next watermark all come
-            # from the rows in hand instead of two more scans of the feed
-            head = self._collected_feed(spark, base, wm, ns)
-            if head is not None:
-                # the index schema is (key, column): rows are already in
-                # table-column order for the driver-side commit
-                rows = [(ordinal, "D" if r[2] else "U", r[0], r[1]) for r in head]
-                new_wm = max((r[3] for r in head), default=None)
-                stats = apply_changes_local(
-                    spark, self.index, [r[2] for r in rows], lambda _current: rows,
-                    epoch=base.version, epoch_source=ns,
-                )
-                if stats is None:  # index buckets too big for the driver
-                    batch = spark.createDataFrame(
-                        rows,
-                        T.StructType(
-                            [
-                                T.StructField("lsn", T.LongType()),
-                                T.StructField("op", T.StringType()),
-                                T.StructField(base.key_col, base.schema[base.key_col].dataType),
-                                T.StructField(self.column, base.schema[self.column].dataType),
-                            ]
-                        ),
+            live = base.read(spark).selectExpr(quote(key), quote(col))
+            batch = live.selectExpr(stamp, "'U' AS op", "*")
+            if self.index.meta["partitions"] or any(self.index.meta.get("deltas", {}).values()):
+                gone = self.index.read(spark).selectExpr(quote(key)).join(live, key, "left_anti")
+                batch = batch.unionByName(
+                    gone.select(
+                        F.expr(stamp), F.lit("D").alias("op"), qcol(key),
+                        F.lit(None).cast(base.schema[col].dataType).alias(col),
                     )
-                    part_stats = local_part_stats(self.index, [r[:3] for r in rows])
-            else:
-                feed = base.read_changed_since(spark, wm)
-                batch = feed.select(
-                    F.lit(ordinal).cast("long").alias("lsn"),
-                    F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit("D"))
-                    .otherwise(F.lit("U"))
-                    .alias("op"),
-                    F.col(base.key_col),
-                    F.col(self.column),
                 )
-                rescan = feed
         if stats is None:
             stats = apply_changes(
                 self.index, batch, epoch=base.version, epoch_source=ns,
                 part_stats=part_stats,
             )
-        self.index = self.index.refresh()
-        if not stats.result.skipped:
-            if rescan is not None:
-                new_wm = rescan.agg(F.max(LSN_COL).alias("m")).collect()[0]["m"]
-            if new_wm is not None and new_wm > wm:
-                # watermark is a pure scan-cost optimization: a crash before
-                # this commit just re-reads a wider feed next time (the LWW
-                # merge absorbs the overlap)
-                self.index.update_properties(
-                    {"index.lsn-watermark": str(int(new_wm))}
-                )
-                self.index = self.index.refresh()
+        finish_window(self.index, ns, self.FLOOR, base.version)
         return {
             "applied": stats.events_applied,
             "skipped": stats.result.skipped,
             "base_version": base.version,
         }
-
-    def _collected_feed(
-        self, spark: SparkSession, base: IcehouseTable, wm: int, ns: str
-    ) -> list | None:
-        """``(key, value, _deleted, _lsn)`` of every base winner above
-        ``wm``, or ``None`` over ``SMALL_BATCH_ROWS`` rows.  Taken from the
-        memoized change set of (last applied base version, ``base``] when
-        that window's feed starts at ``wm``, else collected."""
-        from ..cdc.changeset import change_set, collect_changed, feed_watermark
-
-        cols = [base.key_col, self.column, DELETED_COL, LSN_COL]
-        v_from = self.index.last_epoch(ns)
-        try:
-            prior = None if v_from is None else IcehouseTable.load(self.base_root, version=v_from)
-        except FileNotFoundError:
-            prior = None
-        if prior is None or feed_watermark(prior) != wm:
-            return collect_changed(spark, base, wm, cols)
-        cs = change_set(spark, prior, base)
-        return None if cs is None else [tuple(r[c] for c in cols) for r in cs.after]
 
     # -- queries -----------------------------------------------------------
 

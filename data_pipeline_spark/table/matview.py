@@ -10,18 +10,17 @@ without ever rescanning the base:
                               refreshed snapshot)
                             + contrib(current winning rows of changed keys)
 
-Per refresh the engine touches O(changed keys + affected groups) data:
-
-- the changed-key set comes from :meth:`IcehouseTable.read_changed_since`
-  (LSN-footer file skipping — per-epoch polls read only that epoch's files),
-- the retract side reads the changed keys' PRIOR rows from the base's
-  **time-travelled snapshot** at the last refreshed version
-  (:meth:`IcehouseTable.load` ``version=`` + bucket-pruned
-  :meth:`read_for_keys` — pending snapshot expiry, history is already on
-  disk, so "what did these keys look like last time" is a point lookup, not
-  a second copy of the table),
-- the affected groups' current aggregates come from a bucket-pruned point
-  read of the view itself.
+Per refresh the engine touches O(changed keys + affected groups) data.
+The window ``(last refreshed version, current version]`` is one exact change
+set of the base (``cdc/changeset.py``, shared with the index refresh and
+the emitter): each changed key's current winning row, and its row at the
+last refreshed snapshot — the base's **time-travelled snapshot** (pending
+snapshot expiry, history is already on disk, so "what did these keys look
+like last time" is a read, not a second copy of the table).  The affected
+groups' current aggregates come from a bucket-pruned point read of the view
+itself.  The change set is exact for every window — compaction, rollback,
+vacuum, out-of-order LSNs included — so the view never guesses whether a
+feed can be trusted.
 
 Exactly-once without a second ledger: the refresh commit is fenced through
 the view table's own epoch registry with ``epoch = base snapshot version``
@@ -29,8 +28,7 @@ the view table's own epoch registry with ``epoch = base snapshot version``
 from the registry*, not from a property that could go stale — a refresh
 that crashes between its data commit and anything else simply re-runs: the
 fence skips the data apply and the next delta picks up from the committed
-version.  A base ROLLBACK (head LSN moves backwards) is detected from the
-snapshot's LSN high-water mark and degrades to a fenced full recompute.
+version.
 
 The reference recomputes every rollup from scratch per run (the
 ``FactProductPrice`` summary queries in
@@ -40,15 +38,13 @@ rows the full re-aggregate per epoch is the dominant cost; this module is
 the O(changed-data) form, stacked on the same commit protocol as the data
 path.
 
-Scale shape: no global shuffle ever touches the base table.  One changed-
-since scan (file-skipped), two bucket-pruned point reads, one groupBy of
-the changed-row set, one keyed MERGE into the view.  A small epoch's window
-is one collected change set (``cdc/changeset.py``, shared with the index
-refresh and the emitter): its signed delta is summed on the driver and the
-MERGE of small view buckets runs on the driver, 6–7 Spark jobs in all on
-the per-epoch MOR poll.  Measures are fixed-point BIGINT so increments are
-exact and order-independent — a float sum would drift from a from-scratch
-recompute and fail the oracle.
+Scale shape: no global shuffle ever touches the whole base table.  A small
+window is one collected change set: its signed delta is summed on the driver
+and the MERGE of small view buckets runs on the driver, 6–7 Spark jobs in all
+on the per-epoch MOR poll.  A larger window is the changed-bucket snapshot
+diff, one groupBy of its two sides, one keyed MERGE into the view.  Measures
+are fixed-point BIGINT so increments are exact and order-independent — a
+float sum would drift from a from-scratch recompute and fail the oracle.
 """
 
 from __future__ import annotations
@@ -64,11 +60,19 @@ from .exprs import col as qcol
 from .exprs import quote, quote_all
 from .icehouse import DELETED_COL, CommitResult, IcehouseTable
 from ..cdc.apply import ApplyStats, apply_changes, apply_changes_local, holds_type
-from ..cdc.changeset import ChangeSet, change_set, collectable, local_frame
-from ..session import SMALL_BATCH_ROWS
+from ..cdc.cdf import snapshot_diff_images
+from ..cdc.changeset import (
+    ChangeSet,
+    applied_version,
+    change_set,
+    collectable,
+    finish_window,
+    local_frame,
+)
 
 GROUP_KEY_COL = "group_key"
 _REFRESH_NS = "mv-refresh"
+_FLOOR = "mv.refreshed_floor"
 _FLOATS = (T.FloatType, T.DoubleType)
 
 
@@ -157,15 +161,11 @@ def _last_refreshed_version(mv: IcehouseTable) -> int:
     (a property cache could go stale between a data commit and a property
     commit; the registry is written atomically with the data).  A refresh
     whose net delta was EMPTY commits no data and registers no epoch; it
-    advances the ``mv.refreshed_floor`` property instead (safe: there is no
-    data whose application the floor could outrun), so repeated no-op
-    refreshes don't re-walk ever-longer changed-since windows."""
-    last = mv.last_epoch(_REFRESH_NS)
-    high = -1 if last is None else last
-    floor = mv.meta.get("properties", {}).get("mv.refreshed_floor")
-    if floor is not None:
-        high = max(high, int(floor))
-    if high < 0:
+    advances the ``mv.refreshed_floor`` property instead
+    (:func:`~..cdc.changeset.finish_window`), so repeated no-op refreshes
+    don't re-walk ever-longer windows."""
+    high = applied_version(mv, _REFRESH_NS, _FLOOR)
+    if high is None:
         raise ValueError(
             f"{mv.root} has no committed mv-refresh epoch — not a materialized "
             "view created by create_matview?"
@@ -212,7 +212,7 @@ def create_matview(
             "mv.scale": scale,
             # floor covers the empty-base create (an empty apply commits no
             # epoch) and every later empty-delta refresh
-            "mv.refreshed_floor": base.version,
+            _FLOOR: base.version,
         }
     )
     agg = _aggregate(base.read(spark), group_cols, value_cols, scale)
@@ -255,7 +255,7 @@ def _apply_view_delta(
     addressing), add, and upsert — groups whose row count reaches 0 become
     tombstones, so a fully-retracted group disappears from the view exactly
     as it would from a re-aggregate.  An EMPTY delta commits nothing; the
-    refresh floor advances instead (see :func:`_finish_refresh`)."""
+    refresh floor advances instead (:func:`~..cdc.changeset.finish_window`)."""
     spark = delta.sparkSession
     delta = delta.persist()
     try:
@@ -278,17 +278,8 @@ def _apply_view_delta(
         stats = apply_changes(mv, changes, epoch=base_version, epoch_source=_REFRESH_NS)
     finally:
         delta.unpersist()
-    _finish_refresh(mv, base_version)
+    finish_window(mv, _REFRESH_NS, _FLOOR, base_version)
     return stats
-
-
-def _finish_refresh(mv: IcehouseTable, base_version: int) -> None:
-    """Reload the view after a refresh's merge.  When the delta was empty
-    (nothing committed), record the advance as a pure-metadata floor bump
-    so the next refresh's changed-since window starts here."""
-    mv.refresh()
-    if not mv.epoch_committed(base_version, _REFRESH_NS):
-        mv.update_properties({"mv.refreshed_floor": base_version})
 
 
 def _commit_local_delta(
@@ -308,10 +299,10 @@ def _commit_local_delta(
     ``group_key`` JSON string, so group columns of any type (arrays, maps)
     work.  View buckets too big for the driver take
     :func:`_apply_view_delta` on a local frame of the delta.  Finishes the
-    refresh (:func:`_finish_refresh`)."""
+    refresh (:func:`~..cdc.changeset.finish_window`)."""
     if not delta:
         # nothing to commit: the refresh floor advances instead
-        _finish_refresh(mv, base_version)
+        finish_window(mv, _REFRESH_NS, _FLOOR, base_version)
         return CommitResult(mv.version, mv.meta["snapshot_id"], base_version)
     fixed = 1 + len(group_cols)
 
@@ -333,7 +324,7 @@ def _commit_local_delta(
         return _apply_view_delta(
             mv, spark.createDataFrame(delta, mv.schema), group_cols, base_version, measures,
         ).result
-    _finish_refresh(mv, base_version)
+    finish_window(mv, _REFRESH_NS, _FLOOR, base_version)
     return stats.result
 
 
@@ -480,62 +471,45 @@ def refresh_matview(
     spark: SparkSession,
     mv: IcehouseTable,
     full: bool = False,
-    changed_keys: DataFrame | None = None,
     auto_full_ratio: float = 0.2,
 ) -> RefreshStats:
     """Bring the view up to the base table's CURRENT snapshot.
 
     Incremental by default (O(changed keys + affected groups)); ``full=True``
     forces a from-scratch re-aggregate diffed against the view (one base
-    scan, still a single fenced commit — used after a base rollback, or when
-    the prior snapshot's metadata was expired).  Either way the commit is
-    fenced on ``epoch = base version``, so concurrent or crash-retried
-    refreshes of the same version are no-ops and the watermark can never
-    run ahead of the applied data.
+    scan, still a single fenced commit).  The refresh recomputes on its own
+    only when the incremental retract side cannot be read: the prior
+    snapshot's metadata was expired, or the view's columns did not exist
+    in it.  Either way the commit is fenced on ``epoch = base version``,
+    so concurrent or crash-retried refreshes of the same version are
+    no-ops and the watermark can never run ahead of the applied data.
 
-    Small windows take the CHANGE-SET PATH: when at most
-    ``SMALL_BATCH_ROWS`` keys changed in ``(refreshed version, current
-    version]``, the window is one collected change set
-    (:func:`~..cdc.changeset.change_set`: the changed winners and their
-    prior rows, memoized for the index and emit refreshes of the same
-    epoch).  The signed per-group delta is summed on the driver over its
+    The window ``(refreshed version, current version]`` is one exact
+    change set (:func:`~..cdc.changeset.change_set`) — a base rollback,
+    compaction, tombstone vacuum or out-of-order apply in between needs no
+    special case.  When at most ``SMALL_BATCH_ROWS`` keys changed it is
+    collected (and memoized for the index and emit refreshes of the same
+    window): the signed per-group delta is summed on the driver over its
     two sides — a projection over a local frame gives Spark's group key
     and fixed-point values without a job — and the view merge and its
     fenced commit are built driver-side (:func:`_commit_local_delta`).
-    On a MOR base with 8 view buckets that is 6–7 Spark jobs (the change
-    set's feed collect and point read; the view's collect and write)
-    where the Spark-side merge ran 24 and the Spark signed delta 8
+    On a MOR base with 8 view buckets that is 6–7 Spark jobs
     (tests/test_small_batch_refresh.py pins the budget).  Larger windows
-    take the Spark path below, as do views whose group columns nest
-    floats inside arrays or structs (Spark's grouping folds -0.0 into 0.0
-    there too) or hold types that cannot round-trip through the driver.
+    take the Spark path: the signed delta of the window's
+    :func:`~..cdc.cdf.snapshot_diff_images` (its ``before`` rows retract,
+    its ``after`` rows add) merged by :func:`_apply_view_delta`; so do
+    views whose group columns nest floats inside arrays or structs (Spark's
+    grouping folds -0.0 into 0.0 there too) or hold types that cannot
+    round-trip through the driver.
 
-    AUTO-CROSSOVER (``auto_full_ratio``): when the changed-row count
-    exceeds ``auto_full_ratio × base physical rows`` (and the delta is
-    past the fast-path cap), the refresh auto-selects the full recompute —
-    at that delta fraction the incremental path's point reads touch most
-    buckets anyway and the one-scan re-aggregate is cheaper.  The rule is
-    a pure cost heuristic: both paths commit the identical fenced delta.
-    Set ``auto_full_ratio=0`` to disable (always incremental), or pass
-    ``full=True`` to force the recompute.
-
-    ``changed_keys``: a one-column DataFrame of base keys KNOWN to cover
-    every key changed between the view's refreshed version and the current
-    snapshot (a superset is fine — unchanged keys retract and re-add the
-    same contribution, a no-op).  A caller applying the very change batch
-    (the streaming per-micro-batch hook) passes the batch's keys; both
-    sides then become bucket-pruned point reads and the refresh never
-    consults the changed-since feed.  Without it, the Spark path derives
-    the changed set from LSN file stats, which assumes changes are applied
-    in ascending-LSN order across refreshes (true for the epoch replayer;
-    NOT guaranteed for arbitrary out-of-order appliers — pass the keys
-    explicitly there).  The change-set path reads the same feed, so the
-    same caveat holds there.
-
-    A tombstone vacuum newer than the refreshed LSN high-water mark
-    (``vacuumed_lsn`` in the base's snapshot doc, see
-    :meth:`IcehouseTable.vacuum_tombstones`) forces the full recompute:
-    the vacuumed deletes are gone from the changed-since feed.
+    AUTO-CROSSOVER (``auto_full_ratio``): on the Spark path, when the
+    diff's row count exceeds ``auto_full_ratio × base physical rows``, the
+    refresh auto-selects the full recompute — at that delta fraction the
+    incremental path reads most buckets anyway and the one-scan
+    re-aggregate is cheaper.  The rule is a pure cost heuristic: both paths
+    commit the identical fenced delta.  Set ``auto_full_ratio=0`` to
+    disable (always incremental), or pass ``full=True`` to force the
+    recompute.
     """
     mv.refresh()
     base_root, group_cols, value_cols, scale = _view_spec(mv)
@@ -546,67 +520,20 @@ def refresh_matview(
     if v1 <= v0:
         return RefreshStats("skipped", v0, v0, None)
 
-    prior = None
-    if not full:
-        try:
-            prior = IcehouseTable.load(base_root, version=v0)
-        except FileNotFoundError:
-            full = True  # snapshot expired — incremental retract impossible
-        else:
-            w0 = prior.lsn_high(strict=True)
-            w1 = base.lsn_high(strict=True)
-            # LSN moving backwards = the base was rolled back; forward-only
-            # changed-since cannot see the reversal.  A head snapshot with
-            # files missing LSN stats (w1 None on non-empty) defeats the
-            # detection, so it recomputes too — conservative, never wrong.
-            # A vacuum above w0 removed tombstones the feed would carry.
-            base_nonempty = base.meta["partitions"] or any(
-                base.meta.get("deltas", {}).values()
-            )
-            if (
-                (w1 is not None and w0 is not None and w1 < w0)
-                or (w1 is None and base_nonempty)
-                or base.meta.get("vacuumed_lsn", -1) > (-1 if w0 is None else w0)
-            ):
-                full = True
+    def recompute() -> RefreshStats:
+        return _full_refresh(spark, mv, base, group_cols, value_cols, scale, measures, v0, v1)
 
     if full:
-        return _full_refresh(
-            spark, mv, base, group_cols, value_cols, scale, measures, v0, v1
-        )
-
-    key = base.key_col
-    # columns the delta aggregation actually consumes — the feed/point
-    # reads project to these, so collects and scans stay slim even when
-    # the base carries wide payloads (token arrays)
+        return recompute()
+    try:
+        prior = IcehouseTable.load(base_root, version=v0)
+    except FileNotFoundError:
+        return recompute()  # snapshot expired — incremental retract impossible
     need_cols = list(dict.fromkeys(group_cols + value_cols))
-    missing = [c for c in need_cols if c not in prior.schema.fieldNames()]
-    if missing:
+    if any(c not in prior.schema.fieldNames() for c in need_cols):
         # the view's columns didn't exist at the prior snapshot (added
-        # since) — the retract side cannot be expressed; recompute
-        return _full_refresh(
-            spark, mv, base, group_cols, value_cols, scale, measures, v0, v1
-        )
-
-    if changed_keys is not None:
-        # caller-supplied change set: both legs are point reads, no feed
-        changed = changed_keys.selectExpr(
-            f"{quote(changed_keys.columns[0])} AS {quote(key)}"
-        ).distinct().persist()
-        try:
-            lit_keys = [r[0] for r in changed.limit(SMALL_BATCH_ROWS + 1).collect()]
-            point_keys = lit_keys if len(lit_keys) <= SMALL_BATCH_ROWS else changed
-            delta = _signed_delta(
-                prior.read_for_keys(spark, point_keys),
-                base.read_for_keys(spark, point_keys),
-                group_cols,
-                value_cols,
-                scale,
-            )
-            stats = _apply_view_delta(mv, delta, group_cols, v1, measures)
-        finally:
-            changed.unpersist()
-        return RefreshStats("incremental", v0, v1, stats.result)
+        # since) — the retract side cannot be expressed
+        return recompute()
 
     cs = None
     if collectable(_need_frame(base.schema, need_cols)) and not any(
@@ -619,37 +546,23 @@ def refresh_matview(
         result = _commit_local_delta(spark, mv, delta, group_cols, measures, v1)
         return RefreshStats("incremental", v0, v1, result)
 
-    # SPARK PATH: more than SMALL_BATCH_ROWS changed rows — persist the
-    # slim feed, count it once, and apply the auto-crossover rule before
-    # committing to point reads.
-    # None w0 (no stats / empty prior) degrades to watermark -1: changed-
-    # since then returns every live key, and the retract side reads every
-    # prior row of those keys — O(table) instead of O(changed), but still
-    # the exact delta.  Real apply paths always record LSN stats.
-    w0 = prior.lsn_high(default=-1, strict=True)
-    feed = base.read_changed_since(spark, w0).selectExpr(
-        quote(key), "_deleted", *[quote(c) for c in need_cols if c != key]
-    )
-    changed = feed.persist()
+    # SPARK PATH: the window's snapshot diff, persisted and counted once
+    # for the auto-crossover rule
+    key = quote(base.key_col)
+    diff = snapshot_diff_images(spark, base_root, v0, v1).persist()
     try:
-        n_changed = changed.count()
-        base_rows = max(base.row_count(), 1)
-        if auto_full_ratio and n_changed > auto_full_ratio * base_rows:
-            return _full_refresh(
-                spark, mv, base, group_cols, value_cols, scale, measures, v0, v1
-            )
-        keys_df = changed.selectExpr(quote(key)).distinct()
-        need = [quote(c) for c in need_cols]
-        live_changed = changed.where("NOT coalesce(_deleted, false)").selectExpr(*need)
-        # large key sets keep the broadcast-semi-join plan (a driver-side
-        # collect would be the real scale hazard there)
-        prior_rows = prior.read_for_keys(spark, keys_df).selectExpr(*need)
+        if auto_full_ratio and diff.count() > auto_full_ratio * max(base.row_count(), 1):
+            return recompute()
         delta = _signed_delta(
-            prior_rows, live_changed, group_cols, value_cols, scale
+            diff.where("`before` IS NOT NULL").selectExpr(key, "`before`.*"),
+            diff.where("`after` IS NOT NULL").selectExpr(key, "`after`.*"),
+            group_cols,
+            value_cols,
+            scale,
         )
         stats = _apply_view_delta(mv, delta, group_cols, v1, measures)
     finally:
-        changed.unpersist()
+        diff.unpersist()
     return RefreshStats("incremental", v0, v1, stats.result)
 
 

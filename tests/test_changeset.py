@@ -3,10 +3,11 @@ that consume it.
 
 Each consumer's change-set path is checked against the Spark path it
 stands in for: emit lines against the snapshot diff, matview rows against
-the Spark signed delta, index rows and watermark against the Spark feed.
-Every window the exactness guard must refuse (compaction, a copy-on-write
-epoch, vacuum, rollback, rebucket, additive evolution, a late event) is
-checked to take the emitter's snapshot diff.  The vacuum case also pins the
+the Spark signed delta, index rows and applied version against the Spark
+merge.  Every window the exactness guard must refuse (compaction, a
+copy-on-write epoch, vacuum, rollback, rebucket, additive evolution, a late
+event) is checked to build its change set from the snapshot diff, and every
+consumer to equal a rebuild after it.  The vacuum case also pins the
 consumer fix: a tombstone vacuum between two refreshes used to leave the
 matview and the index holding the deleted key."""
 
@@ -190,12 +191,10 @@ def _guard_case(spark, t, case):
     ["compaction", "cow_epoch", "vacuum", "rollback", "rebucket", "evolution", "late_event"],
 )
 def test_guard_refuses_inexact_windows(spark, tmp_path, monkeypatch, case):
-    """A window whose manifests cannot prove the LSN feed exact is never
-    emitted from the change set: the emitter takes the snapshot diff, and
-    its lines are that diff's.  The matview and the index (which read the
-    same feed either way) still end equal to a rebuild, except where the
-    documented ascending-LSN caveat applies (a late event) or the index
-    cannot see a rollback."""
+    """A window whose manifests cannot prove the LSN feed exact builds its
+    change set from the snapshot diff, once for the three consumers: the
+    emitter's lines are that diff's, and the matview and the index end
+    equal to a rebuild."""
     t = _table(tmp_path)
     apply_changes(t, _batch(spark, _base_rows()), epoch=0)
     apply_changes_mor(t.refresh(), _batch(spark, [
@@ -222,23 +221,21 @@ def test_guard_refuses_inexact_windows(spark, tmp_path, monkeypatch, case):
     want = sorted(r[0] for r in emit_debezium_envelopes(spark, t.root, last, t.version).collect())
     assert want, case
     calls = []
-    real = emit_mod.emit_debezium_envelopes
+    real = changeset.snapshot_diff_images
 
     def diffed(*a, **k):
         calls.append(a[2:4])
         return real(*a, **k)
 
-    monkeypatch.setattr(emit_mod, "emit_debezium_envelopes", diffed)
+    monkeypatch.setattr(changeset, "snapshot_diff_images", diffed)
     emit_to_files(spark, t.root, out, ck)
     assert calls == [(last, t.version)]
     assert _new_lines(out, seen) == want
 
     refresh_matview(spark, view.refresh())
-    if case != "late_event":
-        assert _view_rows(spark, view) == _recompute(spark, t, "source", "score", 2), case
-    if case not in ("late_event", "rollback"):
-        idx.refresh(spark)
-        assert _index_rows(spark, idx) == _live(spark, t, "source"), case
+    assert _view_rows(spark, view) == _recompute(spark, t, "source", "score", 2), case
+    idx.refresh(spark)
+    assert _index_rows(spark, idx) == _live(spark, t, "source"), case
 
 
 def test_vacuum_between_refreshes_reaches_lagging_consumers(spark, tmp_path):
@@ -268,7 +265,7 @@ def test_vacuum_between_refreshes_reaches_lagging_consumers(spark, tmp_path):
     t = t.refresh()
     assert t.meta["vacuumed_lsn"] == 10
 
-    assert refresh_matview(spark, view.refresh()).mode == "full"
+    assert refresh_matview(spark, view.refresh()).mode == "incremental"
     assert _view_rows(spark, view) == _recompute(spark, t, "source", "n_tok", 1)
     idx.refresh(spark)
     assert _index_rows(spark, idx) == _live(spark, t, "source") == [("a", "s1"), ("c", "s1")]
@@ -336,7 +333,7 @@ def test_change_set_matview_rows_equal_spark_delta(spark, tmp_path, monkeypatch)
 def test_index_from_change_set_equals_spark_feed_path(spark, tmp_path, monkeypatch):
     """One index refreshes after the matview of each epoch and reads no
     feed (the memoized change set's after side); the other is forced onto
-    the Spark feed path.  Index rows and watermarks agree."""
+    the Spark path.  Index rows and applied base versions agree."""
     t = _table(tmp_path)
     apply_changes(t, _batch(spark, _base_rows()), epoch=0)
     t = t.refresh()
@@ -365,8 +362,7 @@ def test_index_from_change_set_equals_spark_feed_path(spark, tmp_path, monkeypat
             m.setattr(changeset, "change_set", lambda *a, **k: None)
             feed.refresh(spark)
     assert _index_rows(spark, memo) == _index_rows(spark, feed) == _live(spark, t, "source")
-    wm = lambda idx: idx.index.refresh().meta["properties"]["index.lsn-watermark"]  # noqa: E731
-    assert wm(memo) == wm(feed) == "22"
+    assert memo.applied_version() == feed.applied_version() == t.refresh().version
 
 
 def test_snapshot_diff_reads_only_changed_buckets(spark, tmp_path):

@@ -1,9 +1,9 @@
 """One snapshot LSN high-water mark: ``IcehouseTable.lsn_high`` is the
 metadata-only max of ``lsn_max`` over live base and delta files that the
-matview, the secondary index, cherry-pick and the Debezium emitter all
-read.  The callers need different answers for a snapshot with nothing
-recorded and for one where a live file lacks ``lsn_max``, so each one's
-arguments are pinned to its value on all three snapshot shapes."""
+consumers' change set, the secondary index, cherry-pick and the Debezium
+emitter all read.  The callers need different answers for a snapshot with
+nothing recorded and for one where a live file lacks ``lsn_max``, so each
+one's arguments are pinned to its value on all three snapshot shapes."""
 
 import copy
 
@@ -21,9 +21,9 @@ SCHEMA = T.StructType(
 
 # the accessor arguments each caller passes
 CALLERS = {
-    # refresh_matview's rollback guard: None sends it to a full recompute
+    # changeset.is_exact: None on a non-empty snapshot refuses the feed
     "matview_guard": {"strict": True},
-    # refresh_matview's changed-since watermark
+    # the change set's changed-since watermark (changeset._from_feed)
     "matview_feed": {"default": -1, "strict": True},
     # SecondaryIndex.refresh's LWW ordinal floor
     "index": {"default": -1},

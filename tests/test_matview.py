@@ -188,7 +188,10 @@ def test_noop_base_version_advances_floor(spark):
     _assert_mv_equals_recompute(spark, mv, base)
 
 
-def test_rollback_detected_forces_full_recompute(spark):
+def test_rollback_refreshes_incrementally_from_the_diff(spark):
+    """A base rollback behind the view's refreshed version is an ordinary
+    window: the change set (the snapshot diff) retracts the rolled-back
+    rows, with no full recompute."""
     base = _mk_table()
     apply_changes(base, _changes(spark, [(1, "U", "d1", "a", 10)]), epoch=0)
     v_after_e0 = base.version
@@ -196,10 +199,33 @@ def test_rollback_detected_forces_full_recompute(spark):
     mv = _mk_mv(spark, base)
     base.rollback(v_after_e0)
     st = refresh_matview(spark, mv)
-    assert st.mode == "full"
+    assert st.mode == "incremental"
     _assert_mv_equals_recompute(spark, mv, base.refresh())
     rows = {r["source"]: r for r in read_matview(spark, mv).collect()}
     assert "b" not in rows and rows["a"]["n_rows"] == 1
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_rollback_then_epoch_above_old_mark_is_exact(spark, mode):
+    """A 2-row base; an epoch inserts ``c`` and deletes ``a`` and the view
+    follows it; the base rolls back over that epoch, then a new epoch
+    updates ``b`` at an LSN above every mark the view has seen.  The view
+    must equal a rebuild — ``('s1', 2, 2, 6)`` — not keep the reverted
+    epoch's rows."""
+    base = _mk_table()
+    apply_changes(base, _changes(spark, [(1, "U", "a", "s1", 1), (2, "U", "b", "s1", 2)]), epoch=0)
+    v = base.refresh().version
+    mv = _mk_mv(spark, base)
+    apply = apply_changes_mor if mode == "mor" else apply_changes
+    apply(base.refresh(), _changes(spark, [(10, "U", "c", "s2", 3), (11, "D", "a", None, None)]),
+          epoch=1)
+    assert refresh_matview(spark, mv).mode == "incremental"
+    base.refresh().rollback(v)
+    apply(base.refresh(), _changes(spark, [(20, "U", "b", "s1", 5)]), epoch=2)
+    assert refresh_matview(spark, mv).mode == "incremental"
+    rows = sorted(tuple(r) for r in read_matview(spark, mv.refresh()).collect())
+    assert rows == [("s1", 2, 2, 6)]
+    _assert_mv_equals_recompute(spark, mv, base.refresh())
 
 
 def test_expired_prior_snapshot_falls_back_to_full(spark):
@@ -306,12 +332,10 @@ def test_bad_spec_raises(spark):
         create_matview(spark, tempfile.mkdtemp() + "/v", base, ["nope"], "n_tok")
 
 
-def test_explicit_changed_keys_survive_out_of_order_apply(spark):
+def test_out_of_order_apply_is_exact_with_plain_refresh(spark):
     """Micro-batch boundaries can apply LOWER LSNs after higher ones (file
-    sources split epochs arbitrarily).  The feed-based refresh assumes
-    ascending-LSN application; passing the batch's keys explicitly removes
-    that assumption — both legs become point reads and the view stays
-    exact."""
+    sources split epochs arbitrarily).  The refresh window is one exact
+    change set whatever the LSN order, so a plain refresh stays exact."""
     base = _mk_table()
     # batch 1: high-LSN changes
     apply_changes(
@@ -321,17 +345,13 @@ def test_explicit_changed_keys_survive_out_of_order_apply(spark):
     mv = _mk_mv(spark, base)
     # batch 2: LOWER LSNs for different keys (out-of-order delivery)
     b2 = [(5, "U", "lo1", "a", 7), (6, "U", "lo2", "c", 9)]
-    apply_changes(base.refresh(), _changes(spark, b2), epoch=1)
-    keys = spark.createDataFrame([(r[2],) for r in b2], "doc_id string")
-    st = refresh_matview(spark, mv, changed_keys=keys)
+    apply_changes_mor(base.refresh(), _changes(spark, b2), epoch=1)
+    st = refresh_matview(spark, mv)
     assert st.mode == "incremental"
     _assert_mv_equals_recompute(spark, mv, base.refresh())
-    # a SUPERSET of keys (including unchanged ones) is also exact
+    # a later low-LSN update of a key the view already holds
     apply_changes(base.refresh(), _changes(spark, [(7, "U", "lo1", "b", 8)]), epoch=2)
-    all_keys = spark.createDataFrame(
-        [("lo1",), ("lo2",), ("hi1",), ("hi2",), ("never-existed",)], "doc_id string"
-    )
-    refresh_matview(spark, mv, changed_keys=all_keys)
+    refresh_matview(spark, mv)
     _assert_mv_equals_recompute(spark, mv, base.refresh())
 
 

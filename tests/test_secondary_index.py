@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_pipeline_spark.cdc.apply import apply_changes
+from data_pipeline_spark.cdc.apply import apply_changes, apply_changes_mor
 from data_pipeline_spark.table import IcehouseTable, SecondaryIndex, open_index
 
 SCHEMA = T.StructType(
@@ -99,19 +99,21 @@ def test_refresh_is_exactly_once_and_cronnable(spark, tmp_path, base):
 
 
 def test_point_read_refresh_interleaves_with_feed_refresh(spark, tmp_path, base):
-    """The two refresh paths share an LWW ordinal domain: a point-read
-    refresh AFTER a feed refresh must still win for its keys (and vice
-    versa) — every refresh batch carries the key's current value, so
-    'which refresh saw it last' is the only correct order."""
+    """The two builds of a refresh window share one LWW ordinal domain: the
+    LSN feed of an appended merge-on-read epoch and the snapshot diff of a
+    copy-on-write epoch.  A diff-built refresh AFTER a feed-built one must
+    still win for its keys (and vice versa) — every refresh batch carries
+    the key's current value, so 'which refresh saw it last' is the only
+    correct order."""
     idx = SecondaryIndex.create(spark, base, str(tmp_path / "idx"), "source")
 
     # feed refresh for epoch 1
-    apply_changes(base, mk_batch(spark, [(1_000, "U", "d0001", [1], 1, "s3")]), epoch=1)
+    apply_changes_mor(base, mk_batch(spark, [(1_000, "U", "d0001", [1], 1, "s3")]), epoch=1)
     base.refresh()
     assert not idx.refresh(spark)["skipped"]
     assert "d0001" in {r["doc_id"] for r in idx.lookup_keys(spark, ["s3"]).collect()}
 
-    # point-read refresh for epoch 2 (streaming micro-batch shape)
+    # snapshot-diff refresh for epoch 2 (a copy-on-write epoch)
     apply_changes(
         base,
         mk_batch(
@@ -121,8 +123,7 @@ def test_point_read_refresh_interleaves_with_feed_refresh(spark, tmp_path, base)
         epoch=2,
     )
     base.refresh()
-    keys = spark.createDataFrame([("d0001",), ("d0003",)], "doc_id string")
-    res = idx.refresh(spark, changed_keys=keys)
+    res = idx.refresh(spark)
     assert not res["skipped"] and res["applied"] == 2
     hits = {r["doc_id"] for r in idx.lookup_keys(spark, ["s3", "s4"]).collect()}
     assert "d0001" in hits  # moved to s4, still found
@@ -132,8 +133,8 @@ def test_point_read_refresh_interleaves_with_feed_refresh(spark, tmp_path, base)
         r["doc_id"] for r in idx.lookup_keys(spark, ["s3"]).collect()
     }
 
-    # back to the feed path for epoch 3 — must supersede the point refresh
-    apply_changes(base, mk_batch(spark, [(1_200, "U", "d0001", [1], 1, "s0")]), epoch=3)
+    # back to the feed path for epoch 3 — must supersede the diff refresh
+    apply_changes_mor(base, mk_batch(spark, [(1_200, "U", "d0001", [1], 1, "s0")]), epoch=3)
     base.refresh()
     assert not idx.refresh(spark)["skipped"]
     assert "d0001" not in {r["doc_id"] for r in idx.lookup_keys(spark, ["s4"]).collect()}
@@ -155,17 +156,18 @@ def test_range_lookup_and_validation(spark, tmp_path, base):
     assert idx.lookup_keys(spark, []).count() == 0
 
 
-def test_changed_keys_watermark_advance_is_caller_attested(spark, tmp_path, base):
-    """Round-5 review finding: a changed_keys refresh must NOT jump the
-    watermark to the base's metadata lsn-high — a concurrent writer's
-    uncovered commit would be skipped forever.  The watermark advances
-    only to the bound the caller ATTESTS its key set covers; anything
-    above stays visible to the next feed refresh (self-healing)."""
+def test_concurrent_commit_shows_after_first_refresh(spark, tmp_path, base):
+    """A streaming maintainer's micro-batch A and a concurrent writer's
+    batch B both land before the refresh.  The refresh window is the base
+    versions, not a caller's key set, so B shows in the index after the
+    first refresh (it used to stay stale until a later feed refresh healed
+    it), and the index's applied version is the base's."""
     idx = SecondaryIndex.create(spark, base, str(tmp_path / "idx"), "source")
-    wm0 = int(idx.index.meta["properties"]["index.lsn-watermark"])
+    v0 = idx.applied_version()
+    assert v0 == base.version
 
-    # micro-batch A (keys covered, lsns 1000-1001) AND a concurrent
-    # writer's batch B (key d0300, lsn 1100) land before the refresh
+    # micro-batch A (lsns 1000-1001) AND a concurrent writer's batch B
+    # (key d0300, lsn 1100) land before the refresh
     apply_changes(
         base,
         mk_batch(spark, [(1_000, "U", "d0001", [1], 1, "s9"),
@@ -178,18 +180,14 @@ def test_changed_keys_watermark_advance_is_caller_attested(spark, tmp_path, base
         epoch=2,
     )
     base.refresh()
+    res = idx.refresh(spark)
+    assert not res["skipped"] and res["applied"] == 3
+    v1 = idx.applied_version()
+    assert v1 == base.version and v1 > v0
+    s9 = {r["doc_id"] for r in idx.lookup_keys(spark, ["s9"]).collect()}
+    assert s9 == {"d0001", "d0002", "d0300"}
 
-    # maintainer only knows batch A's keys and attests coverage to 1001
-    keys = spark.createDataFrame([("d0001",), ("d0002",)], "doc_id string")
-    res = idx.refresh(spark, changed_keys=keys, covered_lsn_high=1_001)
-    assert not res["skipped"]
-    wm1 = int(idx.index.refresh().meta["properties"]["index.lsn-watermark"])
-    assert wm1 == 1_001 and wm1 > wm0  # advanced, but NOT past batch B
-
-    # d0300 is stale in the index right now (its change was not covered;
-    # the same-version fence also blocks an immediate re-refresh) — but as
-    # soon as the base advances, the next FEED refresh reads
-    # changed_since(1001), which still includes batch B, and heals it
+    # a reopened handle continues from the applied version
     apply_changes(
         base.refresh(),
         mk_batch(spark, [(1_200, "U", "d0005", [1], 1, "s8")]),
@@ -198,22 +196,38 @@ def test_changed_keys_watermark_advance_is_caller_attested(spark, tmp_path, base
     base.refresh()
     idx2 = open_index(str(tmp_path / "idx"))
     res2 = idx2.refresh(spark)
-    assert not res2["skipped"] and res2["applied"] >= 2  # d0300 AND d0005
-    s9 = {r["doc_id"] for r in idx2.lookup_keys(spark, ["s9"]).collect()}
-    assert {"d0001", "d0002", "d0300"} <= s9
+    assert not res2["skipped"] and res2["applied"] == 1
+    assert {"d0001", "d0002", "d0300"} <= {
+        r["doc_id"] for r in idx2.lookup_keys(spark, ["s9"]).collect()
+    }
     assert "d0005" in {r["doc_id"] for r in idx2.lookup_keys(spark, ["s8"]).collect()}
+    assert idx2.applied_version() == base.version
 
-    # without an attestation the watermark must not move at all
-    apply_changes(
-        base.refresh(),
-        mk_batch(spark, [(1_300, "U", "d0006", [1], 1, "s8")]),
-        epoch=4,
-    )
-    base.refresh()
-    idx3 = open_index(str(tmp_path / "idx"))
-    wm_before = int(idx3.index.meta["properties"]["index.lsn-watermark"])
-    keys2 = spark.createDataFrame([("d0006",)], "doc_id string")
-    res3 = idx3.refresh(spark, changed_keys=keys2)
-    assert not res3["skipped"]
-    wm_after = int(idx3.index.refresh().meta["properties"]["index.lsn-watermark"])
-    assert wm_after == wm_before
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_refresh_after_rollback_reverts_the_index(spark, tmp_path, mode):
+    """A 2-row base; an epoch inserts ``c`` and deletes ``a``, the index
+    follows it, then the base rolls back over that epoch.  The next
+    refresh must give back the base's rows ``a`` and ``b`` — the
+    rolled-back epoch's LSNs are gone from the base, so no LSN feed from
+    the old mark can show the reversal."""
+    t = IcehouseTable.create(str(tmp_path / "base"), schema=SCHEMA, key_col="doc_id", n_buckets=4)
+    apply_changes(t, mk_batch(spark, [
+        (1, "U", "a", [1], 1, "s1"), (2, "U", "b", [2], 1, "s1"),
+    ]), epoch=0)
+    v = t.refresh().version
+    idx = SecondaryIndex.create(spark, t, str(tmp_path / "idx"), "source")
+    apply = apply_changes_mor if mode == "mor" else apply_changes
+    apply(t.refresh(), mk_batch(spark, [
+        (10, "U", "c", [3], 1, "s2"), (11, "D", "a", None, None, None),
+    ]), epoch=1)
+    idx.refresh(spark)
+    assert sorted(tuple(r) for r in idx.index.refresh().read(spark).collect()) == [
+        ("b", "s1"), ("c", "s2"),
+    ]
+    t.refresh().rollback(v)
+    assert not idx.refresh(spark)["skipped"]
+    want = sorted(tuple(r) for r in t.refresh().read(spark).select("doc_id", "source").collect())
+    assert want == [("a", "s1"), ("b", "s1")]
+    assert sorted(tuple(r) for r in idx.index.refresh().read(spark).collect()) == want
+    assert sorted(r["doc_id"] for r in idx.lookup_keys(spark, ["s1"]).collect()) == ["a", "b"]

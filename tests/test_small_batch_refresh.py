@@ -95,8 +95,8 @@ def _lineage(spark, t):
 def test_driver_view_merge_matches_spark_merge(spark, monkeypatch):
     """Views of one base, each refreshed through a different merge: the
     driver rewrite of small view buckets, the Spark ``_apply_view_delta``
-    merge of a collected delta (view buckets over the cap), of a
-    caller-supplied key set, and of the heavy path.  Their stored rows and
+    merge of a collected delta (view buckets over the cap), and of the
+    heavy path (the window's snapshot diff).  Their stored rows and
     lineage must be identical after a group retracts to 0, a tombstoned
     group reappears, and a NULL group value comes and goes — for a single-
     and a multi-measure view."""
@@ -117,7 +117,7 @@ def test_driver_view_merge_matches_spark_merge(spark, monkeypatch):
     single = {"fast": _view(spark, base.refresh()), "spark": _view(spark, base.refresh())}
     multi = {
         path: _view(spark, base.refresh(), ["n_tok", "score"])
-        for path in ("fast", "keyed", "over_cap", "spark")
+        for path in ("fast", "over_cap", "spark")
     }
     epochs = [
         # d's group s2 retracts to 0 (tombstone); b joins the NULL group
@@ -128,14 +128,12 @@ def test_driver_view_merge_matches_spark_merge(spark, monkeypatch):
          (10, "U", "b", "s1", 2, 1.0)],
     ]
     for ep, rows in enumerate(epochs, start=1):
-        batch = spark.createDataFrame(rows, DDL)
-        apply_changes(base.refresh(), batch, epoch=ep)
+        apply_changes(base.refresh(), spark.createDataFrame(rows, DDL), epoch=ep)
         for views in (single, multi):
             assert refresh_matview(spark, views["fast"].refresh()).mode == "incremental"
             with monkeypatch.context() as m:
                 m.setattr(mv_mod, "change_set", lambda *a, **k: None)
                 refresh_matview(spark, views["spark"].refresh(), auto_full_ratio=0)
-        refresh_matview(spark, multi["keyed"].refresh(), changed_keys=batch.select("doc_id"))
         with monkeypatch.context() as m:
             m.setattr(apply_mod, "_held_rows", lambda t, bucket: 10**9)
             refresh_matview(spark, multi["over_cap"].refresh())
@@ -192,8 +190,8 @@ def test_fast_path_retries_a_conflicting_view_commit(spark, monkeypatch):
 def test_collected_index_refresh_matches_spark_path(spark, tmp_path):
     """One index follows the base epoch by epoch (each feed ≤ the cap, so
     the collected path), the other catches up once over more than
-    SMALL_BATCH_ROWS rows (the Spark path).  Index rows and the stored
-    watermark must agree."""
+    SMALL_BATCH_ROWS rows (the Spark path).  Index rows and the applied
+    base version must agree."""
     base = _table(n_buckets=4)
     apply_changes(
         base,
@@ -230,8 +228,7 @@ def test_collected_index_refresh_matches_spark_path(spark, tmp_path):
     )
     assert rows(small) == want
     assert rows(big) == want
-    wm = lambda idx: idx.index.refresh().meta["properties"]["index.lsn-watermark"]  # noqa: E731
-    assert wm(small) == wm(big) == str(lsn)
+    assert small.applied_version() == big.applied_version() == base.refresh().version
 
 
 def test_index_driver_commit_matches_spark_merge(spark, tmp_path, monkeypatch):
@@ -240,7 +237,7 @@ def test_index_driver_commit_matches_spark_merge(spark, tmp_path, monkeypatch):
     Spark ``apply_changes`` merge.  After a NULL indexed value, a
     delete→reinsert, a commit that loses a race and rebuilds, and a
     >1000-row catch-up (Spark path for both), their stored rows, lineage
-    and watermarks are identical."""
+    and applied base versions are identical."""
     base = _table(n_buckets=4)
     apply_changes(
         base,
@@ -324,8 +321,7 @@ def test_index_driver_commit_matches_spark_merge(spark, tmp_path, monkeypatch):
         assert sorted(tuple(r) for r in idx.index.refresh().read(spark).collect()) == want
     assert _physical(spark, driver.index) == _physical(spark, merge.index)
     assert _lineage(spark, driver.index) == _lineage(spark, merge.index)
-    wm = lambda idx: idx.index.refresh().meta["properties"]["index.lsn-watermark"]  # noqa: E731
-    assert wm(driver) == wm(merge) == "2099"
+    assert driver.applied_version() == merge.applied_version() == base.refresh().version
 
 
 @pytest.mark.parametrize("key_type", ["string", "bigint", "int"])
@@ -531,3 +527,110 @@ def test_consumer_trio_shares_one_change_set(spark, mor_epoch, monkeypatch):
     got = sorted(tuple(r) for r in idx.index.refresh().read(spark).collect())
     want = sorted(tuple(r) for r in base.refresh().read(spark).select("doc_id", "source").collect())
     assert got == want
+
+
+# Spark jobs of the matview, index and emit of one window the LSN feed
+# cannot serve, on the fixture of the test below, as measured (4 + 0 + 0
+# and 7 + 3 + 0): the window's changed-bucket snapshot diff is collected
+# once, by the first consumer (the matview), and the index and emit reuse
+# it.  An empty window (the compaction) commits no data anywhere.
+DIFF_TRIO_JOBS = {"compaction": 4, "cow_epoch": 10}
+
+
+@pytest.mark.parametrize("window", ["compaction", "cow_epoch"])
+def test_diff_window_trio_shares_one_snapshot_diff(spark, tmp_path, monkeypatch, window):
+    """A compaction that changes no row, or a copy-on-write epoch, between
+    two refreshes: the matview, index and emit of that window build its
+    change set from one snapshot diff (the memo), stay within the pinned
+    job budget, and each equals a rebuild."""
+    base = IcehouseTable.create(
+        str(tmp_path / "base"), SCHEMA, key_col="doc_id", n_buckets=8,
+        properties={"write.bloom.columns": "doc_id"},
+    )
+    apply_changes(
+        base,
+        spark.createDataFrame(
+            [(i, "U", f"k{i:05d}", f"s{i % 9}", i % 50, None) for i in range(2000)], DDL
+        ),
+        epoch=0,
+    )
+    apply_changes_mor(
+        base.refresh(),
+        spark.createDataFrame(
+            [(3000 + i, "U", f"k{(i * 5) % 2400:05d}", f"s{i % 4}", i % 30, None)
+             for i in range(300)],
+            DDL,
+        ),
+        epoch=1,
+    )
+    base = base.refresh()
+    view = create_matview(spark, str(tmp_path / "mv"), base, ["source"], "n_tok", scale=1)
+    idx = SecondaryIndex.create(spark, base, str(tmp_path / "idx"), "source")
+    out_dir, ck = str(tmp_path / "feed"), str(tmp_path / "emit_ck.json")
+    emit_to_files(spark, base.root, out_dir, ck)
+    if window == "compaction":
+        base.refresh().compact_partitions(spark, "deltas")
+    else:
+        apply_changes(
+            base.refresh(),
+            spark.createDataFrame(
+                [(5000 + i, "D" if i % 11 == 0 else "U", f"k{(i * 7) % 2600:05d}",
+                  f"s{i % 6}", i % 40, None) for i in range(400)],
+                DDL,
+            ),
+            epoch=2,
+        )
+    base = base.refresh()
+    prior = IcehouseTable.load(base.root, version=idx.applied_version())
+    assert not changeset.is_exact(prior, base)
+    calls = []
+    real = changeset.snapshot_diff_images
+    monkeypatch.setattr(
+        changeset, "snapshot_diff_images", lambda *a, **k: calls.append(a[2:4]) or real(*a, **k)
+    )
+    changeset._memo.clear()
+    out = {}
+    n = [
+        _jobs(spark, f"diff-{window}-mv", lambda: refresh_matview(spark, view.refresh())),
+        _jobs(spark, f"diff-{window}-idx", lambda: idx.refresh(spark)),
+        _jobs(spark, f"diff-{window}-emit",
+              lambda: out.update(emit_to_files(spark, base.root, out_dir, ck))),
+    ]
+    assert len(calls) == 1, calls
+    assert sum(n) <= DIFF_TRIO_JOBS[window], n
+    assert (out["rows"] > 0) == (window == "cow_epoch")
+    assert sorted(
+        (r["source"], r["n_rows"], r["value_sum_scaled"])
+        for r in read_matview(spark, view.refresh()).collect()
+    ) == [(s, n, v) for s, n, _, v in _recompute(spark, base)]
+    got = sorted(tuple(r) for r in idx.index.refresh().read(spark).collect())
+    assert got == sorted(tuple(r) for r in base.read(spark).select("doc_id", "source").collect())
+
+
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_index_refresh_commits_one_version(spark, tmp_path, mode):
+    """A refresh that changes the index commits one index version: the
+    applied base version is its exactly-once registry entry, written with
+    the data, not a second property commit."""
+    base = _table()
+    apply_changes(
+        base,
+        spark.createDataFrame([(i, "U", f"k{i}", f"s{i % 3}", i, None) for i in range(20)], DDL),
+        epoch=0,
+    )
+    idx = SecondaryIndex.create(spark, base.refresh(), str(tmp_path / "idx"), "source")
+    apply = apply_changes_mor if mode == "mor" else apply_changes
+    for ep in (1, 2):
+        apply(
+            base.refresh(),
+            spark.createDataFrame(
+                [(100 * ep, "U", "k1", f"s{ep + 5}", 1, None), (100 * ep + 1, "D", f"k{ep + 1}",
+                 None, None, None)],
+                DDL,
+            ),
+            epoch=ep,
+        )
+        v = idx.index.refresh().version
+        assert idx.refresh(spark)["applied"] == 2
+        assert idx.index.refresh().version == v + 1
+        assert idx.applied_version() == base.refresh().version

@@ -7,7 +7,11 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_pipeline_spark.cdc.changelog import generate_change_log, materialize_change_log
+from data_pipeline_spark.cdc.changelog import (
+    CHANGE_LOG_SCHEMA,
+    generate_change_log,
+    materialize_change_log,
+)
 from data_pipeline_spark.streaming import StreamingIngest, windowed_event_counts
 from data_pipeline_spark.table import IcehouseTable
 
@@ -462,3 +466,55 @@ def test_stream_mor_maintains_matview(spark, log_path, tmp_path):
         key=key,
     )
     assert got == want and got
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_out_of_order_micro_batches_keep_consumers_exact(spark, tmp_path, mode):
+    """Micro-batch 2 carries LOWER LSNs than batch 1 (a new key, a stale
+    update and a stale delete of batch-1 keys), batch 3 higher ones again.
+    The matview and the index refreshed after every batch end equal to a
+    rebuild from the final table, which is the LWW outcome of the log."""
+    from data_pipeline_spark.table.index import SecondaryIndex
+    from data_pipeline_spark.table.matview import create_matview, read_matview
+
+    batches = [
+        [(100, "U", "a", "s1", 1), (101, "U", "b", "s1", 2), (102, "U", "c", "s2", 3)],
+        [(5, "U", "d", "s2", 4), (6, "U", "a", "s3", 9), (7, "D", "b", None, None)],
+        [(200, "U", "c", "s1", 5), (201, "D", "a", None, None), (202, "U", "e", "s3", 6)],
+    ]
+    log_dir = str(tmp_path / "log")
+    for ep, rows in enumerate(batches, start=1):
+        spark.createDataFrame(
+            [(lsn, ep, op, k, None if n is None else [n], n, src) for lsn, op, k, src, n in rows],
+            CHANGE_LOG_SCHEMA,
+        ).coalesce(1).write.parquet(f"{log_dir}/epoch={ep}")
+        for name in os.listdir(f"{log_dir}/epoch={ep}"):
+            # the file source takes files in modification-time order
+            os.utime(f"{log_dir}/epoch={ep}/{name}", (1_000_000 + ep, 1_000_000 + ep))
+    table = IcehouseTable.create(str(tmp_path / "t"), TABLE_SCHEMA, n_buckets=4)
+    mv = create_matview(spark, str(tmp_path / "mv"), table, ["source"], "n_tok", scale=1)
+    idx = SecondaryIndex.create(spark, table, str(tmp_path / "idx"), "source")
+    ingest = StreamingIngest(
+        table, str(tmp_path / "ck"), max_files_per_trigger=1, mode=mode,
+        matviews=[mv.root], indexes=[idx.index.root],
+    )
+    ingest.start(spark, log_dir, trigger_once=True).awaitTermination(300)
+    assert ingest.batches_applied == 3
+    assert len(ingest.matview_results) == len(ingest.index_results) == 3
+
+    final = table.refresh().read(spark)
+    # the stale update of a and delete of b lose to batch 1
+    assert sorted((r["doc_id"], r["source"], r["n_tok"]) for r in final.collect()) == [
+        ("b", "s1", 2), ("c", "s1", 5), ("d", "s2", 4), ("e", "s3", 6),
+    ]
+    got = sorted(tuple(r) for r in read_matview(spark, mv.refresh()).collect())
+    want = sorted(
+        tuple(r)
+        for r in final.groupBy("source").agg(
+            F.count(F.lit(1)), F.count("n_tok"), F.sum(F.col("n_tok").cast("long"))
+        ).collect()
+    )
+    assert got == want
+    assert sorted(tuple(r) for r in idx.index.refresh().read(spark).collect()) == sorted(
+        (r["doc_id"], r["source"]) for r in final.collect()
+    )
