@@ -7,9 +7,8 @@ snapshots of the base table, with their rows before and after.  For a window
 of at most ``SMALL_BATCH_ROWS`` changed keys this module collects that change
 set to the driver once and memoizes it, so the second and third consumer of
 the same window run no job to get it.  Over the cap :func:`change_set`
-returns ``None`` and each consumer reads the window's
-:func:`.cdf.snapshot_diff_images` as a Spark frame: that diff is the one
-general source, this module its collected small-input form.
+returns ``None`` and each consumer reads the same two sides as Spark frames
+(:func:`after_frame`, :func:`before_frame`), from the same two sources.
 
 A :class:`ChangeSet` over ``(v_from, v_to]`` holds every key whose live row
 differs between the two snapshots, in two sides:
@@ -33,19 +32,22 @@ It is built one of two ways, with the same answer:
   (``read_for_keys``) of the time-travelled ``v_from``, on first use.  This
   is the per-epoch merge-on-read poll.  The feed may also carry keys
   rewritten to the row they held (a no-op update, a delete of a key that
-  was never live); every consumer treats those as no change.
+  was never live); every consumer treats those as no change.  Over the
+  cap the feed is still the source: it scans only the appended deltas.
 - **Snapshot diff**, for every other window — compaction, copy-on-write
   epochs, vacuum, rollback, rebucket, schema evolution, late (out-of-order)
   events: the changed-bucket ``snapshot_diff_images`` is collected and both
-  sides are filled from it.
+  sides are filled from it.  Over the cap it is persisted once per window
+  (:func:`window_diff`) and every consumer projects it.
 
-**Memo.**  The last answer — a ChangeSet, or ``None`` for "over the cap" —
-is kept per process, keyed by the real root, the table uuid and the data
-state of ``v_from`` and ``v_to`` (bucket count, schema, rename log and every
-bucket's file references).  Two snapshots with the same data state hold the
-same rows, so consumers whose last versions differ only by metadata commits
-(a tag, an empty window's floor bump) share one change set.  Snapshots are
-immutable, so the memo cannot go stale, and the cap bounds its size.
+**Memo.**  The last window's answer — a ChangeSet, or ``None`` for "over
+the cap", and its persisted diff if one was built — is kept per process,
+keyed by the real root, the table uuid and the data state of ``v_from`` and
+``v_to`` (bucket count, schema, rename log and every bucket's file
+references).  Two snapshots with the same data state hold the same rows,
+so consumers whose last versions differ only by metadata commits (a tag,
+an empty window's floor bump) share one change set.  Snapshots are
+immutable, so the memo cannot go stale; the next window releases it.
 
 **Consumer windows.**  A consumer table records the base version it
 reflects in its own exactly-once registry (:func:`applied_version`, written
@@ -69,13 +71,14 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
 from ..session import SMALL_BATCH_ROWS
+from ..table.exprs import quote
 from ..table.icehouse import DELETED_COL, LSN_COL, IcehouseTable
 from .apply import holds_type
 from .cdf import changed_buckets, diff_rows, file_refs, snapshot_diff_images
 
 __all__ = [
-    "ChangeSet", "applied_version", "change_set", "collectable", "finish_window",
-    "is_exact", "local_frame",
+    "ChangeSet", "after_frame", "applied_version", "before_frame", "change_set",
+    "collectable", "finish_window", "is_exact", "local_frame", "window_diff",
 ]
 
 
@@ -258,33 +261,29 @@ def _entries(meta: dict):
             yield b, d
 
 
-def _capped_collect(df: DataFrame, scanned: int) -> list | None:
-    """``df`` collected, or ``None`` over ``SMALL_BATCH_ROWS`` rows.  When
-    the files it scans hold at most that many rows (manifest counts), the
+def _from_feed(spark: SparkSession, prior: IcehouseTable, head: IcehouseTable) -> ChangeSet | None:
+    """The feed build of an :func:`is_exact` window.  When the files it
+    scans hold at most ``SMALL_BATCH_ROWS`` rows (manifest counts) the
     collect needs no limit, whose incremental partition-by-partition take
     costs extra jobs."""
-    if scanned <= SMALL_BATCH_ROWS:
-        return df.collect()
-    rows = df.limit(SMALL_BATCH_ROWS + 1).collect()
-    return rows if len(rows) <= SMALL_BATCH_ROWS else None
-
-
-def _from_feed(spark: SparkSession, prior: IcehouseTable, head: IcehouseTable) -> ChangeSet | None:
-    """The feed build of an :func:`is_exact` window."""
     w0 = prior.lsn_high(default=-1, strict=True)
+    feed = head.read_changed_since(spark, w0)
     scanned = sum(
         e["rows"]
         for _, e in _entries(head.meta)
         if e.get("lsn_max") is None or e["lsn_max"] > w0
     )
-    after = _capped_collect(head.read_changed_since(spark, w0), scanned)
-    return None if after is None else ChangeSet(prior, head, after)
+    if scanned <= SMALL_BATCH_ROWS:
+        return ChangeSet(prior, head, feed.collect())
+    after = feed.limit(SMALL_BATCH_ROWS + 1).collect()
+    return None if len(after) > SMALL_BATCH_ROWS else ChangeSet(prior, head, after)
 
 
 def _from_diff(spark: SparkSession, prior: IcehouseTable, head: IcehouseTable) -> ChangeSet | None:
     """The snapshot-diff build: the collected changed-bucket diff, turned
-    into the two sides."""
-    diff = snapshot_diff_images(spark, head.root, prior.version, head.version)
+    into the two sides.  When the changed buckets hold more than
+    ``SMALL_BATCH_ROWS`` rows the diff may not fit, so the capped collect
+    reads :func:`window_diff`, which the consumers then share."""
     buckets = changed_buckets(prior.meta, head.meta)
     scanned = sum(
         e["rows"]
@@ -292,9 +291,14 @@ def _from_diff(spark: SparkSession, prior: IcehouseTable, head: IcehouseTable) -
         for b, e in _entries(t.meta)
         if buckets is None or int(b) in buckets
     )
-    rows = _capped_collect(diff, scanned)
-    if rows is None:
-        return None
+    if scanned <= SMALL_BATCH_ROWS:
+        diff = snapshot_diff_images(spark, head.root, prior.version, head.version)
+        rows = diff.collect()
+    else:
+        diff = window_diff(spark, prior, head)
+        rows = diff.limit(SMALL_BATCH_ROWS + 1).collect()
+        if len(rows) > SMALL_BATCH_ROWS:
+            return None
     key, names = head.key_col, head.schema.fieldNames()
     value_names = diff.schema["before"].dataType.fieldNames()
     after_row = Row(*names, LSN_COL, DELETED_COL)
@@ -324,8 +328,27 @@ def _data_state(meta: dict) -> str:
     )
 
 
-_memo: dict[tuple, ChangeSet | None] = {}
+def _window_key(prior: IcehouseTable, head: IcehouseTable) -> tuple:
+    root, uuid = os.path.realpath(head.root), head.meta.get("table_uuid")
+    return root, uuid, _data_state(prior.meta), _data_state(head.meta)
+
+
+#: the last window's memo entry, by :func:`_window_key`: ``cs`` (a
+#: ChangeSet, or ``None`` over the cap) and ``diff`` (its persisted diff)
+_memo: dict[tuple, dict] = {}
 _memo_lock = threading.Lock()
+
+
+def _entry(window: tuple) -> dict:
+    """The memo entry of ``window`` (the caller holds the lock).  A new
+    window replaces the last one and releases its persisted diff."""
+    if window not in _memo:
+        for old in _memo.values():
+            if old.get("diff") is not None:
+                old["diff"].unpersist()
+        _memo.clear()
+        _memo[window] = {}
+    return _memo[window]
 
 
 def change_set(
@@ -335,18 +358,60 @@ def change_set(
     table — or ``None`` when more than ``SMALL_BATCH_ROWS`` keys changed.
     Built from the LSN feed when :func:`is_exact` holds, else from the
     snapshot diff; memoized (module docstring)."""
-    memo_key = (
-        os.path.realpath(head.root),
-        head.meta.get("table_uuid"),
-        _data_state(prior.meta),
-        _data_state(head.meta),
-    )
+    window = _window_key(prior, head)
     with _memo_lock:
-        if memo_key in _memo:
-            return _memo[memo_key]
-    build = _from_feed if is_exact(prior, head) else _from_diff
-    cs = build(spark, prior, head)
+        entry = _entry(window)
+        if "cs" in entry:
+            return entry["cs"]
+    cs = (_from_feed if is_exact(prior, head) else _from_diff)(spark, prior, head)
     with _memo_lock:
-        _memo.clear()
-        _memo[memo_key] = cs
+        _entry(window)["cs"] = cs
     return cs
+
+
+def window_diff(spark: SparkSession, prior: IcehouseTable, head: IcehouseTable) -> DataFrame:
+    """The window's :func:`.cdf.snapshot_diff_images`.  When :func:`is_exact`
+    fails every consumer reads it, so it is persisted and kept in the memo
+    until the next window: one diff per window.  An exact window's
+    consumers read the feed, so its diff (emit's) is not persisted."""
+    if is_exact(prior, head):
+        return snapshot_diff_images(spark, head.root, prior.version, head.version)
+    with _memo_lock:  # planning only: the diff runs at its first action
+        entry = _entry(_window_key(prior, head))
+        if "diff" not in entry:
+            entry["diff"] = snapshot_diff_images(
+                spark, head.root, prior.version, head.version
+            ).persist()
+        return entry["diff"]
+
+
+def after_frame(
+    spark: SparkSession, prior: IcehouseTable, head: IcehouseTable, cols: list[str]
+) -> DataFrame:
+    """The ``after`` side of ``(prior, head]`` over the cap: each changed
+    key's ``cols`` (the key first) at ``head``, then ``_deleted``.  The LSN
+    feed when :func:`is_exact` holds, persisted (the caller unpersists it);
+    else a projection of :func:`window_diff`."""
+    key, rest = quote(cols[0]), [quote(c) for c in cols[1:]]
+    deleted = f"coalesce({DELETED_COL}, false) AS {DELETED_COL}"
+    if is_exact(prior, head):
+        feed = head.read_changed_since(spark, prior.lsn_high(default=-1, strict=True))
+        return feed.selectExpr(key, *rest, deleted).persist()
+    return window_diff(spark, prior, head).selectExpr(
+        key, *[f"`after`.{c} AS {c}" for c in rest], f"`op` = 'D' AS {DELETED_COL}"
+    )
+
+
+def before_frame(
+    spark: SparkSession, prior: IcehouseTable, head: IcehouseTable, after: DataFrame
+) -> DataFrame:
+    """The ``before`` side of :func:`after_frame`'s ``after``: those keys'
+    live rows at ``prior``, same columns — a point read of ``prior`` on the
+    feed (one keys-sized job finds the buckets), the ``before`` images on
+    the diff."""
+    cols = [quote(c) for c in after.columns if c != DELETED_COL]
+    if is_exact(prior, head):
+        return prior.read_for_keys(spark, after.selectExpr(cols[0])).selectExpr(*cols)
+    return window_diff(spark, prior, head).where("`before` IS NOT NULL").selectExpr(
+        cols[0], *[f"`before`.{c} AS {c}" for c in cols[1:]]
+    )

@@ -282,7 +282,8 @@ def emit_to_files(
     envelopes are built over a local frame, collected, and written by the
     driver as one ``part-`` file through the same scratch → rename
     publish, and rows are counted in hand.  A larger window takes the
-    snapshot diff, Spark's text writer and a line count.
+    snapshot diff (:func:`.changeset.window_diff`, shared with the other
+    consumers of the window), Spark's text writer and a line count.
     """
     import hashlib
     import json as _json
@@ -290,7 +291,7 @@ def emit_to_files(
     import tempfile
     import uuid
 
-    from .changeset import change_set, collectable
+    from .changeset import change_set, collectable, window_diff
 
     pin_tag = kwargs.pop(
         "pin_tag",
@@ -349,9 +350,11 @@ def emit_to_files(
             ) as fh:
                 fh.writelines(line + "\n" for line in lines)
         else:
-            emit_debezium_envelopes(spark, root, last, head, **kwargs).write.mode(
-                "overwrite"
-            ).text(data_dir)
+            images = (
+                snapshot_diff_images(spark, root, last, head) if last_meta is None
+                else window_diff(spark, last_t, head_t)
+            )
+            _envelopes(images, head_t, **kwargs).write.mode("overwrite").text(data_dir)
             # distributed line count over the just-written files — never
             # pull a big feed's bytes through the driver (a delta can be GBs)
             rows = spark.read.text(data_dir).count()

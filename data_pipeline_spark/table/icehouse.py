@@ -2746,26 +2746,16 @@ class IcehouseTable:
         no longer arrive).  The full set of partitions read is passed as the
         explicit affected-set, so a partition left 100%-tombstone is dropped
         from metadata (files reclaimed at expire_snapshots) instead of
-        lingering with a stale pre-vacuum row count.
-
-        The snapshot doc records the highest LSN any vacuum may have removed
-        a tombstone at (``vacuumed_lsn``: the watermark, capped at the
-        snapshot's LSN high-water mark).  A ``read_changed_since`` poller
-        whose LSN watermark is below it cannot trust the feed to carry every
-        delete.  The matview, index and emit consumers need no such check:
-        each reads its window as one exact change set
-        (``cdc/changeset.py``), which diffs snapshots for a vacuum window."""
+        lingering with a stale pre-vacuum row count.  The matview, index and
+        emit consumers see the vanished rows: each reads its window as one
+        exact change set (``cdc/changeset.py``), which diffs snapshots for
+        a vacuum window."""
         for _ in range(5):
             read_version = self.version
             read_parts = sorted(
                 {int(k) for k in self.meta["partitions"]}
                 | {int(k) for k, ds in self.meta.get("deltas", {}).items() if ds}
             )
-            high = self.lsn_high(strict=True)
-            if high is not None:
-                cut = min(int(lsn_watermark), high)
-            else:  # no stats to cap with: every tombstone may be gone
-                cut = int(lsn_watermark) if read_parts else -1
             df = self.read(spark, with_part_col=True, with_meta=True)
             keep = df.where(
                 ~(
@@ -2776,9 +2766,6 @@ class IcehouseTable:
             try:
                 return self.overwrite_partitions(
                     keep, affected_partitions=read_parts, read_version=read_version,
-                    meta_updates={
-                        "vacuumed_lsn": max(self.meta.get("vacuumed_lsn", -1), cut)
-                    },
                 )
             except CommitConflictError:
                 self.refresh()

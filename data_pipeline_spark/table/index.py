@@ -16,8 +16,8 @@ exactly-once merge:
   most ``SMALL_BATCH_ROWS`` keys is committed from the driver
   (``cdc.apply.apply_changes_local``: one collect of the affected index
   buckets, the LWW rewrite, one write; 3 Spark jobs), a larger window — the
-  base's ``snapshot_diff_images`` — or larger index buckets go through the
-  Spark ``apply_changes`` merge.  With no applied version (the initial
+  base's LSN feed or snapshot diff — or larger index buckets go through
+  the Spark ``apply_changes`` merge.  With no applied version (the initial
   build) or an expired one, the refresh is one full pass instead: live
   base rows become upserts, index keys absent from the base deletes.  The
   last applied version lives in the index's own exactly-once registry,
@@ -139,13 +139,18 @@ class SecondaryIndex:
         vacuum, compaction or out-of-order LSNs.  A change set of at most
         ``SMALL_BATCH_ROWS`` keys is committed from the driver by
         ``apply_changes_local`` when the affected index buckets are small;
-        a larger one (the window's ``snapshot_diff_images``), or larger
+        a larger one (the LSN feed of an exact window, which scans only the
+        appended deltas, else the window's snapshot diff), or larger
         buckets, go through the Spark ``apply_changes`` merge.  Both give
-        the same rows and lineage, in one index commit.  Without a readable
-        applied version the refresh is the full pass (module docstring)."""
+        the same rows and lineage, in one index commit.
+
+        Retention: when ``expire_snapshots`` has removed the base snapshot
+        at the applied version, the refresh is the full pass (module
+        docstring), which reads the base and rewrites every index bucket.
+        An index refreshed less often than the base expires snapshots pays
+        it every time: keep the base's retention longer than the interval."""
         from ..cdc.apply import apply_changes, apply_changes_local, local_part_stats
-        from ..cdc.cdf import snapshot_diff_images
-        from ..cdc.changeset import applied_version, change_set, finish_window
+        from ..cdc.changeset import after_frame, applied_version, change_set, finish_window
 
         self.index = self.index.refresh()
         base = IcehouseTable.load(self.base_root)
@@ -165,7 +170,7 @@ class SecondaryIndex:
         except FileNotFoundError:
             prior = None  # expired: the full pass
         cs = None if prior is None else change_set(spark, prior, base)
-        stats = part_stats = None
+        stats = part_stats = after = None
         if cs is not None:
             # the index schema is (key, column): rows are already in
             # table-column order for the driver-side commit
@@ -188,11 +193,10 @@ class SecondaryIndex:
                 )
                 part_stats = local_part_stats(self.index, [r[:3] for r in rows])
         elif prior is not None:
-            batch = snapshot_diff_images(spark, self.base_root, v0, base.version).selectExpr(
-                stamp,
-                "CASE WHEN `op` = 'D' THEN 'D' ELSE 'U' END AS op",
-                quote(key),
-                f"`after`.{quote(col)} AS {quote(col)}",
+            after = after_frame(spark, prior, base, [key, col])
+            batch = after.selectExpr(
+                stamp, f"CASE WHEN {DELETED_COL} THEN 'D' ELSE 'U' END AS op",
+                quote(key), quote(col),
             )
         else:
             live = base.read(spark).selectExpr(quote(key), quote(col))
@@ -205,11 +209,15 @@ class SecondaryIndex:
                         F.lit(None).cast(base.schema[col].dataType).alias(col),
                     )
                 )
-        if stats is None:
-            stats = apply_changes(
-                self.index, batch, epoch=base.version, epoch_source=ns,
-                part_stats=part_stats,
-            )
+        try:
+            if stats is None:
+                stats = apply_changes(
+                    self.index, batch, epoch=base.version, epoch_source=ns,
+                    part_stats=part_stats,
+                )
+        finally:
+            if after is not None:
+                after.unpersist()
         finish_window(self.index, ns, self.FLOOR, base.version)
         return {
             "applied": stats.events_applied,

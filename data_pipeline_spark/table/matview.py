@@ -41,8 +41,10 @@ path.
 Scale shape: no global shuffle ever touches the whole base table.  A small
 window is one collected change set: its signed delta is summed on the driver
 and the MERGE of small view buckets runs on the driver, 6–7 Spark jobs in all
-on the per-epoch MOR poll.  A larger window is the changed-bucket snapshot
-diff, one groupBy of its two sides, one keyed MERGE into the view.  Measures
+on the per-epoch MOR poll.  A larger window is read as Spark frames of the
+same two sides — the LSN feed plus a point read of the prior snapshot when
+the manifests prove it exact, else the changed-bucket snapshot diff — then
+one groupBy of the two sides, one keyed MERGE into the view.  Measures
 are fixed-point BIGINT so increments are exact and order-independent — a
 float sum would drift from a from-scratch recompute and fail the oracle.
 """
@@ -60,10 +62,11 @@ from .exprs import col as qcol
 from .exprs import quote, quote_all
 from .icehouse import DELETED_COL, CommitResult, IcehouseTable
 from ..cdc.apply import ApplyStats, apply_changes, apply_changes_local, holds_type
-from ..cdc.cdf import snapshot_diff_images
 from ..cdc.changeset import (
     ChangeSet,
+    after_frame,
     applied_version,
+    before_frame,
     change_set,
     collectable,
     finish_window,
@@ -495,15 +498,17 @@ def refresh_matview(
     fenced commit are built driver-side (:func:`_commit_local_delta`).
     On a MOR base with 8 view buckets that is 6–7 Spark jobs
     (tests/test_small_batch_refresh.py pins the budget).  Larger windows
-    take the Spark path: the signed delta of the window's
-    :func:`~..cdc.cdf.snapshot_diff_images` (its ``before`` rows retract,
-    its ``after`` rows add) merged by :func:`_apply_view_delta`; so do
-    views whose group columns nest floats inside arrays or structs (Spark's
-    grouping folds -0.0 into 0.0 there too) or hold types that cannot
-    round-trip through the driver.
+    take the Spark path: the signed delta of the window's two sides as
+    Spark frames (:func:`~..cdc.changeset.after_frame`, ``before_frame``:
+    the LSN feed and a point read of the prior snapshot when the window is
+    exact, else the snapshot diff; ``before`` rows retract, ``after`` rows
+    add) merged by :func:`_apply_view_delta`; so do views whose group
+    columns nest floats inside arrays or structs (Spark's grouping folds
+    -0.0 into 0.0 there too) or hold types that cannot round-trip through
+    the driver.
 
     AUTO-CROSSOVER (``auto_full_ratio``): on the Spark path, when the
-    diff's row count exceeds ``auto_full_ratio × base physical rows``, the
+    window's changed-key count exceeds ``auto_full_ratio × base physical rows``, the
     refresh auto-selects the full recompute — at that delta fraction the
     incremental path reads most buckets anyway and the one-scan
     re-aggregate is cheaper.  The rule is a pure cost heuristic: both paths
@@ -546,23 +551,20 @@ def refresh_matview(
         result = _commit_local_delta(spark, mv, delta, group_cols, measures, v1)
         return RefreshStats("incremental", v0, v1, result)
 
-    # SPARK PATH: the window's snapshot diff, persisted and counted once
-    # for the auto-crossover rule
-    key = quote(base.key_col)
-    diff = snapshot_diff_images(spark, base_root, v0, v1).persist()
+    # SPARK PATH: the window's two sides as Spark frames, its changed keys
+    # counted once for the auto-crossover rule
+    after = after_frame(
+        spark, prior, base, [base.key_col, *[c for c in need_cols if c != base.key_col]]
+    )
     try:
-        if auto_full_ratio and diff.count() > auto_full_ratio * max(base.row_count(), 1):
+        if auto_full_ratio and after.count() > auto_full_ratio * max(base.row_count(), 1):
             return recompute()
-        delta = _signed_delta(
-            diff.where("`before` IS NOT NULL").selectExpr(key, "`before`.*"),
-            diff.where("`after` IS NOT NULL").selectExpr(key, "`after`.*"),
-            group_cols,
-            value_cols,
-            scale,
-        )
+        live = after.where(f"NOT {DELETED_COL}")
+        before = before_frame(spark, prior, base, after)
+        delta = _signed_delta(before, live, group_cols, value_cols, scale)
         stats = _apply_view_delta(mv, delta, group_cols, v1, measures)
     finally:
-        diff.unpersist()
+        after.unpersist()
     return RefreshStats("incremental", v0, v1, stats.result)
 
 

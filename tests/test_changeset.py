@@ -144,6 +144,8 @@ def test_emit_change_set_lines_equal_snapshot_diff(spark, tmp_path, monkeypatch)
         raise AssertionError("the change-set window took the snapshot diff")
 
     monkeypatch.setattr(emit_mod, "emit_debezium_envelopes", no_diff)
+    monkeypatch.setattr(emit_mod, "snapshot_diff_images", no_diff)
+    monkeypatch.setattr(changeset, "snapshot_diff_images", no_diff)
     res = emit_to_files(spark, t.root, out, ck)
     assert res["emitted_versions"] == (last, head)
     assert res["rows"] == len(want) and res["files"] == 1
@@ -263,7 +265,6 @@ def test_vacuum_between_refreshes_reaches_lagging_consumers(spark, tmp_path):
     ]), epoch=1)
     t.refresh().vacuum_tombstones(spark, 10)
     t = t.refresh()
-    assert t.meta["vacuumed_lsn"] == 10
 
     assert refresh_matview(spark, view.refresh()).mode == "incremental"
     assert _view_rows(spark, view) == _recompute(spark, t, "source", "n_tok", 1)
@@ -382,3 +383,54 @@ def test_snapshot_diff_reads_only_changed_buckets(spark, tmp_path):
     v3 = t.refresh().version
     assert snapshot_diff_images(spark, t.root, v2, v3).count() == 0
     assert len(snapshot_diff_images(spark, t.root, v1, v3).collect()) == 1
+
+
+def test_concurrent_consumers_share_one_window_diff(spark, tmp_path, monkeypatch):
+    """Threads reading one inexact window at once (more threads than
+    cores, a short switch interval) get one persisted diff between them,
+    and a change set equal to the diff's rows."""
+    import sys
+    import threading
+
+    t = _table(tmp_path)
+    apply_changes(t, _batch(spark, _base_rows()), epoch=0)
+    prior = IcehouseTable.load(t.root)
+    apply_changes(t.refresh(), _batch(spark, [
+        (20, "U", "a", "s9", 1, 1.0, None), (21, "D", "b", None, None, None, None),
+    ]), epoch=1)
+    head = IcehouseTable.load(t.root)
+    assert not changeset.is_exact(prior, head)
+    calls = []
+    real = changeset.snapshot_diff_images
+    monkeypatch.setattr(
+        changeset, "snapshot_diff_images", lambda *a, **k: calls.append(a[2:4]) or real(*a, **k)
+    )
+    changeset._memo.clear()
+    got, errors = [], []
+
+    def read():
+        try:
+            got.append((changeset.window_diff(spark, prior, head),
+                        changeset.change_set(spark, prior, head)))
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        workers = [threading.Thread(target=read) for _ in range(3 * (os.cpu_count() or 2))]
+        for w in workers:
+            w.start()
+        for w in workers:
+            w.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(w.is_alive() for w in workers)
+    assert errors == [] and len(got) == len(workers)
+    diffs = {id(d) for d, _ in got}
+    assert len(diffs) == 1 and got[0][0].is_cached
+    want = sorted((r["doc_id"], r["op"]) for r in got[0][0].collect())
+    assert want == [("a", "U"), ("b", "D")]
+    for _, cs in got:
+        assert sorted((r["doc_id"], r[DELETED_COL]) for r in cs.after) == [("a", False), ("b", True)]
+    assert set(calls) == {(prior.version, head.version)}

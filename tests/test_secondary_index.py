@@ -231,3 +231,39 @@ def test_refresh_after_rollback_reverts_the_index(spark, tmp_path, mode):
     assert want == [("a", "s1"), ("b", "s1")]
     assert sorted(tuple(r) for r in idx.index.refresh().read(spark).collect()) == want
     assert sorted(r["doc_id"] for r in idx.lookup_keys(spark, ["s1"]).collect()) == ["a", "b"]
+
+
+def test_refresh_after_the_applied_snapshot_expired(spark, tmp_path, base):
+    """The index window starts at the base snapshot it last applied.  When
+    snapshot retention has expired that snapshot, the refresh takes the
+    full pass — exact, in one index commit — and the next window is
+    incremental again."""
+    idx = SecondaryIndex.create(spark, base, str(tmp_path / "idx"), "source")
+    applied = idx.applied_version()
+    lsn = 1000
+    for ep in range(1, 5):
+        lsn += 10
+        apply_changes_mor(base.refresh(), mk_batch(spark, [
+            (lsn, "U", f"d{ep:04d}", [ep], 2, "s9"),
+            (lsn + 1, "D", f"d{ep + 100:04d}", None, None, None),
+            (lsn + 2, "U", f"n{ep}", [ep], 3, "s8"),
+        ]), epoch=ep)
+    base.refresh().expire_snapshots(keep_last=1)
+    with pytest.raises(FileNotFoundError):
+        IcehouseTable.load(base.root, version=applied)
+    v = idx.index.refresh().version
+    idx.refresh(spark)
+    assert idx.index.refresh().version == v + 1
+    assert idx.applied_version() == base.refresh().version
+
+    def rows():
+        return sorted(tuple(r) for r in idx.index.refresh().read(spark).collect())
+
+    want = sorted(tuple(r) for r in base.refresh().read(spark).select("doc_id", "source").collect())
+    assert rows() == want
+    apply_changes_mor(base.refresh(), mk_batch(spark, [
+        (2000, "U", "d0003", [3], 1, "s7"), (2001, "D", "n1", None, None, None),
+    ]), epoch=9)
+    assert idx.refresh(spark)["applied"] == 2
+    want = sorted(tuple(r) for r in base.refresh().read(spark).select("doc_id", "source").collect())
+    assert rows() == want

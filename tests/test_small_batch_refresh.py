@@ -531,10 +531,13 @@ def test_consumer_trio_shares_one_change_set(spark, mor_epoch, monkeypatch):
 
 # Spark jobs of the matview, index and emit of one window the LSN feed
 # cannot serve, on the fixture of the test below, as measured (4 + 0 + 0
-# and 7 + 3 + 0): the window's changed-bucket snapshot diff is collected
+# and 8 + 3 + 0): the window's changed-bucket snapshot diff is collected
 # once, by the first consumer (the matview), and the index and emit reuse
-# it.  An empty window (the compaction) commits no data anywhere.
-DIFF_TRIO_JOBS = {"compaction": 4, "cow_epoch": 10}
+# it.  Both windows scan more rows than the cap, so the diff is persisted
+# before its capped collect (one job more than a plain collect) to serve
+# every consumer if it comes back over the cap.  An empty window (the
+# compaction) commits no data anywhere.
+DIFF_TRIO_JOBS = {"compaction": 4, "cow_epoch": 11}
 
 
 @pytest.mark.parametrize("window", ["compaction", "cow_epoch"])
@@ -634,3 +637,64 @@ def test_index_refresh_commits_one_version(spark, tmp_path, mode):
         assert idx.refresh(spark)["applied"] == 2
         assert idx.index.refresh().version == v + 1
         assert idx.applied_version() == base.refresh().version
+
+
+@pytest.mark.parametrize("window", ["mor_epoch", "cow_epoch"])
+def test_over_cap_window_reads_the_feed_or_one_diff(spark, tmp_path, monkeypatch, window):
+    """A window of more changed keys than the cap (lowered here to 50)
+    reaches the consumers as Spark frames.  An exact MOR epoch is read from
+    the LSN feed: the matview and the index build no snapshot diff, and
+    emit builds its own.  An inexact copy-on-write epoch is one persisted
+    snapshot diff, shared by the capped collect, the matview, the index and
+    emit.  Each consumer equals a rebuild."""
+    monkeypatch.setattr(changeset, "SMALL_BATCH_ROWS", 50)
+    base = IcehouseTable.create(str(tmp_path / "base"), SCHEMA, key_col="doc_id", n_buckets=4)
+    apply_changes(
+        base,
+        spark.createDataFrame(
+            [(i, "U", f"k{i:04d}", f"s{i % 9}", i % 50, None) for i in range(1000)], DDL
+        ),
+        epoch=0,
+    )
+    base = base.refresh()
+    view = create_matview(spark, str(tmp_path / "mv"), base, ["source"], "n_tok", scale=1)
+    idx = SecondaryIndex.create(spark, base, str(tmp_path / "idx"), "source")
+    out_dir, ck = str(tmp_path / "feed"), str(tmp_path / "emit_ck.json")
+    emit_to_files(spark, base.root, out_dir, ck)
+    apply = apply_changes_mor if window == "mor_epoch" else apply_changes
+    apply(
+        base.refresh(),
+        spark.createDataFrame(
+            [(5000 + i, "D" if i % 11 == 0 else "U", f"k{(i * 7) % 1100:04d}",
+              f"s{i % 6}", i % 40, None) for i in range(150)],
+            DDL,
+        ),
+        epoch=1,
+    )
+    base = base.refresh()
+    prior = IcehouseTable.load(base.root, version=idx.applied_version())
+    assert changeset.is_exact(prior, base) == (window == "mor_epoch")
+    calls = []
+    real = changeset.snapshot_diff_images
+    monkeypatch.setattr(
+        changeset, "snapshot_diff_images", lambda *a, **k: calls.append(a[2:4]) or real(*a, **k)
+    )
+    changeset._memo.clear()
+    assert refresh_matview(spark, view.refresh()).mode == "incremental"
+    idx.refresh(spark)
+    assert len(calls) == (0 if window == "mor_epoch" else 1), calls
+    assert changeset.change_set(spark, prior, base) is None
+    res = emit_to_files(spark, base.root, out_dir, ck)
+    assert len(calls) == 1, calls
+    assert res["rows"] > 50
+    assert sorted(
+        (r["source"], r["n_rows"], r["value_sum_scaled"])
+        for r in read_matview(spark, view.refresh()).collect()
+    ) == [(s, n, v) for s, n, _, v in _recompute(spark, base)]
+    got = sorted(tuple(r) for r in idx.index.refresh().read(spark).collect())
+    assert got == sorted(tuple(r) for r in base.read(spark).select("doc_id", "source").collect())
+    # the persisted diff lives until the next window's change set
+    diffs = [e["diff"] for e in changeset._memo.values() if "diff" in e]
+    assert [d.is_cached for d in diffs] == ([] if window == "mor_epoch" else [True])
+    changeset.change_set(spark, base, base)
+    assert not any(d.is_cached for d in diffs)
