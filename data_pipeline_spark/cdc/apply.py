@@ -49,6 +49,7 @@ from ..table.icehouse import (
     ConcurrentCommitError,
     IcehouseTable,
 )
+from .driver_rows import collectable, local_frame
 
 
 def lww_latest(changes: DataFrame, key: str = "doc_id", order: str = "lsn") -> DataFrame:
@@ -408,17 +409,11 @@ def _held_rows(table: IcehouseTable, bucket: int) -> int:
     )
 
 
-def holds_type(dt: T.DataType, kinds) -> bool:
-    """Is ``dt``, or any type nested in it, an instance of ``kinds``?"""
-    if isinstance(dt, kinds):
-        return True
-    if isinstance(dt, T.StructType):
-        return any(holds_type(f.dataType, kinds) for f in dt.fields)
-    if isinstance(dt, T.ArrayType):
-        return holds_type(dt.elementType, kinds)
-    if isinstance(dt, T.MapType):
-        return holds_type(dt.keyType, kinds) or holds_type(dt.valueType, kinds)
-    return False
+#: the most rows :func:`apply_changes_local` writes from one task instead of
+#: hash-shuffling them by bucket.  On 4 CPUs the single task was faster at
+#: 8 and 64 buckets of 800 rows, level at 256 and 3% slower at 512
+#: (BENCH.md, "Driver-held commits write in one shuffle-free job").
+SINGLE_TASK_ROWS = 256 * SMALL_BATCH_ROWS
 
 
 def apply_changes_local(
@@ -440,8 +435,8 @@ def apply_changes_local(
 
     The driver path runs only when the manifest says every affected bucket
     holds at most ``SMALL_BATCH_ROWS`` physical rows, every key has a
-    driver-side hash and no column holds a local-time timestamp; otherwise
-    this returns ``None`` and the caller takes
+    driver-side hash and the rows can round-trip the driver (below);
+    otherwise this returns ``None`` and the caller takes
     :func:`apply_changes`.  Those buckets are read whole (``_lsn`` and
     tombstones included) in one collect and rewritten with the same LWW
     rule: stored rows keep their ``coalesce(_lsn, -1)`` and
@@ -450,7 +445,16 @@ def apply_changes_local(
     ``overwrite_partitions`` with the epoch fence, ``read_version`` and
     driver-side lineage (:func:`local_part_stats`); a concurrent commit to
     those buckets rebuilds from a fresh read, up to 5 attempts.  A
-    concurrent rebucket or schema change returns ``None`` instead."""
+    concurrent rebucket or schema change returns ``None`` instead.
+
+    The rewrite reaches the parquet writer as a local relation
+    (:func:`.driver_rows.local_frame`), laid out by one sorted task with no
+    shuffle: one Spark write job, the files row for row those of the
+    shuffled layout (``single_task``).  Above ``SINGLE_TASK_ROWS`` rows, or
+    on a ``write.fanout`` table, the write keeps the shuffle.  Rows that
+    cannot make that round trip (:func:`.driver_rows.collectable`: a
+    local-time timestamp, a variant, a type with no Arrow form) return
+    ``None`` before anything is read."""
     from ..functions.keys import bucket_for_key
 
     if epoch is not None and table.epoch_committed(epoch, epoch_source):
@@ -458,10 +462,17 @@ def apply_changes_local(
             CommitResult(table.version, table.meta["snapshot_id"], epoch, skipped=True), 0, 0, 0
         )
     key, schema, n_buckets = table.key_col, table.schema, table.n_buckets
-    if holds_type(schema, T.TimestampType):
-        # a collected local-time datetime need not survive the trip back
-        # (a DST fall-back hour is ambiguous): keep such tables on Spark
-        return None
+    # nullable throughout, as apply_changes' merge output is
+    frame = T.StructType(
+        [
+            *[T.StructField(f.name, f.dataType) for f in schema.fields],
+            T.StructField(LSN_COL, T.LongType()),
+            T.StructField(DELETED_COL, T.BooleanType()),
+            T.StructField(PART_COL, T.IntegerType()),
+        ]
+    )
+    if not collectable(frame):
+        return None  # these rows cannot round-trip the driver: keep them on Spark
     tname = schema[key].dataType.simpleString()
     try:
         buckets = sorted({bucket_for_key(k, tname, n_buckets) for k in keys})
@@ -472,15 +483,6 @@ def apply_changes_local(
             CommitResult(table.version, table.meta["snapshot_id"], epoch, skipped=False), 0, 0, 0
         )
     n_cols, key_at = len(schema), schema.fieldNames().index(key)
-    # nullable throughout, as apply_changes' merge output is
-    frame = T.StructType(
-        [
-            *[T.StructField(f.name, f.dataType) for f in schema.fields],
-            T.StructField(LSN_COL, T.LongType()),
-            T.StructField(DELETED_COL, T.BooleanType()),
-            T.StructField(PART_COL, T.IntegerType()),
-        ]
-    )
     for _attempt in range(5):
         if (
             table.n_buckets != n_buckets
@@ -512,12 +514,13 @@ def apply_changes_local(
                 out[k] = (*row, lsn, op == "D", bucket_for_key(k, tname, n_buckets))
         try:
             result = table.overwrite_partitions(
-                spark.createDataFrame(list(out.values()), frame),
+                local_frame(spark, list(out.values()), frame),
                 epoch=epoch,
                 epoch_source=epoch_source,
                 affected_partitions=buckets,
                 read_version=read_version,
                 lineage_extra=_lineage_of(part_stats),
+                single_task=len(out) <= SINGLE_TASK_ROWS,
             )
             break
         except CommitConflictError:

@@ -57,8 +57,8 @@ property (:func:`finish_window`).  Its next window starts there.
 Grounding: *Evolution of a Compiling Query Engine* (VLDB 2021) — small
 inputs should not pay the planning and scheduling cost that only large
 inputs amortise.  The consumers' per-row arithmetic stays in Spark: they
-project over :func:`local_frame`, which Spark plans as a local relation, so
-the projection runs no job.
+project over :func:`.driver_rows.local_frame`, which Spark plans as a local
+relation, so the projection runs no job.
 """
 
 from __future__ import annotations
@@ -73,12 +73,12 @@ from pyspark.sql import types as T
 from ..session import SMALL_BATCH_ROWS
 from ..table.exprs import quote
 from ..table.icehouse import DELETED_COL, LSN_COL, IcehouseTable
-from .apply import holds_type
 from .cdf import changed_buckets, diff_rows, file_refs, snapshot_diff_images
+from .driver_rows import local_frame
 
 __all__ = [
     "ChangeSet", "after_frame", "applied_version", "before_frame", "change_set",
-    "collectable", "finish_window", "is_exact", "local_frame", "window_diff",
+    "finish_window", "is_exact", "window_diff",
 ]
 
 
@@ -108,22 +108,6 @@ def finish_window(
         consumer.refresh()
 
 
-def collectable(schema: T.StructType) -> bool:
-    """Can rows of ``schema`` make the round trip driver → :func:`local_frame`
-    unchanged?  Not with a local-time ``timestamp`` (a collected local
-    datetime is ambiguous in a DST fall-back hour), a variant, or a type
-    with no Arrow form."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if holds_type(schema, (T.TimestampType, T.VariantType)):
-        return False
-    try:
-        to_arrow_schema(schema)
-    except TypeError:
-        return False
-    return True
-
-
 def is_exact(prior: IcehouseTable, head: IcehouseTable) -> bool:
     """The exactness guard (module docstring), from the two manifests
     alone: is ``read_changed_since(lsn_high(prior))`` at ``head`` exactly
@@ -151,39 +135,6 @@ def is_exact(prior: IcehouseTable, head: IcehouseTable) -> bool:
         if any(d.get("lsn_min") is None or d["lsn_min"] <= w0 for d in new[len(old):]):
             return False
     return True
-
-
-def _arrow_value(v, dt: T.DataType):
-    """A collected value in the shape ``pyarrow.array`` takes for ``dt``."""
-    if v is None:
-        return None
-    if isinstance(dt, T.StructType):
-        return {f.name: _arrow_value(x, f.dataType) for f, x in zip(dt.fields, v)}
-    if isinstance(dt, T.ArrayType):
-        if isinstance(dt.elementType, (T.StructType, T.ArrayType, T.MapType, T.BinaryType)):
-            return [_arrow_value(x, dt.elementType) for x in v]
-        return v
-    if isinstance(dt, T.MapType):
-        return [(_arrow_value(k, dt.keyType), _arrow_value(x, dt.valueType)) for k, x in v.items()]
-    if isinstance(dt, T.BinaryType):
-        return bytes(v)
-    return v
-
-
-def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
-    """Driver-held rows as a DataFrame that Spark plans as a local relation,
-    so a projection or filter over it and its collect run no Spark job.  It
-    goes through an Arrow table: ``createDataFrame`` of a Python list is an
-    RDD scan, one job per action."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(schema)
-    columns = [
-        pa.array([_arrow_value(r[i], f.dataType) for r in rows], type=arrow_schema.field(i).type)
-        for i, f in enumerate(schema.fields)
-    ]
-    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema), schema)
 
 
 class ChangeSet:

@@ -291,7 +291,8 @@ def emit_to_files(
     import tempfile
     import uuid
 
-    from .changeset import change_set, collectable, window_diff
+    from .changeset import change_set, window_diff
+    from .driver_rows import collectable
 
     pin_tag = kwargs.pop(
         "pin_tag",

@@ -482,6 +482,7 @@ class IcehouseTable:
         n_buckets: int,
         fanout: int | None = None,
         order_override: list | None = None,
+        single_task: bool = False,
     ) -> DataFrame:
         """Deterministic physical layout for a write: partition by bucket
         (× fanout sub-split when ``write.fanout`` > 1), rows sorted by key
@@ -489,6 +490,14 @@ class IcehouseTable:
         (append_deltas pins 1: a fanned-out O(batch) delta write would just
         multiply the small files compaction exists to fix, with no
         sort-memory benefit).
+
+        ``single_task`` (a small driver-held frame, see
+        :meth:`overwrite_partitions`) coalesces the rows into one task
+        sorted the same way instead of hash-shuffling them by bucket: the
+        writer still cuts one file per bucket (``write.max-file-rows``
+        applies per bucket), with the rows in the shuffled layout's order,
+        and the write is one Spark job instead of two.  A fanout > 1 keeps
+        the shuffle, so each bucket is still split f ways.
 
         ``write.sort-order`` (comma-separated columns) clusters rows WITHIN
         each bucket on secondary columns ahead of the key — the Iceberg
@@ -534,7 +543,8 @@ class IcehouseTable:
                     f"write.sort-order references columns not in the write: {unknown}"
                 )
         if fanout <= 1:
-            laid = out.repartition(n_buckets, qcol(PART_COL)).sortWithinPartitions(
+            spread = out.coalesce(1) if single_task else out.repartition(n_buckets, qcol(PART_COL))
+            laid = spread.sortWithinPartitions(
                 *[qcol(c) for c in (PART_COL, *order, self.key_col)]
             )
             return laid.drop(*tmp_cols) if tmp_cols else laid
@@ -1163,11 +1173,18 @@ class IcehouseTable:
         meta_updates: dict[str, Any] | None = None,
         conflict_scope: str = "partitions",
         sort_override: list | None = None,
+        single_task: bool = False,
     ) -> CommitResult:
         """Atomically replace the bucket partitions present in ``df``.
 
         ``sort_override``: clustering expressions replacing the
         ``write.sort-order`` property for THIS write (z-order compaction).
+
+        ``single_task``: ``df`` is a small local relation built on the
+        driver (:func:`~..cdc.apply.apply_changes_local`); it is laid out
+        in one sorted task with no shuffle (see :meth:`_layout`; a
+        ``write.fanout`` table keeps its shuffle), so the write is one
+        Spark job.
 
         ``meta_updates``: extra table-metadata fields committed atomically
         with the data (partition-spec evolution — see :meth:`rebucket`).
@@ -1205,8 +1222,9 @@ class IcehouseTable:
 
         # conform + deterministic physical layout (see _layout):
         #   one task per bucket × write.fanout (repartition by _part [+ key
-        #   sub-hash]), rows sorted by key within each file → output file
-        #   CONTENT is deterministic at any parallelism level.
+        #   sub-hash]), or one task in all for ``single_task``; rows sorted by
+        #   key within each file → output file CONTENT is deterministic at
+        #   any parallelism level.
         with_part = df if PART_COL in df.columns else df.withColumn(PART_COL, self.bucket_expr())
         # conform to the (possibly evolved) schema; CDC meta columns
         # (_lsn/_deleted) ride along when the caller provides them
@@ -1221,7 +1239,9 @@ class IcehouseTable:
             ),
         )
         layout_buckets = (meta_updates or {}).get("n_buckets", self.n_buckets)
-        laid_out = self._layout(out, layout_buckets, order_override=sort_override)
+        laid_out = self._layout(
+            out, layout_buckets, order_override=sort_override, single_task=single_task
+        )
         return self._commit_attempts(
             laid_out, epoch, lineage_extra, new_schema, schema_changed, max_retries,
             epoch_source=epoch_source, affected_partitions=affected_partitions,

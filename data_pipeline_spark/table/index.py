@@ -15,13 +15,14 @@ exactly-once merge:
   refresh of the same epoch it is already collected): a change set of at
   most ``SMALL_BATCH_ROWS`` keys is committed from the driver
   (``cdc.apply.apply_changes_local``: one collect of the affected index
-  buckets, the LWW rewrite, one write; 3 Spark jobs), a larger window — the
-  base's LSN feed or snapshot diff — or larger index buckets go through
-  the Spark ``apply_changes`` merge.  With no applied version (the initial
-  build) or an expired one, the refresh is one full pass instead: live
-  base rows become upserts, index keys absent from the base deletes.  The
-  last applied version lives in the index's own exactly-once registry,
-  written with its data; re-running a crashed refresh is a fenced no-op;
+  buckets, the LWW rewrite, one write from one task; 2 Spark jobs), a
+  larger window — the base's LSN feed or snapshot diff — or larger index
+  buckets go through the Spark ``apply_changes`` merge.  With no applied
+  version (the initial build) or an expired one, the refresh is one full
+  pass instead: live base rows become upserts, index keys absent from the
+  base deletes.  The last applied version lives in the index's own
+  exactly-once registry, written with its data; re-running a crashed
+  refresh is a fenced no-op;
 - **lookup** plans O(matching files) of the slim table (stats skipping on
   the value column), then fetches the full rows via bucket-pruned
   ``read_for_keys`` on the base — the wide token arrays are read only for
@@ -151,6 +152,7 @@ class SecondaryIndex:
         it every time: keep the base's retention longer than the interval."""
         from ..cdc.apply import apply_changes, apply_changes_local, local_part_stats
         from ..cdc.changeset import after_frame, applied_version, change_set, finish_window
+        from ..cdc.driver_rows import driver_frame
 
         self.index = self.index.refresh()
         base = IcehouseTable.load(self.base_root)
@@ -180,7 +182,8 @@ class SecondaryIndex:
                 epoch=base.version, epoch_source=ns,
             )
             if stats is None:  # index buckets too big for the driver
-                batch = spark.createDataFrame(
+                batch = driver_frame(
+                    spark,
                     rows,
                     T.StructType(
                         [

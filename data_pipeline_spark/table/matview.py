@@ -40,8 +40,10 @@ path.
 
 Scale shape: no global shuffle ever touches the whole base table.  A small
 window is one collected change set: its signed delta is summed on the driver
-and the MERGE of small view buckets runs on the driver, 6–7 Spark jobs in all
-on the per-epoch MOR poll.  A larger window is read as Spark frames of the
+and the MERGE of small view buckets runs on the driver and is written as a
+local relation in one job, 5 Spark jobs in all on the per-epoch MOR poll
+(more as the prior snapshot's pending deltas pile up: its point read
+resolves them).  A larger window is read as Spark frames of the
 same two sides — the LSN feed plus a point read of the prior snapshot when
 the manifests prove it exact, else the changed-bucket snapshot diff — then
 one groupBy of the two sides, one keyed MERGE into the view.  Measures
@@ -61,17 +63,16 @@ from pyspark.sql import types as T
 from .exprs import col as qcol
 from .exprs import quote, quote_all
 from .icehouse import DELETED_COL, CommitResult, IcehouseTable
-from ..cdc.apply import ApplyStats, apply_changes, apply_changes_local, holds_type
+from ..cdc.apply import ApplyStats, apply_changes, apply_changes_local
 from ..cdc.changeset import (
     ChangeSet,
     after_frame,
     applied_version,
     before_frame,
     change_set,
-    collectable,
     finish_window,
-    local_frame,
 )
+from ..cdc.driver_rows import collectable, driver_frame, holds_type, local_frame
 
 GROUP_KEY_COL = "group_key"
 _REFRESH_NS = "mv-refresh"
@@ -301,7 +302,8 @@ def _commit_local_delta(
     fresh read of the view after a conflict).  The merge is keyed by the
     ``group_key`` JSON string, so group columns of any type (arrays, maps)
     work.  View buckets too big for the driver take
-    :func:`_apply_view_delta` on a local frame of the delta.  Finishes the
+    :func:`_apply_view_delta` on a local frame of the delta
+    (:func:`~..cdc.driver_rows.driver_frame`).  Finishes the
     refresh (:func:`~..cdc.changeset.finish_window`)."""
     if not delta:
         # nothing to commit: the refresh floor advances instead
@@ -325,7 +327,7 @@ def _commit_local_delta(
     )
     if stats is None:
         return _apply_view_delta(
-            mv, spark.createDataFrame(delta, mv.schema), group_cols, base_version, measures,
+            mv, driver_frame(spark, delta, mv.schema), group_cols, base_version, measures,
         ).result
     finish_window(mv, _REFRESH_NS, _FLOOR, base_version)
     return stats.result
@@ -496,8 +498,8 @@ def refresh_matview(
     two sides — a projection over a local frame gives Spark's group key
     and fixed-point values without a job — and the view merge and its
     fenced commit are built driver-side (:func:`_commit_local_delta`).
-    On a MOR base with 8 view buckets that is 6–7 Spark jobs
-    (tests/test_small_batch_refresh.py pins the budget).  Larger windows
+    On a MOR base with 8 view buckets that is 5 Spark jobs, the commit's
+    write one of them (tests/test_small_batch_refresh.py pins the budget).  Larger windows
     take the Spark path: the signed delta of the window's two sides as
     Spark frames (:func:`~..cdc.changeset.after_frame`, ``before_frame``:
     the LSN feed and a point read of the prior snapshot when the window is

@@ -7,6 +7,8 @@ the Spark-job budget of each small refresh is pinned so added jobs show up
 as a test failure."""
 
 import datetime
+import glob
+import os
 import tempfile
 
 import pytest
@@ -17,10 +19,12 @@ from data_pipeline_spark.cdc import apply as apply_mod
 from data_pipeline_spark.cdc import changeset
 from data_pipeline_spark.cdc.apply import (
     apply_changes,
+    apply_changes_local,
     apply_changes_mor,
     batch_part_stats,
     local_part_stats,
 )
+from data_pipeline_spark.cdc.driver_rows import collectable
 from data_pipeline_spark.cdc.emit import emit_to_files
 from data_pipeline_spark.table import matview as mv_mod
 from data_pipeline_spark.table.icehouse import (
@@ -324,6 +328,171 @@ def test_index_driver_commit_matches_spark_merge(spark, tmp_path, monkeypatch):
     assert driver.applied_version() == merge.applied_version() == base.refresh().version
 
 
+INDEX_SHAPED = T.StructType(
+    [T.StructField("doc_id", T.StringType(), False), T.StructField("source", T.StringType(), True)]
+)
+# a batch over every bucket: updates, deletes, NULL values and 10 new keys
+LOCAL_BATCH = [
+    (1000 + i, "D" if i % 9 == 0 else "U", f"k{(i * 7) % 330:03d}",
+     None if i % 13 == 0 else f"s{i % 4}")
+    for i in range(120)
+]
+
+
+def _index_shaped(spark, root, **props):
+    """An index-shaped table (value-sorted, value stats, small files) of
+    300 live rows over 4 buckets."""
+    t = IcehouseTable.create(
+        root, INDEX_SHAPED, key_col="doc_id", n_buckets=4,
+        properties={"write.sort-order": "source", "write.stats-columns": "source",
+                    "write.max-file-rows": 40, **props},
+    )
+    apply_changes(
+        t,
+        spark.createDataFrame(
+            [(i, "U", f"k{i:03d}", None if i % 17 == 0 else f"s{i % 6}") for i in range(300)],
+            "lsn long, op string, doc_id string, source string",
+        ),
+        epoch=0,
+    )
+    return t.refresh()
+
+
+def _local_commit(spark, t, monkeypatch, name):
+    """Commit LOCAL_BATCH through ``apply_changes_local``; returns the
+    Spark jobs of its write (``overwrite_partitions``)."""
+    real = IcehouseTable.overwrite_partitions
+    jobs = []
+
+    def counted(self, df, **kw):
+        out = []
+        jobs.append(_jobs(spark, name, lambda: out.append(real(self, df, **kw))))
+        return out[0]
+
+    with monkeypatch.context() as m:
+        m.setattr(IcehouseTable, "overwrite_partitions", counted)
+        stats = apply_changes_local(
+            spark, t, [r[2] for r in LOCAL_BATCH], lambda _current: LOCAL_BATCH, epoch=1
+        )
+    assert stats is not None and len(jobs) == 1
+    return jobs[0]
+
+
+def _bucket_files(t):
+    """Per bucket of ``t``'s head: each data file's rows in file order, and
+    the manifest's per-file stats without the file names."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for b, entry in t.refresh().meta["partitions"].items():
+        paths = sorted(glob.glob(os.path.join(t.root, entry["path"], "*.parquet")))
+        files = sorted(entry.get("files", []), key=lambda f: f["name"])
+        out[b] = (
+            [pq.ParquetFile(path).read().to_pylist() for path in paths],
+            [{k: v for k, v in f.items() if k != "name"} for f in files],
+        )
+    return out
+
+
+def test_driver_commit_layout_matches_shuffled_layout(spark, tmp_path, monkeypatch):
+    """A driver-held commit is one write job laid out in one sorted task;
+    its files equal the shuffled layout's of the same rows: files per
+    bucket (``write.max-file-rows`` splits buckets), rows and their order
+    in each file, per-file manifest stats and lineage."""
+    one = _index_shaped(spark, str(tmp_path / "one"))
+    shuffled = _index_shaped(spark, str(tmp_path / "shuffled"))
+    assert _local_commit(spark, one, monkeypatch, "layout-one") == 1
+    monkeypatch.setattr(apply_mod, "SINGLE_TASK_ROWS", -1)
+    assert _local_commit(spark, shuffled, monkeypatch, "layout-shuffled") == 2
+    got, want = _bucket_files(one), _bucket_files(shuffled)
+    assert got == want
+    assert sorted(got) == ["0", "1", "2", "3"]
+    assert all(len(files) > 1 and stats for files, stats in got.values())
+    assert _lineage(spark, one) == _lineage(spark, shuffled)
+    assert _physical(spark, one) == _physical(spark, shuffled)
+
+
+def test_driver_commit_above_the_single_task_bound_is_shuffled(spark, tmp_path, monkeypatch):
+    """``apply_changes_local`` lays a rewrite of at most ``SINGLE_TASK_ROWS``
+    rows out in one task (one write job); one row more takes the shuffled
+    layout (two jobs)."""
+    rewrite = len({f"k{i:03d}" for i in range(300)} | {r[2] for r in LOCAL_BATCH})
+    for bound, jobs in ((rewrite, 1), (rewrite - 1, 2)):
+        t = _index_shaped(spark, str(tmp_path / f"t{bound}"))
+        monkeypatch.setattr(apply_mod, "SINGLE_TASK_ROWS", bound)
+        assert _local_commit(spark, t, monkeypatch, f"bound-{bound}") == jobs
+        assert sum(e["rows"] for e in t.refresh().meta["partitions"].values()) == rewrite
+
+
+def test_driver_commit_keeps_the_fanout_layout(spark, tmp_path, monkeypatch):
+    """A ``write.fanout=2`` table committed from the driver keeps the
+    shuffled fanout layout: the same files as the shuffled write of the
+    same rows, each bucket split in two — one file per write task its two
+    sub-splits hash to (Spark's hash partitioning of ``(_part, _sub)``)."""
+    props = {"write.fanout": 2, "write.max-file-rows": 1_000_000}
+    fan = _index_shaped(spark, str(tmp_path / "fan"), **props)
+    shuffled = _index_shaped(spark, str(tmp_path / "shuffled"), **props)
+    assert _local_commit(spark, fan, monkeypatch, "fanout") == 2
+    monkeypatch.setattr(apply_mod, "SINGLE_TASK_ROWS", -1)
+    _local_commit(spark, shuffled, monkeypatch, "fanout-shuffled")
+    got = _bucket_files(fan)
+    assert got == _bucket_files(shuffled)
+    tasks = {
+        str(r["_part"]): r["n"]
+        for r in fan.read(spark, with_part_col=True, with_meta=True)
+        .selectExpr(
+            "_part",
+            "pmod(hash(_part, CAST(pmod(xxhash64(doc_id, 'write.fanout'), 2) AS INT)), 8) AS task",
+        )
+        .groupBy("_part")
+        .agg(F.countDistinct("task").alias("n"))
+        .collect()
+    }
+    assert {b: len(files) for b, (files, _) in got.items()} == tasks
+    assert sum(tasks.values()) > len(tasks)
+
+
+def test_rows_that_cannot_round_trip_the_driver_take_the_spark_merge(spark, tmp_path):
+    """A table whose rows a local relation cannot carry — a local-time
+    timestamp, or a type with no Arrow form (variant, year-month interval) —
+    is refused by ``apply_changes_local`` before it reads anything, and its
+    caller's Spark merge lands the commit: an index on a timestamp column
+    still equals the base after a refresh."""
+    for dt in (T.VariantType(), T.YearMonthIntervalType()):
+        schema = T.StructType([*INDEX_SHAPED.fields, T.StructField("v", dt)])
+        assert not collectable(schema)
+        t = IcehouseTable.create(str(tmp_path / dt.typeName()), schema, key_col="doc_id")
+        assert apply_changes_local(spark, t, ["k1"], lambda _current: pytest.fail("read")) is None
+    base = IcehouseTable.create(
+        str(tmp_path / "base"),
+        T.StructType([*INDEX_SHAPED.fields, T.StructField("at", T.TimestampType())]),
+        key_col="doc_id", n_buckets=4,
+    )
+    ddl = "lsn long, op string, doc_id string, source string, at timestamp"
+    apply_changes(
+        base,
+        spark.createDataFrame(
+            [(i, "U", f"k{i}", "s", datetime.datetime(2024, 1, 1, i % 24)) for i in range(40)], ddl
+        ),
+        epoch=0,
+    )
+    idx = SecondaryIndex.create(spark, base.refresh(), str(tmp_path / "idx"), "at")
+    apply_changes_mor(
+        base.refresh(),
+        spark.createDataFrame(
+            [(100, "U", "k1", "s", datetime.datetime(2025, 3, 30, 2, 30)),
+             (101, "D", "k2", None, None), (102, "U", "k50", "s", None)],
+            ddl,
+        ),
+        epoch=1,
+    )
+    assert idx.refresh(spark)["applied"] == 3
+    got = sorted(tuple(r) for r in idx.index.refresh().read(spark).collect())
+    want = sorted(tuple(r) for r in base.refresh().read(spark).select("doc_id", "at").collect())
+    assert got == want
+    assert idx.applied_version() == base.refresh().version
+
+
 @pytest.mark.parametrize("key_type", ["string", "bigint", "int"])
 def test_local_part_stats_matches_batch_part_stats(spark, key_type):
     schema = T.StructType(
@@ -443,14 +612,17 @@ def mor_epoch(spark, tmp_path_factory):
 # set in memo, as measured (local[4], AQE on: every shuffle stage of a plan
 # runs as its own job).  Before the driver-side paths the matview and index
 # refreshes ran 24 and 14 jobs; before the shared change set they ran 8 and
-# 6, and emit ran 6 (a two-snapshot diff, a text write and a line count).
-MATVIEW_SMALL_REFRESH_JOBS = 6
-INDEX_SMALL_REFRESH_JOBS = 5
+# 6, and emit ran 6 (a two-snapshot diff, a text write and a line count);
+# before the driver-held commit wrote in one task (a shuffled write is two
+# jobs) they ran 6 and 5.
+MATVIEW_SMALL_REFRESH_JOBS = 5
+INDEX_SMALL_REFRESH_JOBS = 4
 EMIT_SMALL_JOBS = 3
 # matview, index and emit of one epoch in a row: the index and emit reuse
-# the matview's change set, so they run only their own commits (7 + 3 + 0
-# on a second appended epoch; 8 + 6 + 6 before the shared change set)
-CONSUMER_TRIO_JOBS = 10
+# the matview's change set, so they run only their own commits (6 + 2 + 0
+# on a second appended epoch; 7 + 3 + 0 with a shuffled commit write, 8 + 6
+# + 6 before the shared change set)
+CONSUMER_TRIO_JOBS = 8
 
 
 def test_small_matview_refresh_job_budget(spark, mor_epoch):
@@ -531,13 +703,14 @@ def test_consumer_trio_shares_one_change_set(spark, mor_epoch, monkeypatch):
 
 # Spark jobs of the matview, index and emit of one window the LSN feed
 # cannot serve, on the fixture of the test below, as measured (4 + 0 + 0
-# and 8 + 3 + 0): the window's changed-bucket snapshot diff is collected
-# once, by the first consumer (the matview), and the index and emit reuse
-# it.  Both windows scan more rows than the cap, so the diff is persisted
-# before its capped collect (one job more than a plain collect) to serve
-# every consumer if it comes back over the cap.  An empty window (the
-# compaction) commits no data anywhere.
-DIFF_TRIO_JOBS = {"compaction": 4, "cow_epoch": 11}
+# and 7 + 2 + 0; 8 + 3 + 0 with a shuffled commit write): the window's
+# changed-bucket snapshot diff is collected once, by the first consumer
+# (the matview), and the index and emit reuse it.  Both windows scan more
+# rows than the cap, so the diff is persisted before its capped collect
+# (one job more than a plain collect) to serve every consumer if it comes
+# back over the cap.  An empty window (the compaction) commits no data
+# anywhere.
+DIFF_TRIO_JOBS = {"compaction": 4, "cow_epoch": 9}
 
 
 @pytest.mark.parametrize("window", ["compaction", "cow_epoch"])
